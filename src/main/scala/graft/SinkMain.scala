@@ -156,11 +156,14 @@ object SinkMain {
   }
 
   /** One catch-up pass: flush the confirmed feed through the policy's
-    * units, then report the committed cursor as one JSON line.
+    * units, then report the committed cursor as one JSON line. The pass is
+    * the micro-batch after the newest committed one, so a second pass over
+    * a grown feed never reuses a committed unit's version id.
     */
   def run(spark: SparkSession, cfg: SinkConfig): Option[graft.cdc.Cursor] = {
     val w = wire(spark, cfg)
-    w.sink.processBatch(w.source, 0L)
+    val pass = math.floorDiv(w.store.maxBatchId(cfg.moduleHash), FlushPolicy.UnitStride) + 1
+    w.sink.processBatch(w.source, pass)
     w.store.read(cfg.moduleHash)
   }
 

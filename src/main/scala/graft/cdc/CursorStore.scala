@@ -1,7 +1,6 @@
 package graft.cdc
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 
 /** A stored stream cursor (reference `db/cursor.go` cursors table row). */
 final case class Cursor(
@@ -21,28 +20,37 @@ object MismatchMode {
   val Ignore = "ignore"
 }
 
-/** Parquet-backed cursor store with idempotent, batch-scoped commits.
+/** Cursor store with idempotent, batch-scoped commits.
   *
   * Re-expresses the reference's cursor table (`db/cursor.go:27-137`): one
   * logical row per output-module hash, atomically advanced with each flush.
-  * Storage is an append-only parquet log under `path`; the current cursor is
-  * the row with the highest (batchId, blockNum) per module — append + resolve
-  * -on-read is the lake-native equivalent of the reference's UPDATE-in-txn,
-  * and replaying a Structured Streaming batch (same batchId) is a no-op on
-  * resolve, giving exactly-once cursor semantics under retries.
+  * Each commit is one JSON file in a [[MetadataLog]] under `path`:
   *
-  * The log is metadata (one tiny row per flush); [[compact]] bounds its
-  * growth at production flush rates, and the admin surface
-  * ([[allCursors]]/[[delete]]/[[deleteAll]]) mirrors the reference's
+  * {{{
+  *   <path>/<escaped moduleHash>/<batchId>.json   {"moduleHash":…,"cursor":…,"blockNum":…,"blockId":…}
+  * }}}
+  *
+  * The file is written under a hidden temp name and renamed into place only
+  * if the target is absent — the rename is the commit point, the first
+  * commit of a batchId wins and a replayed commit is a no-op, giving
+  * exactly-once cursor semantics under Structured Streaming retries. The
+  * current cursor is the entry with the highest (batchId, blockNum); with
+  * one entry per batchId that is the highest batchId. Every read is one
+  * directory listing plus at most one small file read on the driver — the
+  * lake-native equivalent of the reference's UPDATE-in-txn, with no Spark
+  * job.
+  *
+  * [[compact]] bounds growth at production flush rates, and the admin
+  * surface ([[allCursors]]/[[delete]]/[[deleteAll]]) mirrors the reference's
   * `GetAllCursors`/`DeleteCursor`/`DeleteAllCursors`
   * (`db/cursor.go:26-46,129-143`).
   */
 final class CursorStore(path: String, spark: SparkSession) {
 
-  import spark.implicits._
+  private val log = new MetadataLog(path, spark.sparkContext.hadoopConfiguration)
 
-  private def log() =
-    try Some(spark.read.parquet(path)) catch { case _: Throwable => None }
+  private def newest(moduleHash: String, batchIds: Seq[Long]): Option[(Cursor, Long)] =
+    batchIds.maxOption.map(b => (log.get(moduleHash, b, classOf[Cursor]), b))
 
   /** Current cursor for the module hash, exact match only. */
   def read(moduleHash: String): Option[Cursor] = readWithBatch(moduleHash).map(_._1)
@@ -52,15 +60,7 @@ final class CursorStore(path: String, spark: SparkSession) {
     * legitimately moves the block number backwards.
     */
   def readWithBatch(moduleHash: String): Option[(Cursor, Long)] =
-    log().flatMap { df =>
-      df.filter(col("moduleHash") === moduleHash)
-        .orderBy(col("batchId").desc, col("blockNum").desc)
-        .limit(1)
-        .as[(String, String, Long, String, Long)]
-        .collect()
-        .headOption
-        .map { case (m, c, b, id, bid) => (Cursor(m, c, b, id), bid) }
-    }
+    newest(moduleHash, log.batches(moduleHash))
 
   /** Newest cursor committed STRICTLY BEFORE `batchId`. The crash-replay-
     * safe prior resolution for a multi-step flush: a replayed batch whose
@@ -68,48 +68,25 @@ final class CursorStore(path: String, spark: SparkSession) {
     * batch's state, never on its own half-written one.
     */
   def readBatchBefore(moduleHash: String, batchId: Long): Option[(Cursor, Long)] =
-    log().flatMap { df =>
-      df.filter(col("moduleHash") === moduleHash && col("batchId") < batchId)
-        .orderBy(col("batchId").desc, col("blockNum").desc)
-        .limit(1)
-        .as[(String, String, Long, String, Long)]
-        .collect()
-        .headOption
-        .map { case (m, c, b, id, bid) => (Cursor(m, c, b, id), bid) }
-    }
+    newest(moduleHash, log.batches(moduleHash).filter(_ < batchId))
 
   /** The cursor row a specific micro-batch committed (rollback resolution). */
   def cursorAt(moduleHash: String, batchId: Long): Option[Cursor] =
-    log().flatMap { df =>
-      df.filter(col("moduleHash") === moduleHash && col("batchId") === batchId)
-        .as[(String, String, Long, String, Long)]
-        .collect()
-        .headOption
-        .map { case (m, c, b, id, _) => Cursor(m, c, b, id) }
-    }
+    newest(moduleHash, log.batches(moduleHash).filter(_ == batchId)).map(_._1)
 
   /** Has this (moduleHash, batchId) already committed? The sink's replay
     * no-op check: a committed batch's snapshot + cursor are durable, so the
     * whole flush can be skipped.
     */
   def committed(moduleHash: String, batchId: Long): Boolean =
-    log().exists { df =>
-      !df.filter(col("moduleHash") === moduleHash && col("batchId") === batchId).isEmpty
-    }
+    log.batches(moduleHash).contains(batchId)
 
   /** Every batchId committed for the module (unordered). */
-  def allBatches(moduleHash: String): Seq[Long] =
-    log().map { df =>
-      df.filter(col("moduleHash") === moduleHash)
-        .select("batchId").as[Long].collect().toSeq
-    }.getOrElse(Seq.empty)
+  def allBatches(moduleHash: String): Seq[Long] = log.batches(moduleHash)
 
   /** Highest batchId committed for the module (−1 when none). */
   def maxBatchId(moduleHash: String): Long =
-    log().map { df =>
-      df.filter(col("moduleHash") === moduleHash)
-        .agg(max("batchId")).as[Option[Long]].collect().head.getOrElse(-1L)
-    }.getOrElse(-1L)
+    log.batches(moduleHash).maxOption.getOrElse(-1L)
 
   /** Reference `cursorAtHighestBlock` (db/cursor.go:48-104): on a
     * module-hash mismatch BOTH `warn` and `ignore` adopt the cursor at the
@@ -144,73 +121,32 @@ final class CursorStore(path: String, spark: SparkSession) {
       }
     }
 
-  /** Idempotent commit: appending the same (moduleHash, batchId) twice
-    * leaves the resolved cursor unchanged (replay-safe).
+  /** Idempotent commit: committing the same (moduleHash, batchId) twice
+    * leaves the first entry in place (replay-safe).
     */
   def commit(c: Cursor, batchId: Long): Unit =
-    if (!committed(c.moduleHash, batchId)) {
-      Seq((c.moduleHash, c.cursor, c.blockNum, c.blockId, batchId))
-        .toDF("moduleHash", "cursor", "blockNum", "blockId", "batchId")
-        .coalesce(1)
-        .write.mode(SaveMode.Append).parquet(path)
-    }
+    log.put(c.moduleHash, batchId, c, overwrite = false)
 
   // ---- admin surface (reference db/cursor.go:26-46,129-143) --------------
 
   /** The resolved (current) cursor of every module — `GetAllCursors`. */
   def allCursors(): Map[String, Cursor] =
-    log().map { df =>
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("moduleHash")
-        .orderBy(col("batchId").desc, col("blockNum").desc)
-      df.withColumn("_rn", row_number().over(w))
-        .filter(col("_rn") === 1)
-        .select("moduleHash", "cursor", "blockNum", "blockId")
-        .as[(String, String, Long, String)]
-        .collect()
-        .map { case (m, c, b, id) => m -> Cursor(m, c, b, id) }
-        .toMap
-    }.getOrElse(Map.empty)
+    log.keys().getOrElse(Nil).flatMap(read).map(c => c.moduleHash -> c).toMap
 
-  /** Drop every cursor row of one module — `DeleteCursor`. Returns the
-    * number of rows removed (the reference errors on not-found; callers can
-    * check == 0).
+  /** Drop every cursor entry of one module — `DeleteCursor`. Returns the
+    * number of entries removed (the reference errors on not-found; callers
+    * can check == 0).
     */
-  def delete(moduleHash: String): Long =
-    rewrite(keep = r => r._1 != moduleHash)
+  def delete(moduleHash: String): Long = log.delete(moduleHash)
 
   /** Drop the whole store — `DeleteAllCursors`. */
-  def deleteAll(): Long = rewrite(keep = _ => false)
+  def deleteAll(): Long = log.deleteAll()
 
-  /** Bound log growth: keep only each module's newest `keepLast` commits.
-    * The resolved cursor of every module is unchanged (resolution only ever
-    * looks at the highest batchIds); older rows exist for audit/rollback, so
-    * retention is the caller's policy.
+  /** Bound log growth: keep only each module's newest `keepLast` commits,
+    * deleting older entry files (a crash mid-way loses no kept entry). The
+    * resolved cursor of every module is unchanged (resolution only ever
+    * looks at the highest batchIds); older entries exist for audit/rollback,
+    * so retention is the caller's policy.
     */
-  def compact(keepLast: Int = 16): Long = {
-    val rows = collectRows()
-    val keep = rows.groupBy(_._1).valuesIterator
-      .flatMap(_.sortBy(-_._5).take(keepLast)).toSeq
-    writeRows(keep)
-    (rows.size - keep.size).toLong
-  }
-
-  // The cursor log is metadata — a handful of tiny rows per module (bounded
-  // by compact) — so admin rewrites stage through the driver; the data path
-  // (commit/read) never does.
-  private def collectRows(): Seq[(String, String, Long, String, Long)] =
-    log().map(_.as[(String, String, Long, String, Long)].collect().toSeq)
-      .getOrElse(Seq.empty)
-
-  private def writeRows(rows: Seq[(String, String, Long, String, Long)]): Unit =
-    rows.toDF("moduleHash", "cursor", "blockNum", "blockId", "batchId")
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(path)
-
-  private def rewrite(keep: ((String, String, Long, String, Long)) => Boolean): Long = {
-    val rows = collectRows()
-    val kept = rows.filter(keep)
-    writeRows(kept)
-    (rows.size - kept.size).toLong
-  }
+  def compact(keepLast: Int = 16): Long = log.compact(keepLast)
 }

@@ -25,10 +25,11 @@ import java.security.MessageDigest
   *      ([[ChangeLoader.applyBatch]]), write the next snapshot version
   *      (a NEW pk-bucketed table per batchId — never overwriting a version
   *      being read),
-  *   3. commit the cursor keyed by batchId ([[CursorStore.commit]] is a
-  *      no-op on replay).
+  *   3. record the flush's [[SinkStats]] entry (a replay overwrites it),
+  *   4. commit the cursor keyed by batchId: one JSON file renamed into
+  *      place ([[CursorStore.commit]] is a no-op on replay).
   *
-  * Steps 2+3 give the reference's "ops + cursor in one transaction"
+  * Steps 2+4 give the reference's "ops + cursor in one transaction"
   * exactly-once guarantee under micro-batch replay.
   *
   * Scale: snapshot versions are pk-bucketed+sorted tables
@@ -62,6 +63,11 @@ final case class FlushPolicy(
 object FlushPolicy {
   val HistoricalEach = 1000L
   val LiveEach = 1L
+
+  /** Max flush units per micro-batch: a unit's version id is
+    * `batchId * UnitStride + unit index`.
+    */
+  val UnitStride = 4096L
 }
 
 /** Size-triggered compaction for the merge-on-read write path: the base
@@ -190,60 +196,65 @@ final class ChangeStreamSink(
       }
     }
 
-  /** Max flush units per micro-batch when a [[FlushPolicy]] is set (the
-    * synthetic version-id stride).
-    */
-  private val UnitStride = 4096L
-
   /** [[FlushPolicy.unitOf]] as a column — the data-side twin of the driver
     * method, so unit derivation runs distributed and the driver only ever
-    * sees the ≤ [[UnitStride]] distinct unit ids.
+    * sees the ≤ [[FlushPolicy.UnitStride]] distinct unit ids.
     */
   private def unitCol(p: FlushPolicy): org.apache.spark.sql.Column =
     when(col("block") >= p.headBlock, col("block"))
       .otherwise(expr(s"block div ${p.modulo}"))
 
-  def processBatch(batch: DataFrame, batchId: Long): Unit = policy match {
-    case None => flushOne(batch, batchId)
-    case Some(p) =>
-      // The reference flushes whenever blockNum % modulo == 0
-      // (`sinker.go:119`); the lake equivalent partitions the micro-batch
-      // into contiguous block ranges (one per flush unit) and runs one
-      // versioned flush per unit, in block order. Unit ids are data-derived
-      // (deterministic), so a replayed micro-batch regenerates the same
-      // sub-flushes and each one's committed-check skips what already
-      // landed — mid-batch crash recovery resumes at the exact unit.
-      //
-      // Persist FIRST: the unit-derivation scan materializes the cache, and
-      // every sub-flush filters the cached frame — one micro-batch source
-      // scan total, however many units a historical backfill spans.
-      val withUnit = batch.withColumn("_unit", unitCol(p))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        // distinct over the UNIT expression, never raw blocks — a backfill
-        // batch has modulo× more blocks than units; driver traffic is
-        // O(units) ≤ UnitStride by the require below.
-        val units = withUnit.select(col("_unit")).distinct()
-          .collect().map(_.getLong(0)).sorted
-        require(units.length <= UnitStride,
-          s"micro-batch spans ${units.length} flush units (> $UnitStride); " +
-            "raise the trigger rate or the flush interval")
-        units.zipWithIndex.foreach { case (u, idx) =>
-          flushOne(withUnit.filter(col("_unit") === u).drop("_unit"),
-            batchId * UnitStride + idx)
-        }
-      } finally { withUnit.unpersist(blocking = false); () }
+  def processBatch(batch: DataFrame, batchId: Long): Unit = {
+    // without a policy the whole micro-batch is one flush versioned by its
+    // batchId: a committed replay returns before any Spark job
+    if (policy.isEmpty &&
+        new CursorStore(s"$baseDir/cursor", batch.sparkSession).committed(moduleHash, batchId))
+      return
+    // The reference flushes whenever blockNum % modulo == 0
+    // (`sinker.go:119`); the lake equivalent partitions the micro-batch
+    // into contiguous block ranges (one per flush unit) and runs one
+    // versioned flush per unit, in block order. Unit ids are data-derived
+    // (deterministic), so a replayed micro-batch regenerates the same
+    // sub-flushes and each one's committed-check skips what already
+    // landed — mid-batch crash recovery resumes at the exact unit.
+    //
+    // Persist FIRST: the one aggregate below materializes the cache, and
+    // every sub-flush filters the cached frame — one micro-batch source
+    // scan total, however many units a historical backfill spans.
+    val withUnit = batch.withColumn("_unit", policy.map(unitCol).getOrElse(lit(0L)))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      // one action per micro-batch: the units and each unit's head
+      // (max block, min block, ops, distinct pks). Grouped by the unit
+      // EXPRESSION, never raw blocks — driver traffic is O(units) ≤
+      // UnitStride by the require below; an empty batch has no units.
+      val heads = withUnit.groupBy("_unit")
+        .agg(max("block"), min("block"), count(lit(1)), countDistinct(col("pk")))
+        .collect().sortBy(_.getLong(0))
+      require(heads.length <= FlushPolicy.UnitStride,
+        s"micro-batch spans ${heads.length} flush units (> ${FlushPolicy.UnitStride}); " +
+          "raise the trigger rate or the flush interval")
+      heads.zipWithIndex.foreach { case (h, idx) =>
+        val bid = if (policy.isEmpty) batchId else batchId * FlushPolicy.UnitStride + idx
+        flushOne(withUnit.filter(col("_unit") === h.getLong(0)).drop("_unit"), bid,
+          FlushStat(moduleHash, bid, h.getLong(1), h.getLong(2), h.getLong(3), h.getLong(4), 0L, 0L))
+      }
+    } finally { withUnit.unpersist(blocking = false); () }
   }
 
-  private def flushOne(batch: DataFrame, bid: Long): Unit = {
+  /** One versioned flush of `batch`; `head` carries the unit's block range
+    * and counts (its timings are filled in here).
+    */
+  private def flushOne(batch: DataFrame, bid: Long, head: FlushStat): Unit = {
     val spark = batch.sparkSession
     val store = new CursorStore(s"$baseDir/cursor", spark)
-    if (store.committed(moduleHash, bid)) return // replay: durable already
-    if (batch.isEmpty) return
+    // one listing resolves the replay check, the current version and the
+    // pending deltas (newest first)
+    val committed = store.allBatches(moduleHash).sorted.reverse
+    if (committed.contains(bid)) return // replay: durable already
     val t0 = System.currentTimeMillis()
     val collapsed = ChangeLoader.collapse(batch, fieldCols)
-    val pendingBids = store.allBatches(moduleHash).sorted.reverse
-      .takeWhile(isDelta(spark, _))
+    val pendingBids = committed.takeWhile(isDelta(spark, _))
     val materialize = compaction match {
       case Some(cp) =>
         pendingBids.size >= cp.maxDeltas ||
@@ -252,8 +263,9 @@ final class ChangeStreamSink(
       case None => compactEvery <= 1 || pendingBids.size >= compactEvery - 1
     }
     val tFlush = System.currentTimeMillis()
-    lazy val prior = store.readWithBatch(moduleHash) match {
-      case Some((_, b)) => snapshotAt(spark, store, b)
+    val current = committed.headOption
+    lazy val prior = current match {
+      case Some(b) => snapshotAt(spark, store, b)
       case None =>
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           collapsed.drop("last_block", "deleted", "revived").schema)
@@ -272,8 +284,8 @@ final class ChangeStreamSink(
     // batchId — written BEFORE the cursor commit, same durability order as
     // the snapshot itself (a crash in between replays into the overwrite)
     mv.foreach { d =>
-      val priorAgg = store.readWithBatch(moduleHash) match {
-        case Some((_, b)) if spark.catalog.tableExists(mvTable(b)) =>
+      val priorAgg = current match {
+        case Some(b) if spark.catalog.tableExists(mvTable(b)) =>
           spark.table(mvTable(b))
         case _ => graft.cdc.MaterializedAgg.empty(collapsed, d)
       }
@@ -283,19 +295,16 @@ final class ChangeStreamSink(
       graft.cdc.MaterializedAgg.merge(priorAgg, priorTouched, newTouched, d)
         .write.mode("overwrite").saveAsTable(mvTable(bid))
     }
-    val head = batch
-      .agg(max("block"), count(lit(1)), countDistinct(col("pk")), min("block")).collect()(0)
-    val maxBlock = if (head.isNullAt(0)) -1L else head.getLong(0)
-    val minBlock = if (head.isNullAt(3)) -1L else head.getLong(3)
-    store.commit(Cursor(moduleHash, s"cursor:$maxBlock", maxBlock,
-      s"block:$maxBlock"), bid)
-    new SinkStats(s"$baseDir/stats", spark).record(FlushStat(
-      moduleHash, bid, maxBlock, minBlock, head.getLong(1), head.getLong(2),
-      flushMillis = System.currentTimeMillis() - tFlush,
+    // the stats entry lands before the cursor: a crash in between leaves an
+    // entry that the replay of this batchId overwrites, never a second one
+    val flushMillis = System.currentTimeMillis() - tFlush
+    new SinkStats(s"$baseDir/stats", spark).record(head.copy(flushMillis = flushMillis,
       wallMillis = math.max(1, System.currentTimeMillis() - t0)))
+    // the commit point: the snapshot above becomes visible to readers
+    store.commit(Cursor(moduleHash, s"cursor:${head.maxBlock}", head.maxBlock,
+      s"block:${head.maxBlock}"), bid)
     // live counters (the reference's process-wide metrics set)
-    LiveSinkStats.of(moduleHash).recordFlush(head.getLong(1), maxBlock,
-      (System.currentTimeMillis() - tFlush) * 1000000L)
+    LiveSinkStats.of(moduleHash).recordFlush(head.nOps, head.maxBlock, flushMillis * 1000000L)
   }
 
   /** Roll the sink back to an earlier committed batch (a chain-reorg /

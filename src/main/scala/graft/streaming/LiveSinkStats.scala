@@ -10,7 +10,7 @@ import java.util.concurrent.atomic.AtomicLong
   * (`/root/reference/sinker/stats.go:38-70` — a ticker that logs the
   * sliding-window average flush rate, flushed entries, and last block).
   *
-  * [[SinkStats]] is the durable per-flush parquet log (queryable after the
+  * [[SinkStats]] is the durable per-flush JSON log (queryable after the
   * fact); this class is the LIVE view — counters update synchronously from
   * the flush path and a daemon ticker emits [[LiveSinkStats.Progress]] rows
   * to a callback (log line by default, capturable by specs/monitoring).

@@ -96,14 +96,15 @@ final class MultiTableChangeSink(
         .agg(max("block"), count(lit(1)), countDistinct(col("table"), col("pk")),
           min("block")).collect()(0)
       val maxBlock = head.getLong(0)
-      // the transaction commit point: everything above is invisible to
-      // readers (latestSnapshots resolves through cursors) until this lands
-      store.commit(Cursor(moduleHash, s"cursor:$maxBlock", maxBlock,
-        s"block:$maxBlock"), batchId)
+      // stats first: a replay of an uncommitted batch overwrites its entry
       val wall = math.max(1, System.currentTimeMillis() - t0)
       new SinkStats(s"$baseDir/stats", spark).record(FlushStat(
         moduleHash, batchId, maxBlock, head.getLong(3), head.getLong(1), head.getLong(2),
         flushMillis = wall, wallMillis = wall))
+      // the transaction commit point: everything above is invisible to
+      // readers (latestSnapshots resolves through cursors) until this lands
+      store.commit(Cursor(moduleHash, s"cursor:$maxBlock", maxBlock,
+        s"block:$maxBlock"), batchId)
     } finally cached.unpersist()
   }
 

@@ -1,12 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import graft.cdc.MetadataLog
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Per-flush sink statistics — the reference's progress metrics
-  * (`/root/reference/sinker/stats.go`, `sinker/metrics.go`: blocks/sec,
-  * entries flushed, flush duration) as an append-only parquet metrics log,
-  * queryable with the same engine.
+  * (`sinker/stats.go`, `sinker/metrics.go`: blocks/sec, entries flushed,
+  * flush duration).
   */
 final case class FlushStat(
     moduleHash: String,
@@ -19,15 +19,26 @@ final case class FlushStat(
     wallMillis: Long
 )
 
+/** The durable stats log: one JSON entry per (moduleHash, batchId) in a
+  * [[graft.cdc.MetadataLog]] under `path`
+  * (`<path>/<escaped moduleHash>/<batchId>.json`), written from the driver
+  * by a temp-then-rename, and queryable with the same engine through
+  * `spark.read.json`. A flush writes its entry before its cursor commit; a
+  * replayed flush overwrites the entry of its batchId instead of adding a
+  * second one.
+  */
 final class SinkStats(path: String, spark: SparkSession) {
 
-  import spark.implicits._
+  private val entries = new MetadataLog(path, spark.sparkContext.hadoopConfiguration)
 
   def record(stat: FlushStat): Unit =
-    Seq(stat).toDF().coalesce(1).write.mode(SaveMode.Append).parquet(path)
+    entries.put(stat.moduleHash, stat.batchId, stat, overwrite = true)
 
-  def log(): Option[DataFrame] =
-    try Some(spark.read.parquet(path)) catch { case _: Throwable => None }
+  /** Every recorded flush; None only when nothing was ever recorded. */
+  def log(): Option[DataFrame] = entries.keys().map { _ =>
+    spark.read.schema(Encoders.product[FlushStat].schema)
+      .option("recursiveFileLookup", "true").option("mode", "FAILFAST").json(path)
+  }
 
   /** The reference's headline rates, computed over the recorded flushes:
     * blocks/sec and entries/sec per module (wall time), plus mean flush

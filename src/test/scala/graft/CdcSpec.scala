@@ -1,6 +1,6 @@
 package graft
 
-import graft.cdc.{Cursor, CursorStore, Dsn, SqlDialect, TypeNormalizer}
+import graft.cdc.{Cursor, CursorStore, Dsn, MetadataLog, SqlDialect, TypeNormalizer}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -106,5 +106,57 @@ class CdcSpec extends SparkSpecBase {
     assert(store.read("m2").isEmpty && store.read("m1").isDefined)
     assert(store.deleteAll() == 1)
     assert(store.allCursors().isEmpty)
+  }
+
+  // --- the per-commit cursor log --------------------------------------------
+
+  private def entryDir(dir: String, key: String) =
+    java.nio.file.Paths.get(dir, MetadataLog.escape(key))
+
+  test("cursor log: keys with '#' and '/' stay separate and round-trip") {
+    val dir = Files.createTempDirectory("cursor_keys").toString
+    val store = new CursorStore(dir, spark)
+    store.commit(Cursor("h#t/a", "c1", 1, "b1"), 0)
+    store.commit(Cursor("h#t", "c2", 2, "b2"), 0)
+    store.commit(Cursor("h", "c3", 3, "b3"), 5)
+    assert(store.read("h#t/a").get.blockNum == 1 && store.read("h#t").get.blockNum == 2)
+    assert(store.readWithBatch("h").contains((Cursor("h", "c3", 3, "b3"), 5L)))
+    assert(store.allCursors().keySet == Set("h#t/a", "h#t", "h"))
+    store.commit(Cursor("h", "replay", 9, "b9"), 5) // first commit wins
+    assert(store.read("h").get.cursor == "c3")
+  }
+
+  test("cursor log: a corrupt entry makes read throw instead of returning None") {
+    val dir = Files.createTempDirectory("cursor_corrupt").toString
+    val store = new CursorStore(dir, spark)
+    store.commit(Cursor("m", "c0", 10, "b10"), 0)
+    Files.write(entryDir(dir, "m").resolve("1.json"), "{\"moduleHash\": \"m\", \"cur".getBytes)
+    val e = intercept[IllegalStateException](store.read("m"))
+    assert(e.getMessage.contains("1.json"))
+  }
+
+  test("cursor log: a temp file left by an interrupted rename is ignored") {
+    val dir = Files.createTempDirectory("cursor_tmp").toString
+    val store = new CursorStore(dir, spark)
+    store.commit(Cursor("m", "c0", 10, "b10"), 0)
+    // a crash between writing the temp file and renaming it into place
+    Files.write(entryDir(dir, "m").resolve(s".1.json.${java.util.UUID.randomUUID()}.tmp"),
+      """{"moduleHash":"m","cursor":"lost","blockNum":99,"blockId":"b99"}""".getBytes)
+    assert(!store.committed("m", 1) && store.read("m").get.blockNum == 10)
+    store.commit(Cursor("m", "c1", 20, "b20"), 1)
+    assert(store.committed("m", 1) && store.read("m").get.blockNum == 20)
+    assert(store.allBatches("m").sorted == Seq(0L, 1L))
+  }
+
+  test("cursor log: a parquet cursor directory fails fast and names the path") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("cursor_parquet").toString
+    Seq(("m", "c", 1L, "b", 0L)).toDF("moduleHash", "cursor", "blockNum", "blockId", "batchId")
+      .write.mode("overwrite").parquet(dir)
+    val store = new CursorStore(dir, spark)
+    val e = intercept[IllegalStateException](store.read("m"))
+    assert(e.getMessage.contains(dir) && e.getMessage.contains("part-"))
+    intercept[IllegalStateException](store.committed("m", 0))
+    intercept[IllegalStateException](store.allCursors())
   }
 }

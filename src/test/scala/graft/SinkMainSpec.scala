@@ -81,4 +81,28 @@ class SinkMainSpec extends SparkSpecBase {
       other.copy(mismatchMode = MismatchMode.Warn)).source.isEmpty,
       "warn must adopt the foreign cursor as the starting point")
   }
+
+  test("run: a second pass over a grown feed flushes every new block") {
+    import org.apache.spark.sql.functions.col
+    val feed = Files.createTempDirectory("sinkmain_feed").toString
+    val events = graft.sources.Tables(spark, sfDir, "events")
+    events.filter(col("event_id") <= 500).write.parquet(s"$feed/events.parquet")
+    val dir = Files.createTempDirectory("sinkmain_twice").toString
+    val cfg = SinkConfig(dir, feed, "hash_twice", "mod", flushInterval = 200L,
+      undoBufferSize = 0)
+    SinkMain.run(spark, cfg)
+    events.filter(col("event_id") > 500).write.mode("append").parquet(s"$feed/events.parquet")
+    val cur = SinkMain.run(spark, cfg)
+    val all = graft.sources.Changes(spark, feed)
+    assert(cur.map(_.blockNum).contains(
+      all.agg(org.apache.spark.sql.functions.max("block")).collect()(0).getLong(0)))
+    val fields = Seq("amount", "kval", "note")
+    val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      all.select("pk", fields: _*).schema)
+    val exp = graft.cdc.ChangeLoader.applyBatch(empty,
+      graft.cdc.ChangeLoader.collapse(all, fields), fields).collect().map(_.toSeq).toSet
+    val got = SinkMain.wire(spark, cfg).sink.latestSnapshot(spark).get
+      .collect().map(_.toSeq).toSet
+    assert(got == exp)
+  }
 }

@@ -84,6 +84,46 @@ class StreamingSpec extends SparkSpecBase {
     assert(snap.isDefined && snap.get.count() > 0)
   }
 
+  test("crash after each flush step: replay lands the batch exactly once") {
+    val fields = Seq("amount", "kval", "note")
+    val ch = Changes(spark, sfDir)
+    val (b0, b1) = (ch.filter(col("block") <= 500), ch.filter(col("block") > 500))
+    val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      ch.select(col("pk"), col("amount"), col("kval"), col("note")).schema)
+    def state(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    val exp = state(ChangeLoader.applyBatch(empty, ChangeLoader.collapse(ch, fields), fields))
+    val head = ch.agg(max("block")).collect()(0).getLong(0)
+    // what a flush of batch 1 has left on disk when it dies, in protocol
+    // order: snapshot version, stats entry, cursor temp file (never renamed)
+    val steps = Seq("snapshot written, no cursor", "stats entry written, cursor not renamed",
+      "cursor temp file written, not renamed")
+    steps.zipWithIndex.foreach { case (step, n) =>
+      val dir = Files.createTempDirectory("sink_crash").toString
+      val sink = new ChangeStreamSink(dir, "mod_k", fields)
+      sink.processBatch(b0, 0)
+      val at0 = state(sink.latestSnapshot(spark).get)
+      graft.cdc.BucketedSnapshot.write(sink.latestSnapshot(spark).get.limit(1), // wrong on purpose
+        sink.snapTable(1), buckets = 8)
+      if (n >= 1) new graft.streaming.SinkStats(s"$dir/stats", spark).record(
+        graft.streaming.FlushStat("mod_k", 1, 999999, 0, 1, 1, 1, 1))
+      if (n >= 2) Files.write(java.nio.file.Paths.get(s"$dir/cursor",
+          graft.cdc.MetadataLog.escape("mod_k"), s".1.json.${java.util.UUID.randomUUID()}.tmp"),
+        """{"moduleHash":"mod_k","cursor":"lost","blockNum":999999,"blockId":"lost"}""".getBytes)
+      val store = new CursorStore(s"$dir/cursor", spark)
+      assert(!store.committed("mod_k", 1), step)
+      assert(state(sink.latestSnapshot(spark).get) == at0, s"$step: reader view moved")
+      sink.processBatch(b1, 1) // the replay
+      assert(state(sink.latestSnapshot(spark).get) == exp, step)
+      val cur = store.readWithBatch("mod_k").get
+      assert(cur._2 == 1 && cur._1.blockNum == head, s"$step: $cur")
+      val stats = new graft.streaming.SinkStats(s"$dir/stats", spark).log().get
+        .orderBy("batchId").collect()
+      assert(stats.map(_.getAs[Long]("batchId")).toSeq == Seq(0L, 1L), step)
+      assert(stats(1).getAs[Long]("nOps") == b1.count() &&
+        stats(1).getAs[Long]("maxBlock") == head, step)
+    }
+  }
+
   test("sink records per-flush stats and computes reference-style rates") {
     val dir = Files.createTempDirectory("sink_stats").toString
     val sink = new ChangeStreamSink(dir, "mod_s", Seq("amount", "kval", "note"))
