@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query against
   * `SPARK_GRAFT_SF_DIR`, prints ONE JSON line (guaranteed to be the final
   * stdout line) and mirrors it to `SPARK_GRAFT_BENCH_OUT` when set.
@@ -83,12 +81,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.envCores).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // Warm the FS cache / codegen / shuffle infra once so per-query numbers
     // measure the query, not first-job session setup. Goes through

@@ -30,10 +30,10 @@ import org.apache.spark.sql.types.{FloatType, IntegerType, LongType, TimestampNT
   * df grows ∝ corpus size, so candidates grow ~n² no matter what (the r11
   * verdict's one open scale question). On an open vocabulary a doc's
   * rarest shingles stay rare as the corpus grows, which is the regime real
-  * web-scale corpora live in; DedupScaleProbe on an `open` corpus measures
-  * that directly. Everything else (dup/near-dup family seeding, doc count,
-  * lengths, langs, all other tables) is identical, so the same oracle SQL
-  * verifies both corpora.
+  * web-scale corpora live in; SURVEY §7 r12 records the shingle and
+  * candidate counts measured on `open` corpora. Everything else
+  * (dup/near-dup family seeding, doc count, lengths, langs, all other
+  * tables) is identical, so the same oracle SQL verifies both corpora.
   */
 object GenTestData {
 

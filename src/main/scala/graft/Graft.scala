@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions.col
   */
 final class Graft(val spark: SparkSession, val dir: String) {
 
-  graft.functions.GraftFunctions.register(spark)
+  GraftSession.prepare(spark)
 
   // ---- storage & schema -------------------------------------------------
   def table(name: String): DataFrame = Tables(spark, dir, name)

@@ -1,13 +1,18 @@
 package graft
 
+import graft.functions.GraftFunctions
+import graft.plans.{AsofJoinStrategy, PushFilterThroughAsofJoin, RangeJoinRewrite}
 import org.apache.spark.sql.SparkSession
 
-/** Session factory with the confs every graft job needs.
+/** The one way to build and prepare a graft session.
   *
   * Designed for a real cluster (AQE on, skew-join handling, sane shuffle
   * partitioning); in this repo it is exercised through `local[N]`.
   */
 object GraftSession {
+
+  /** Task threads for the mains: `SPARK_GRAFT_CPUS`, else 4. */
+  def envCores: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.trim.toInt)
 
   def builder(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession.Builder =
     SparkSession
@@ -27,13 +32,19 @@ object GraftSession {
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val s = builder(cores).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    s
+    prepare(s)
   }
 
-  /** Runtime-settable confs applied when a query runs against a session we
-    * did not build (the driver's Verify/Bench sessions).
+  /** Make any live session graft-ready; idempotent, so it is safe on every
+    * query call (every `SparkEntry.allDefs` def runs it first).
+    *
+    *   - the runtime confs graft's plans assume;
+    *   - graft's native functions ([[GraftFunctions.all]]);
+    *   - the ASOF planner strategy and its filter pushdown, and the
+    *     BETWEEN-join rewrite ([[RangeJoinRewrite]], inert until
+    *     `spark.graft.rangeJoin.width` is set).
     */
-  def tune(spark: SparkSession): SparkSession = {
+  def prepare(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     // InferWindowGroupLimit's default threshold (1000) silently refuses the
@@ -42,6 +53,14 @@ object GraftSession {
     // mechanical sweep catch). An 8192-row heap per group is a few MB:
     // strictly better than a full per-group sort at any scale.
     spark.conf.set("spark.sql.optimizer.windowGroupLimitThreshold", "16384")
+    GraftFunctions.register(spark)
+    val exp = spark.experimental
+    if (!exp.extraStrategies.contains(AsofJoinStrategy))
+      exp.extraStrategies = exp.extraStrategies :+ AsofJoinStrategy
+    Seq(PushFilterThroughAsofJoin, RangeJoinRewrite).foreach { rule =>
+      if (!exp.extraOptimizations.contains(rule))
+        exp.extraOptimizations = exp.extraOptimizations :+ rule
+    }
     spark
   }
 }

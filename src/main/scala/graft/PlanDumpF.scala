@@ -2,16 +2,13 @@ package graft
 
 /** `.explain("formatted")` dumper for the optimization-round plan records
   * (`plans/rNN/<query>_{before,after}.txt`): arg0 = SF dir, arg1 = output
-  * dir, arg2.. = query names ("all" = every declared query). Mirrors the
-  * bench session shape (local[N] from SPARK_GRAFT_CPUS, shuffle partitions
-  * = cores) so the dumped plans are the plans the bench actually runs.
+  * dir, arg2.. = query names ("all" = every declared query). Builds the
+  * bench's session (`GraftSession.builder` at `SPARK_GRAFT_CPUS`), so the
+  * dumped plans are the plans the bench actually runs.
   */
 object PlanDumpF {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]").config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder(GraftSession.envCores).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val outDir = java.nio.file.Paths.get(args(1))
     java.nio.file.Files.createDirectories(outDir)

@@ -172,13 +172,7 @@ object SinkMain {
       System.err.println(msg)
       sys.exit(2)
     case Right(cfg) =>
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+      val spark = GraftSession.builder(GraftSession.envCores).getOrCreate()
       spark.sparkContext.setLogLevel("WARN")
       val cur = run(spark, cfg)
       println(cur match {

@@ -1,6 +1,6 @@
 package graft.ann
 
-import graft.{GraftSession, OpDef}
+import graft.OpDef
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -87,7 +87,6 @@ object Ann extends Serializable {
   def cosine(a: Seq[Float], b: Seq[Float]): Double = dot(a, b) / (norm(a) * norm(b))
 
   private[ann] def embDs(s: SparkSession, dir: String) = {
-    GraftSession.tune(s)
     import s.implicits._
     Tables(s, dir, "embeddings").as[EmbRow]
   }
@@ -423,8 +422,6 @@ object Ann extends Serializable {
         |    END AS VARCHAR)), ',') AS q
         |FROM t ORDER BY vec_id""".stripMargin
     ) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
-      GraftSession.tune(s)
       Tables(s, dir, "embeddings")
         .withColumn("mx", call_function("vec_absmax", col("embedding")))
         .select(col("vec_id"), col("label"),
@@ -468,7 +465,6 @@ object Ann extends Serializable {
         |  round(CAST(qmax AS DOUBLE) / 1000000, 6) AS vmax
         |FROM m ORDER BY dim""".stripMargin
     ) { (s, dir) =>
-      GraftSession.tune(s)
       val big = org.apache.spark.sql.types.DecimalType(38, 0)
       val x = Tables(s, dir, "embeddings")
         .select(posexplode(col("embedding")).as(Seq("p", "e")))
@@ -530,8 +526,6 @@ object Ann extends Serializable {
         |  CAST(MAX(q) AS BIGINT) AS max_normsq_micro
         |FROM v GROUP BY 1 ORDER BY 1""".stripMargin
     ) { (s, dir) =>
-      GraftSession.tune(s)
-      graft.functions.GraftFunctions.register(s)
       val v = Tables(s, dir, "embeddings")
         .select(col("vec_id"), col("label"),
           floor(call_function("norm_sq", col("embedding")) * 1000000)
@@ -656,7 +650,6 @@ object Ann extends Serializable {
         |    AS centroid_norm
         |FROM f ORDER BY label""".stripMargin
     ) { (s, dir) =>
-      GraftSession.tune(s)
       val big = org.apache.spark.sql.types.DecimalType(38, 0)
       val x = Tables(s, dir, "embeddings")
         .select(col("label"), posexplode(col("embedding")).as(Seq("p", "e")))
@@ -802,7 +795,6 @@ object Ann extends Serializable {
   private[ann] def rerank(s: SparkSession, dir: String, cand: DataFrame,
       probeArr: Array[(Long, Array[Float])], k: Int): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val probeVecs = probeArr.toSeq.map { case (pid, pv) => (pid, pv.toSeq) }
       .toDF("probe_id", "probe_emb")
     val scored = cand

@@ -64,7 +64,6 @@ object Pq extends Serializable {
     */
   private def assignCodes(s: SparkSession, emb: DataFrame,
       cbs: Array[Array[Array[Double]]]): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     subRows(emb)
       .join(broadcast(codebookDf(s, cbs)), Seq("m"))
       .select(col("vec_id"), col("m"), col("code"),
@@ -164,7 +163,6 @@ object Pq extends Serializable {
   def query(s: SparkSession, dir: String, index: PqIndex, k: Int = K,
       rerankDepth: Int = -1): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val depth =
       if (rerankDepth > 0) rerankDepth
       else adaptiveDepth(s, s"${index.indexDir}/codes")
@@ -301,7 +299,6 @@ object Pq extends Serializable {
   def ivfPqQuery(s: SparkSession, dir: String, index: IvfPqIndex, k: Int = K,
       nprobe: Int = Ann.NProbe, rerankDepth: Int = -1): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val depth =
       if (rerankDepth > 0) rerankDepth
       else adaptiveDepth(s, s"${index.indexDir}/rows")

@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.{CacheRegistry, GraftSession, OpDef}
+import graft.{CacheRegistry, OpDef}
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -26,16 +26,6 @@ import org.apache.spark.sql.types._
   * every operator has a DuckDB oracle.
   */
 object Dedup {
-
-  private def docs(s: SparkSession, dir: String): DataFrame = {
-    GraftSession.tune(s)
-    Tables(s, dir, "documents")
-  }
-
-  private def embs(s: SparkSession, dir: String): DataFrame = {
-    GraftSession.tune(s)
-    Tables(s, dir, "embeddings")
-  }
 
   /** DuckDB spelling of the distinct word-3-gram shingle set of `text`. */
   private val shinglesSql: String =
@@ -376,7 +366,6 @@ object Dedup {
     * §1.2 remove redundant passes).
     */
   private def perDocMinhash(s: SparkSession, e: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     e.groupBy("doc_id").agg(
       count(lit(1)).as("n"),
       call_function("minhash16", col("h")).as("mh"),
@@ -409,7 +398,6 @@ object Dedup {
     * reuse that pass instead of re-aggregating `e`.
     */
   private def withIntersectSets(cand: DataFrame, sets: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(cand.sparkSession)
     cand
       .join(sets.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")),
         Seq("doc_a"))
@@ -475,7 +463,7 @@ object Dedup {
         |WHERE h.doc_id <> k.keep_id
         |ORDER BY doc_id""".stripMargin
     ) { (s, dir) =>
-      val h = docs(s, dir).select(col("doc_id"), md5(col("text")).as("th"))
+      val h = Tables(s, dir, "documents").select(col("doc_id"), md5(col("text")).as("th"))
       val keep = h.groupBy("th").agg(min("doc_id").as("keep_id"))
       h.join(keep, "th")
         .filter(col("doc_id") =!= col("keep_id"))
@@ -504,7 +492,7 @@ object Dedup {
       // natural order for strings, but SortArray is codegen'd while the
       // higher-order ArraySort is interpreted — this runs per ROW on the
       // scan, the one place a fallback expression actually costs.
-      val h = docs(s, dir).select(col("doc_id"),
+      val h = Tables(s, dir, "documents").select(col("doc_id"),
         md5(concat_ws(" ",
           sort_array(array_distinct(split(lower(col("text")), " "))))).as("th"))
       val keep = h.groupBy("th").agg(min("doc_id").as("keep_id"))
@@ -559,7 +547,7 @@ object Dedup {
       // exchange, no Sort+Window over the word rows. The (doc_id, seg)
       // collapse then partial-aggregates MAP-SIDE before its exchange:
       // the first shuffle moves 8× fewer rows and no word strings.
-      val pos = docs(s, dir)
+      val pos = Tables(s, dir, "documents")
         .select(col("doc_id"),
           posexplode(array_remove(split(col("text"), " "), ""))
             .as(Seq("p", "word")))
@@ -618,7 +606,7 @@ object Dedup {
          |  round(CAST(n_int AS DOUBLE) / n_uni, 4) AS jaccard
          |FROM p WHERE CAST(n_int AS DOUBLE) / n_uni >= 0.5
          |ORDER BY doc_a, doc_b""".stripMargin
-    ) { (s, dir) => ngramJaccardPairs(docs(s, dir), tau = 0.5) },
+    ) { (s, dir) => ngramJaccardPairs(Tables(s, dir, "documents"), tau = 0.5) },
 
     // ---- #147 directional shingle containment (boilerplate inclusion) ----
     // C = |A∩B| / min(|A|,|B|) ≥ 0.7 over the same blocks as #30 but
@@ -672,7 +660,7 @@ object Dedup {
       // (2 sorts + 3 window evals over corpus×shingles rows, twice);
       // cached post-window, the stack runs exactly once. A/B'd at both
       // scales before keeping (numbers in OPTIMIZATION_r18.md).
-      val d = trackCache(windowedPostings(shingleRowsOf(docs(s, dir)))
+      val d = trackCache(windowedPostings(shingleRowsOf(Tables(s, dir, "documents")))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
       // sizeRatioTau = 0 disables the Jaccard size-ratio prefilter
       // (necessary for Jaccard, WRONG for containment); the prefix length
@@ -725,7 +713,7 @@ object Dedup {
          |SELECT doc_a, doc_b, round(CAST(n_int AS DOUBLE) / n_uni, 4) AS jaccard
          |FROM ver WHERE CAST(n_int AS DOUBLE) / n_uni >= 0.35
          |ORDER BY doc_a, doc_b""".stripMargin
-    ) { (s, dir) => minhashLshPairs(docs(s, dir), tau = 0.35) },
+    ) { (s, dir) => minhashLshPairs(Tables(s, dir, "documents"), tau = 0.35) },
 
     // ---- #301 MinHash estimator calibration --------------------------------
     // How good is the 16-perm signature as a Jaccard ESTIMATE on the pairs
@@ -740,7 +728,7 @@ object Dedup {
     // same band-bucket join as #31 (never all-pairs); signatures hash-join
     // back on doc_id (corpus-sized ⇒ not broadcast); the 16-term match
     // count is a codegen comparison chain on two 16-long arrays. The
-    // join-backs were measured, not assumed (r13 ProbeMinhashStages): this
+    // join-backs were measured, not assumed (SURVEY §7 r13 log): this
     // query ≡ dedup_minhash_lsh ±2% focused — carrying mh THROUGH the band
     // join instead regressed 3.9→7.2 s (wide array rows through the
     // bucket-cap window + pair dedup), so two narrow joins stay. Oracle
@@ -792,7 +780,6 @@ object Dedup {
          |  round(AVG(abs(est - tru)), 4) AS mean_abs_err
          |FROM sc GROUP BY bucket ORDER BY bucket""".stripMargin
     ) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       // r17: ONE per-doc collapse (n, mh, sh) feeds bands, the exact verify
       // AND the signature read-back — the previous shape aggregated the
       // shingle rows three times (cand's sig, withIntersect's sets, the
@@ -801,7 +788,7 @@ object Dedup {
       // probe's lesson stands: mh still does NOT travel through the band
       // join — bands stay narrow (doc_id, n, b, bkey).
       val pd = trackCache(
-        perDocMinhash(s, shingleRowsOf(docs(s, dir)).select("doc_id", "h"))
+        perDocMinhash(s, shingleRowsOf(Tables(s, dir, "documents")).select("doc_id", "h"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
       val cand = minhashCandidatesFromSig(pd.select("doc_id", "n", "mh"))
       val pairs = cand
@@ -866,10 +853,9 @@ object Dedup {
          |  s2.sig_md5 AS sig_md5_reagg
          |FROM s2 JOIN n USING (lang) ORDER BY lang""".stripMargin
     ) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       // r17: no persist — distinct()-rooted subtree, ReuseExchange shares
       // it across the one-pass and cell aggregations (see ngramJaccardPairs)
-      val e = shingleRowsOf(docs(s, dir))
+      val e = shingleRowsOf(Tables(s, dir, "documents"))
       val onepass = e.groupBy("lang")
         .agg(call_function("minhash16", col("h")).as("sig"),
           countDistinct("h").cast(LongType).as("n_shingles"))
@@ -906,8 +892,7 @@ object Dedup {
     ) { (s, dir) =>
       // Native one-pass expression (graft.functions.SimHash64): the HOF
       // formulation (60 × filter/size over the token array) runs interpreted.
-      graft.functions.GraftFunctions.register(s)
-      docs(s, dir)
+      Tables(s, dir, "documents")
         .select(col("doc_id"),
           call_function("simhash64", array_distinct(split(col("text"), " ")))
             .as("simhash"))
@@ -971,7 +956,7 @@ object Dedup {
       // follows chunk-pair count instead of the ~10-key label domain, no
       // pair-grained join rows — 1010 s → see SURVEY §7 r13 (sf10). Same
       // IEEE chain as the old cosine_sim-per-pair join → hash-green.
-      val v = embs(s, dir)
+      val v = Tables(s, dir, "embeddings")
         .select(col("label"), col("vec_id"), col("embedding").as("e"))
       blockCosinePairs(v, tau = 0.35)
         .select(col("vec_a"), col("vec_b"), round(col("cos"), 4).as("cosine"))
@@ -1026,8 +1011,7 @@ object Dedup {
         |FROM lb LEFT JOIN dl ON lb.label = dl.label
         |ORDER BY lb.label""".stripMargin
     ) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
-      val v = embs(s, dir)
+      val v = Tables(s, dir, "embeddings")
         .select(col("vec_id"), col("label"), col("embedding").as("e"))
       // pair generation = the shared chunked block kernel (r13) — the #33
       // shape, parallel in chunk-pairs and free of pair-grained join rows
@@ -1192,8 +1176,7 @@ object Dedup {
         |FROM lb LEFT JOIN dl ON lb.label = dl.label
         |ORDER BY lb.label""".stripMargin
     ) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
-      val v = embs(s, dir)
+      val v = Tables(s, dir, "embeddings")
         .select(col("vec_id"), col("label"), col("embedding").as("e"))
       // force the auto-switch: 40 < the smallest label at every test SF.
       // semdedupPairs reads the conf (and trains cells) EAGERLY at build
@@ -1345,7 +1328,7 @@ object Dedup {
          |FROM corp JOIN bench USING (h)
          |GROUP BY 1 ORDER BY 1""".stripMargin
     ) { (s, dir) =>
-      contaminationBySplit(docs(s, dir), col("doc_id") % 10 === 0)
+      contaminationBySplit(Tables(s, dir, "documents"), col("doc_id") % 10 === 0)
         .orderBy("doc_id")
     },
 
@@ -1382,7 +1365,6 @@ object Dedup {
         |    AS contaminated
         |FROM p GROUP BY 1, 2 ORDER BY 1""".stripMargin
     ) { (s, dir) =>
-      GraftSession.tune(s)
       graft.ann.Ann.maxCosVsBench(s, dir, 100L, 0.35)
         .select(col("vec_id"), col("label"),
           round(col("mc"), 4).as("max_cos"), col("n_close"),
@@ -1416,7 +1398,7 @@ object Dedup {
          |        / COUNT(*), 4) AS dup_fraction
          |FROM d GROUP BY doc_id ORDER BY doc_id""".stripMargin
     ) { (s, dir) =>
-      substringDupStats(docs(s, dir), 8).orderBy("doc_id")
+      substringDupStats(Tables(s, dir, "documents"), 8).orderBy("doc_id")
     },
 
     // ---- #74 end-to-end curation filter (the pipeline, composed) ---------
@@ -1501,7 +1483,7 @@ object Dedup {
       val nonCanon = defs("dedup_clusters").fn(s, dir)
         .filter(!col("is_canonical")).select("doc_id")
       val contaminated = defs("contamination").fn(s, dir).select("doc_id")
-      keptSet(docs(s, dir), quality, exDup, nonCanon, contaminated, 0.25)
+      keptSet(Tables(s, dir, "documents"), quality, exDup, nonCanon, contaminated, 0.25)
         .orderBy("doc_id")
     },
 
@@ -1555,7 +1537,7 @@ object Dedup {
         |  CAST(n_chars AS BIGINT) AS rep_n_chars
         |FROM rk WHERE rn = 1 ORDER BY cluster_id""".stripMargin
     ) { (s, dir) =>
-      clusterRepView(clusterAssignments(s, dir), docs(s, dir))
+      clusterRepView(clusterAssignments(s, dir), Tables(s, dir, "documents"))
         .orderBy("cluster_id")
     }
   )
@@ -1748,7 +1730,6 @@ object Dedup {
     */
   private[graft] def minhashCandidates(s: SparkSession, e: DataFrame,
       bucketCap: Int = LshBucketCap): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val sig = e.groupBy("doc_id").agg(
       count(lit(1)).as("n"),
       call_function("minhash16", col("h")).as("mh"))
@@ -2005,7 +1986,7 @@ object Dedup {
   def simhashPairs(s: SparkSession, dir: String, maxHamming: Int = 2,
       numBands: Int = 3, bandBits: Int = 20,
       bucketCap: Int = 0): DataFrame =
-    simhashPairsOf(docs(s, dir), maxHamming, numBands, bandBits, bucketCap)
+    simhashPairsOf(Tables(s, dir, "documents"), maxHamming, numBands, bandBits, bucketCap)
 
   /** [[simhashPairs]] over an explicit documents frame (`doc_id`, `text`).
     * `bucketCap` is the hot-bucket guard: a band bucket holding more than
@@ -2021,7 +2002,6 @@ object Dedup {
     require(maxHamming <= numBands - 1,
       s"$numBands bands only guarantee recall at radius ${numBands - 1}")
     val cap = if (bucketCap > 0) bucketCap else lshBucketCap(docsDf.sparkSession)
-    graft.functions.GraftFunctions.register(docsDf.sparkSession)
     val sig = docsDf.select(col("doc_id"),
       call_function("simhash64", array_distinct(split(col("text"), " "))).as("sig"))
     val bandStructs = (0 until numBands).map { b =>

@@ -1,17 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Registration for graft's native Catalyst expressions.
   *
-  * Two entry points:
-  *   - [[GraftFunctions.register]]: imperative, idempotent, works on any
-  *     live session (what the query bank uses).
-  *   - [[GraftExtensions]]: a `SparkSessionExtensions` injector for
-  *     cluster-wide deployment via
-  *     `spark.sql.extensions=graft.functions.GraftExtensions`.
+  * [[GraftFunctions.register]] is imperative and idempotent and works on any
+  * live session; [[graft.GraftSession.prepare]] runs it, so a session
+  * prepared there (every `SparkEntry` query, `Graft`, `GraftSession.local`)
+  * can call these functions by name.
   */
 object GraftFunctions {
 
@@ -106,12 +104,6 @@ object GraftFunctions {
     }
   }
 
-  /** Column-API form: register on the frame's session, call by name. */
-  def cosineSim(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("cosine_sim", a, b)
-  }
-
   /** KMV distinct estimate from a `kmv_sketch`/`kmv_merge` read-out:
     * exact |S| while the sketch never saturated, (k−1)·H/θ beyond
     * (θ = the k-th retained hash; try_element_at keeps the saturated
@@ -125,21 +117,5 @@ object GraftFunctions {
     when(size(sk) < k, size(sk).cast(LongType))
       .otherwise(round(lit((k - 1).toDouble) * lit(KmvAgg.HashSpace)
         / try_element_at(sk, lit(k)).cast(DoubleType)).cast(LongType))
-  }
-}
-
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftFunctions.all.foreach { case (name, builder) =>
-      ext.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo(classOf[CosineSimilarity].getName, name),
-        builder))
-    }
-    // the custom ASOF JOIN operator's planner strategy + pushdown rule
-    ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
-    ext.injectOptimizerRule(_ => graft.plans.PushFilterThroughAsofJoin)
-    // BETWEEN-join → bucketed equi-join (armed by spark.graft.rangeJoin.width)
-    ext.injectOptimizerRule(_ => graft.plans.RangeJoinRewrite)
   }
 }

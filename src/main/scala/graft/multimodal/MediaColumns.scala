@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import graft.{GraftSession, OpDef}
+import graft.OpDef
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -218,7 +218,6 @@ object MediaColumns {
     */
   private def fannedDocs(s: SparkSession, dir: String): Dataset[(Long, String)] = {
     import s.implicits._
-    GraftSession.tune(s)
     val base = Tables(s, dir, "documents").select(col("doc_id"), col("text"))
     val p = s.sparkContext.defaultParallelism
     val fanned =
@@ -403,7 +402,6 @@ object MediaColumns {
          |ORDER BY 1, 2""".stripMargin
     ) { (s, dir) =>
       import s.implicits._
-      GraftSession.tune(s)
       val cap = graft.dedup.Dedup.lshBucketCap(s)
       val sig = fannedDocs(s, dir)
         .mapPartitions(_.map { case (id, t) =>

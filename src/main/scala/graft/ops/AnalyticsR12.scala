@@ -1,11 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.{GraftSession, OpDef}
+import graft.OpDef
 import graft.sources.Tables
 
 /** SURVEY §2 #286-#289 and #293-#299 — r12 additions: risk-adjusted rolling
@@ -21,11 +21,6 @@ import graft.sources.Tables
   * boundary only.
   */
 object AnalyticsR12 {
-
-  private def tbl(s: SparkSession, dir: String, n: String): DataFrame = {
-    GraftSession.tune(s)
-    Tables(s, dir, n)
-  }
 
   /** Integer epoch-day of the event timestamp (exact on both engines). */
   private val epochDay =
@@ -87,7 +82,7 @@ object AnalyticsR12 {
          |FROM v WHERE var > 0
          |ORDER BY event_type, day""".stripMargin
     ) { (s, dir) =>
-      val daily = tbl(s, dir, "events")
+      val daily = Tables(s, dir, "events")
         .groupBy(col("event_type").as("t"), epochDay.as("d"))
         .agg(sum(col("value").cast(DecimalType(18, 2))).as("v"))
         .withColumn("v2", col("v") * col("v"))
@@ -149,7 +144,7 @@ object AnalyticsR12 {
         |    AS w_stat
         |FROM m""".stripMargin
     ) { (s, dir) =>
-      val g = tbl(s, dir, "events")
+      val g = Tables(s, dir, "events")
         .groupBy(col("event_type").as("t"),
           col("value").cast(DecimalType(18, 2)).as("v"))
         .agg(count(lit(1)).as("c"))
@@ -161,7 +156,7 @@ object AnalyticsR12 {
         .withColumn("n", sum("c").over(wAll))
         .filter(lit(2) * col("cum") >= col("n"))
         .groupBy("t").agg(min("v").as("med"))
-      val z = tbl(s, dir, "events")
+      val z = Tables(s, dir, "events")
         .join(broadcast(med), col("event_type") === col("t"))
         .select(col("t"),
           abs(col("value").cast(DecimalType(18, 2)) - col("med")).as("z"))
@@ -218,7 +213,7 @@ object AnalyticsR12 {
          |       END AS mase
          |FROM ag ORDER BY event_type""".stripMargin
     ) { (s, dir) =>
-      val daily = tbl(s, dir, "events")
+      val daily = Tables(s, dir, "events")
         .groupBy(col("event_type").as("t"), epochDay.as("d"))
         .agg(sum(col("value").cast(DecimalType(18, 2))).as("v"))
       val w = Window.partitionBy("t").orderBy("d")
@@ -287,7 +282,7 @@ object AnalyticsR12 {
          |  round((n_runs - mu) / sqrt(var), 4) AS z
          |FROM st WHERE var > 0 ORDER BY event_type""".stripMargin
     ) { (s, dir) =>
-      val daily = tbl(s, dir, "events")
+      val daily = Tables(s, dir, "events")
         .groupBy(col("event_type").as("t"), epochDay.as("d"))
         .agg(sum(col("value").cast(DecimalType(18, 2))).as("v"))
       val w = Window.partitionBy("t").orderBy("d")
@@ -349,7 +344,7 @@ object AnalyticsR12 {
          |  MIN(slope) AS sen_slope
          |FROM cw WHERE 2 * cum >= n GROUP BY t ORDER BY event_type""".stripMargin
     ) { (s, dir) =>
-      val daily = tbl(s, dir, "events")
+      val daily = Tables(s, dir, "events")
         .groupBy(col("event_type").as("t"), epochDay.as("d"))
         .agg(sum(col("value").cast(DecimalType(18, 2))).as("v"))
       val a = daily.select(col("t"), col("d").as("da"), col("v").as("va"))
@@ -412,7 +407,7 @@ object AnalyticsR12 {
          |             ELSE 0.0 END, 4) AS z
          |FROM st WHERE var > 0 ORDER BY event_type""".stripMargin
     ) { (s, dir) =>
-      val daily = tbl(s, dir, "events")
+      val daily = Tables(s, dir, "events")
         .groupBy(col("event_type").as("t"), epochDay.as("d"))
         .agg(sum(col("value").cast(DecimalType(18, 2))).as("v"))
       val a = daily.select(col("t"), col("d").as("da"), col("v").as("va"))
@@ -478,7 +473,7 @@ object AnalyticsR12 {
         |JOIN vs vb ON vb.source = i.src_b
         |ORDER BY src_a, src_b""".stripMargin
     ) { (s, dir) =>
-      val vt = tbl(s, dir, "documents")
+      val vt = Tables(s, dir, "documents")
         .select(col("source"), explode(split(col("text"), " ")).as("tok"))
         .filter(col("tok") =!= "")
         .distinct()
@@ -539,7 +534,7 @@ object AnalyticsR12 {
          |FROM v WHERE dx > 0 AND dy > 0
          |ORDER BY type_a, type_b, lag""".stripMargin
     ) { (s, dir) =>
-      val daily = tbl(s, dir, "events")
+      val daily = Tables(s, dir, "events")
         .groupBy(col("event_type").as("t"), epochDay.as("d"))
         .agg(sum(col("value").cast(DecimalType(18, 2))).as("v"))
       val a = daily
@@ -612,7 +607,7 @@ object AnalyticsR12 {
          |  round(n / 6.0 * (g1 * g1 + g2 * g2 / 4), 4) AS jb
          |FROM g ORDER BY event_type""".stripMargin
     ) { (s, dir) =>
-      val daily = tbl(s, dir, "events")
+      val daily = Tables(s, dir, "events")
         .groupBy(col("event_type").as("t"), epochDay.as("d"))
         .agg(sum(col("value").cast(DecimalType(18, 2))).as("v"))
       val w = Window.partitionBy("t").orderBy("d")
@@ -710,7 +705,7 @@ object AnalyticsR12 {
          |FROM pv WHERE n_scales = 5
          |ORDER BY event_type""".stripMargin
     ) { (s, dir) =>
-      val daily = tbl(s, dir, "events")
+      val daily = Tables(s, dir, "events")
         .groupBy(col("event_type").as("t"),
           floor(col("ts").cast(LongType) / 3600).cast(LongType).as("d"))
         .agg(sum(col("value").cast(DecimalType(18, 2))).as("v"))
@@ -781,7 +776,7 @@ object AnalyticsR12 {
          |FROM win WHERE n_win >= 7 AND sg + sl > 0
          |ORDER BY event_type, day""".stripMargin
     ) { (s, dir) =>
-      val daily = tbl(s, dir, "events")
+      val daily = Tables(s, dir, "events")
         .groupBy(col("event_type").as("t"), epochDay.as("d"))
         .agg(sum(col("value").cast(DecimalType(18, 2))).as("v"))
       val w = Window.partitionBy("t").orderBy("d")
@@ -843,7 +838,7 @@ object AnalyticsR12 {
          |  round(CAST(SUM(up) + SUM(dn) AS DOUBLE) / COUNT(*), 6) AS breach_rate
          |FROM fl GROUP BY t ORDER BY event_type""".stripMargin
     ) { (s, dir) =>
-      val daily = tbl(s, dir, "events")
+      val daily = Tables(s, dir, "events")
         .groupBy(col("event_type").as("t"), epochDay.as("d"))
         .agg(sum(col("value").cast(DecimalType(18, 2))).as("v"))
         .withColumn("v2", col("v") * col("v"))
@@ -934,7 +929,7 @@ object AnalyticsR12 {
          |WHERE n_seg = 2 AND n_min >= 3 AND ssr_12 > 0
          |ORDER BY event_type""".stripMargin
     ) { (s, dir) =>
-      val daily = tbl(s, dir, "events")
+      val daily = Tables(s, dir, "events")
         .groupBy(col("event_type").as("t"), epochDay.as("d"))
         .agg(sum(col("value").cast(DecimalType(18, 2))).as("v"))
       val wRn = Window.partitionBy("t").orderBy("d")
@@ -1059,7 +1054,6 @@ object AnalyticsR12 {
          |ORDER BY p.event_type""".stripMargin
     ) { (s, dir) =>
       import graft.ops.parity.md5Long
-      graft.functions.GraftFunctions.register(s)
       // ONE pass at fact grain: the typed aggregate draws all 64 weights
       // per row in a tight loop and folds (Σw, Σw·cents) per replicate —
       // no ×64 row expansion (the exploded form was the sf10 sweep's
@@ -1067,7 +1061,7 @@ object AnalyticsR12 {
       // The point estimate folds in the SAME scan.
       val cents = (col("value").cast(DecimalType(18, 2)) * 100)
         .cast(LongType)
-      val cells = tbl(s, dir, "events")
+      val cells = Tables(s, dir, "events")
         .select(col("event_type"),
           (md5Long(col("event_id").cast(StringType)) % 4294967296L).as("h"),
           cents.as("vc"), col("value"))

@@ -1,11 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.{CapacityPins, GraftSession, OpDef}
+import graft.{CapacityPins, OpDef}
 import graft.sources.Tables
 
 /** SURVEY §2 #306-#308 — r14 additions: mergeable distinct-set algebra
@@ -19,11 +19,6 @@ import graft.sources.Tables
   * with an error-window spec covering the sub-capacity regime.
   */
 object AnalyticsR14 {
-
-  private def tbl(s: SparkSession, dir: String, n: String): DataFrame = {
-    GraftSession.tune(s)
-    Tables(s, dir, n)
-  }
 
   /** Integer epoch-day of the event timestamp (exact on both engines). */
   private val epochDay =
@@ -98,7 +93,6 @@ object AnalyticsR14 {
         |  round(CAST(n_int AS DOUBLE) / (n_a + n_b - n_int), 6) AS jaccard
         |FROM pairs ORDER BY type_a, type_b""".stripMargin
     ) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val k = CapacityPins.KmvCap
       val h = parity.md5Long(col("user_id").cast(StringType))
       // persist KEPT after the r17 two-scale audit: dropping it was flat
@@ -109,7 +103,7 @@ object AnalyticsR14 {
       // is the 100 TB shape (CacheRegistry discipline; production callers
       // release via Graft.releaseCaches()).
       val sk = graft.CacheRegistry.track(
-        tbl(s, dir, "events")
+        Tables(s, dir, "events")
           .select(col("event_type"), h.as("h"))
           .groupBy("event_type")
           .agg(call_function("kmv_sketch", col("h"), lit(k)).as("sk"))
@@ -146,10 +140,9 @@ object AnalyticsR14 {
         |    AS BIGINT) AS n_uniq
         |FROM events GROUP BY 1 ORDER BY 1""".stripMargin
     ) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val k = CapacityPins.KmvCap
       val h = parity.md5Long(col("user_id").cast(StringType))
-      val cells = tbl(s, dir, "events")
+      val cells = Tables(s, dir, "events")
         .groupBy(col("event_type"), to_date(col("ts")).as("day"))
         .agg(call_function("kmv_sketch", h.as("h"), lit(k)).as("sk"))
       cells.groupBy("event_type")
@@ -183,7 +176,7 @@ object AnalyticsR14 {
         |  CAST(SUM(user_id) AS BIGINT) AS user_id_sum
         |FROM u WHERE nd = 7 GROUP BY 1 ORDER BY 1""".stripMargin
     ) { (s, dir) =>
-      val u = tbl(s, dir, "events")
+      val u = Tables(s, dir, "events")
         .select(col("event_type").as("t"), col("user_id"),
           pmod(epochDay, lit(7L)).as("dw"))
         .groupBy("t", "user_id")
@@ -229,7 +222,7 @@ object AnalyticsR14 {
         |  CAST(user_id AS BIGINT) AS user_id, decayed_w
         |FROM r WHERE rk <= 5 ORDER BY t, rk""".stripMargin
     ) { (s, dir) =>
-      val ev = tbl(s, dir, "events")
+      val ev = Tables(s, dir, "events")
         .select(col("event_type").as("t"), col("user_id"), epochDay.as("d"))
       val ld = ev.groupBy("t").agg(max("d").as("last_d"))
       val gap = col("last_d") - col("d")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.{GraftSession, OpDef}
+import graft.OpDef
 import graft.sources.Tables
 
 /** SURVEY §2 #312-#315 — r15 additions: exact bitmap set algebra (the CH
@@ -18,11 +18,6 @@ import graft.sources.Tables
   * IEEE chain is spelled identically on both engines (#314 — no clamp).
   */
 object AnalyticsR15 {
-
-  private def tbl(s: SparkSession, dir: String, n: String): DataFrame = {
-    GraftSession.tune(s)
-    Tables(s, dir, n)
-  }
 
   /** The #315 partition-local Gram moment kernel over an (… embedding
     * float[] …) frame: each task folds its vectors into ONE local
@@ -105,13 +100,12 @@ object AnalyticsR15 {
         |  n_a + n_b - n_and AS n_or, n_a + n_b - 2 * n_and AS n_xor
         |FROM pairs ORDER BY type_a, type_b""".stripMargin
     ) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       // persist KEPT after the r17 two-scale audit (the uniq_theta_ops
       // result: dropping it was flat at sf0.1 but 1.5× slower at sf10 —
       // the broadcast side re-aggregated the fact table); one fact pass
       // is the 100 TB shape.
       val sk = graft.CacheRegistry.track(
-        tbl(s, dir, "events")
+        Tables(s, dir, "events")
           .groupBy("event_type")
           .agg(call_function("bitmap_agg", col("user_id")).as("bm"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
@@ -141,8 +135,7 @@ object AnalyticsR15 {
       """SELECT event_type, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_uniq
         |FROM events GROUP BY 1 ORDER BY 1""".stripMargin
     ) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
-      val cells = tbl(s, dir, "events")
+      val cells = Tables(s, dir, "events")
         .groupBy(col("event_type"), to_date(col("ts")).as("day"))
         .agg(call_function("bitmap_agg", col("user_id")).as("bm"))
       cells.groupBy("event_type")
@@ -176,8 +169,7 @@ object AnalyticsR15 {
         |  (SELECT CAST(COUNT(*) AS BIGINT) FROM c) AS n_all
         |FROM a""".stripMargin
     ) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
-      tbl(s, dir, "events")
+      Tables(s, dir, "events")
         .groupBy("event_type")
         .agg(call_function("bitmap_agg", col("user_id")).as("bm"))
         .agg(count(lit(1)).cast(LongType).as("n_types"),
@@ -231,7 +223,7 @@ object AnalyticsR15 {
         |  CAST(COUNT(*) AS BIGINT) AS n_users
         |FROM lv GROUP BY 1 ORDER BY 1""".stripMargin
     ) { (s, dir) =>
-      val m = tbl(s, dir, "events")
+      val m = Tables(s, dir, "events")
         .filter(col("event_type").isin("signup", "click", "purchase"))
         .select(col("user_id"), col("ts"),
           when(col("event_type") === "signup", "s")
@@ -289,7 +281,7 @@ object AnalyticsR15 {
         |FROM v""".stripMargin
     ) { (s, dir) =>
       val d = col("value").cast(DecimalType(18, 2))
-      val m = tbl(s, dir, "events").agg(
+      val m = Tables(s, dir, "events").agg(
         count(when(col("event_type") === "click", 1)).as("nx"),
         count(when(col("event_type") === "view", 1)).as("ny"),
         sum(when(col("event_type") === "click", d)).cast(DoubleType).as("sx"),
@@ -344,7 +336,7 @@ object AnalyticsR15 {
       // through a 64×-fan-out join row per vector-dim (41M rows at sf0.1,
       // 2.2 s; this kernel: 0.4 s) — same exact folds, hash-identical.
       val big = DecimalType(38, 0)
-      val cells = gramMomentCells(s, tbl(s, dir, "embeddings"))
+      val cells = gramMomentCells(s, Tables(s, dir, "embeddings"))
       // the in-task `require` only sees one task's vectors — a corpus whose
       // raggedness splits ACROSS tasks would pass it and silently skew the
       // per-cell n (ADVICE r15). Each task therefore stamps its dim on the

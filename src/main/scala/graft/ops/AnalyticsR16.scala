@@ -1,11 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.{GraftSession, OpDef}
+import graft.OpDef
 import graft.sources.Tables
 
 /** SURVEY §2 #320/#322-#326 — r16 additions: the whitening consumer
@@ -23,11 +22,6 @@ import graft.sources.Tables
   * pins the whole offline model + distributed application end-to-end.
   */
 object AnalyticsR16 {
-
-  private def tbl(s: SparkSession, dir: String, n: String): DataFrame = {
-    GraftSession.tune(s)
-    Tables(s, dir, n)
-  }
 
   val defs: Map[String, OpDef] = Map(
     // ---- #320 embed_whiten: ZCA whitening applied + verified -------------
@@ -63,7 +57,7 @@ object AnalyticsR16 {
       val m = graft.ann.Whitening.modelOf(s, dir)
       val bcW = s.sparkContext.broadcast(m.w)
       val bcMu = s.sparkContext.broadcast(m.mu)
-      val wcells = tbl(s, dir, "embeddings")
+      val wcells = Tables(s, dir, "embeddings")
         .select(col("embedding")).as[Array[Float]]
         .mapPartitions { it =>
           val w = bcW.value
@@ -154,7 +148,7 @@ object AnalyticsR16 {
         |FROM days d LEFT JOIN agged a USING (user_id)
         |ORDER BY d.user_id""".stripMargin
     ) { (s, dir) =>
-      val per = tbl(s, dir, "events")
+      val per = Tables(s, dir, "events")
         .select(col("user_id"), to_date(col("ts")).as("day"), col("event_type"))
         .distinct()
       val days = per.groupBy("user_id")
@@ -193,7 +187,7 @@ object AnalyticsR16 {
         |  string_agg(CAST(v AS VARCHAR), ',' ORDER BY event_type) AS map_sums
         |FROM per GROUP BY user_id ORDER BY user_id""".stripMargin
     ) { (s, dir) =>
-      val per = tbl(s, dir, "events")
+      val per = Tables(s, dir, "events")
         .filter(col("event_type").isin("click", "purchase", "view"))
         .groupBy("user_id", "event_type")
         .agg(sum(col("value").cast(DecimalType(18, 2))).as("v"))
@@ -236,7 +230,7 @@ object AnalyticsR16 {
       val dec = col("value").cast(DecimalType(18, 2))
       val wDay = Window.partitionBy("user_id", "day").orderBy("ts", "event_id")
       val okey = struct(col("ts"), col("event_id"))
-      val cells = tbl(s, dir, "events")
+      val cells = Tables(s, dir, "events")
         .withColumn("day", to_date(col("ts")))
         .withColumn("dv", dec - lag(dec, 1).over(wDay))
         .groupBy("user_id", "day")
@@ -272,8 +266,7 @@ object AnalyticsR16 {
         |  CAST(COUNT(*) FILTER (WHERE v >= 100 AND v < 200) AS BIGINT) AS n_high
         |FROM u GROUP BY 1 ORDER BY 1""".stripMargin
     ) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
-      tbl(s, dir, "events")
+      Tables(s, dir, "events")
         .groupBy("event_type")
         .agg(call_function("bitmap_agg", col("user_id")).as("bm"))
         .select(col("event_type"),

@@ -1,8 +1,8 @@
 package graft.ops
 
-import graft.{CapacityPins, GraftSession, OpDef}
+import graft.{CapacityPins, OpDef}
 import graft.sources.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -21,11 +21,6 @@ import org.apache.spark.sql.types._
   * training-data pipeline family.
   */
 object AnalyticsR7 {
-
-  private def tbl(s: SparkSession, dir: String, n: String): DataFrame = {
-    GraftSession.tune(s)
-    Tables(s, dir, n)
-  }
 
   private val kProp = get_json_object(col("props"), "$.k").cast(LongType)
   private val centsL =
@@ -57,7 +52,7 @@ object AnalyticsR7 {
     ) { (s, dir) =>
       val wk = floor(datediff(col("ts").cast(DateType),
         to_date(lit("1970-01-01"))) / 7).cast(LongType)
-      tbl(s, dir, "events")
+      Tables(s, dir, "events")
         .select(col("user_id"), wk.as("wk"))
         .groupBy("user_id").agg(collect_set("wk").as("wks"))
         .select(array_min(col("wks")).as("cohort"), explode(col("wks")).as("wk"))
@@ -108,7 +103,7 @@ object AnalyticsR7 {
         |FROM m ORDER BY 1""".stripMargin
     ) { (s, dir) =>
       val w = (dayofweek(col("ts").cast(DateType)) - 1).cast(LongType)
-      val f = tbl(s, dir, "events")
+      val f = Tables(s, dir, "events")
         .select(col("event_type").as("t"), centsL.as("y"), kProp.as("k"),
           w.as("w"))
       def sq(a: String, b: String) =
@@ -176,7 +171,7 @@ object AnalyticsR7 {
         |    (CASE WHEN rc < cc THEN rc ELSE cc END - 1)), 4) AS v_corr
         |FROM y""".stripMargin
     ) { (s, dir) =>
-      val cdf = tbl(s, dir, "events")
+      val cdf = Tables(s, dir, "events")
         .groupBy(col("event_type").as("t"),
           parity.floorDiv(kProp, 10).as("b"))
         .agg(count(lit(1)).as("n"))
@@ -228,7 +223,7 @@ object AnalyticsR7 {
         |    AS iv_term
         |FROM m ORDER BY 1""".stripMargin
     ) { (s, dir) =>
-      val c = tbl(s, dir, "events")
+      val c = Tables(s, dir, "events")
         .groupBy(col("event_type").as("t"))
         .agg(count(when(kProp >= 50, 1)).as("g"),
           count(when(kProp < 50, 1)).as("b"))
@@ -280,7 +275,7 @@ object AnalyticsR7 {
         .when(col("c") < 32768, floor(col("c") / 16) * 16)
         .when(col("c") < 65536, floor(col("c") / 256) * 256)
         .otherwise(lit(65535L))
-      val g = tbl(s, dir, "events")
+      val g = Tables(s, dir, "events")
         .select(col("event_type").as("t"), centsL.as("c"))
         .groupBy(col("t"), bk.cast(LongType).as("bk"))
         .agg(count(lit(1)).as("cnt"))
@@ -320,8 +315,7 @@ object AnalyticsR7 {
         |FROM r WHERE rn <= 10
         |GROUP BY event_type ORDER BY event_type""".stripMargin
     ) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
-      tbl(s, dir, "events")
+      Tables(s, dir, "events")
         .groupBy("event_type")
         .agg(concat_ws(",", call_function("topk_approx",
           when(kProp >= 50, col("user_id").cast(StringType)),
@@ -364,7 +358,7 @@ object AnalyticsR7 {
     ) { (s, dir) =>
       val ts = split(col("text"), " ")
       val n1 = greatest(size(ts) - 1, lit(0))
-      val pairs = tbl(s, dir, "documents")
+      val pairs = Tables(s, dir, "documents")
         .select(explode(arrays_zip(
           slice(ts, lit(1), n1).as("a"), slice(ts, lit(2), n1).as("b"))).as("p"))
         .select(col("p").getField("a").as("a"), col("p").getField("b").as("b"))
@@ -409,7 +403,7 @@ object AnalyticsR7 {
         |WHERE w.doc_id < 100
         |GROUP BY w.doc_id ORDER BY w.doc_id""".stripMargin
     ) { (s, dir) =>
-      val docsT = tbl(s, dir, "documents")
+      val docsT = Tables(s, dir, "documents")
       val w = docsT.select(col("doc_id"),
         explode(split(col("text"), " ")).as("tok"))
       val c = w.groupBy("tok").agg(count(lit(1)).as("cnt"))
@@ -462,7 +456,7 @@ object AnalyticsR7 {
     ) { (s, dir) =>
       val ts = split(col("text"), " ")
       val n1 = greatest(size(ts) - 1, lit(0))
-      val pp = tbl(s, dir, "documents")
+      val pp = Tables(s, dir, "documents")
         .select(col("doc_id"), explode(arrays_zip(
           slice(ts, lit(1), n1).as("a"), slice(ts, lit(2), n1).as("b"))).as("p"))
         .select(col("doc_id"), col("p").getField("a").as("a"),
@@ -519,7 +513,7 @@ object AnalyticsR7 {
         .when(col("c") < 65536, floor(col("c") / 256) * 256)
         .otherwise(lit(65535L))
       // state cells: what a rollup table persists per (type, day) flush
-      val st = tbl(s, dir, "events")
+      val st = Tables(s, dir, "events")
         .select(col("event_type").as("t"),
           date_format(col("ts").cast(DateType), "yyyy-MM-dd").as("day"),
           centsL.as("c"))
@@ -571,7 +565,7 @@ object AnalyticsR7 {
         |    AS intercept
         |FROM s""".stripMargin
     ) { (s, dir) =>
-      val c = tbl(s, dir, "documents")
+      val c = Tables(s, dir, "documents")
         .select(explode(split(col("text"), " ")).as("tok"))
         .groupBy("tok").agg(count(lit(1)).as("cnt"))
       val top = c.orderBy(col("cnt").desc, col("tok")).limit(1000)
@@ -619,7 +613,7 @@ object AnalyticsR7 {
         |          + 0.5 * q * log2(q / ((p + q) / 2))), 4) AS jsd
         |FROM d GROUP BY t ORDER BY t""".stripMargin
     ) { (s, dir) =>
-      val c = tbl(s, dir, "events")
+      val c = Tables(s, dir, "events")
         .groupBy(col("event_type").as("t"),
           parity.floorDiv(kProp, 10).as("b"))
         .agg(count(lit(1)).as("n"))
@@ -665,7 +659,7 @@ object AnalyticsR7 {
         |    AS psi_term
         |FROM m ORDER BY 1""".stripMargin
     ) { (s, dir) =>
-      val f = tbl(s, dir, "events")
+      val f = Tables(s, dir, "events")
         .select(datediff(col("ts").cast(DateType),
           to_date(lit("1970-01-01"))).as("d"),
           parity.floorDiv(kProp, 10).as("b"))
@@ -722,7 +716,7 @@ object AnalyticsR7 {
         .when(col("c") < 32768, floor(col("c") / 16) * 16)
         .when(col("c") < 65536, floor(col("c") / 256) * 256)
         .otherwise(lit(65535L))
-      val st = tbl(s, dir, "events")
+      val st = Tables(s, dir, "events")
         .select(col("event_type").as("t"), kProp.as("k"), centsL.as("c"))
         .groupBy(col("t"), bk.cast(LongType).as("bk"))
         .agg(count(when(col("k") >= 50, 1)).as("cnt"))
@@ -789,7 +783,7 @@ object AnalyticsR7 {
         |FROM b ORDER BY 1""".stripMargin
     ) { (s, dir) =>
       val w = (dayofweek(col("ts").cast(DateType)) - 1).cast(LongType)
-      val f = tbl(s, dir, "events")
+      val f = Tables(s, dir, "events")
         .select(col("event_type").as("t"), centsL.as("y"), kProp.as("k"),
           w.as("w"))
       def sq(a: String, b: String) =
@@ -841,7 +835,7 @@ object AnalyticsR7 {
         |        / log10(1 + 1.0 / digit), 4) AS chi2_term
         |FROM m ORDER BY 1""".stripMargin
     ) { (s, dir) =>
-      val g = tbl(s, dir, "events")
+      val g = Tables(s, dir, "events")
         .select(centsL.as("c"))
         .filter(col("c") > 0)
         .select(substring(col("c").cast(StringType), 1, 1)
@@ -887,7 +881,7 @@ object AnalyticsR7 {
         |        / (MAX(n) - 2 * (MAX(n) // 10)), 4) AS tmean_cents
         |FROM x GROUP BY t ORDER BY 1""".stripMargin
     ) { (s, dir) =>
-      val g = tbl(s, dir, "events")
+      val g = Tables(s, dir, "events")
         .select(col("event_type").as("t"), centsL.as("c"))
         .groupBy("t", "c").agg(count(lit(1)).as("cnt"))
       val wCum = Window.partitionBy("t").orderBy("c")

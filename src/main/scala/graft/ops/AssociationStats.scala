@@ -1,8 +1,8 @@
 package graft.ops
 
-import graft.{GraftSession, OpDef}
+import graft.OpDef
 import graft.sources.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -15,11 +15,6 @@ import org.apache.spark.sql.types._
   * -> round(.,4). (Consolidated r9 from the r8 chronology files.)
   */
 object AssociationStats {
-
-  private def tbl(s: SparkSession, dir: String, n: String): DataFrame = {
-    GraftSession.tune(s)
-    Tables(s, dir, n)
-  }
 
   private val kProp = get_json_object(col("props"), "$.k").cast(LongType)
   private val centsL =
@@ -71,7 +66,7 @@ object AssociationStats {
         |FROM p, m""".stripMargin
     ) { (s, dir) =>
       val dows = 0 to 6
-      val piv = tbl(s, dir, "events")
+      val piv = Tables(s, dir, "events")
         .select(parity.floorDiv(kProp, 10).as("x"),
           (dayofweek(col("ts").cast(DateType)) - 1).cast(LongType).as("y"))
         .filter(col("x").isNotNull && col("y").isNotNull)
@@ -157,7 +152,7 @@ object AssociationStats {
       // rank_corr_matrix): a NULL decile would be counted as a χ² cell
       // while COUNT(DISTINCT b) excludes NULL, understating n_cols in
       // Tschuprow's normalizer — engine-consistent but statistically wrong
-      val c = tbl(s, dir, "events")
+      val c = Tables(s, dir, "events")
         .filter(get_json_object(col("props"), "$.k").isNotNull)
         .groupBy(col("event_type").as("t"),
           parity.floorDiv(
@@ -209,7 +204,7 @@ object AssociationStats {
         |SELECT t AS event_type, round(SUM(p * ln(p / q)), 4) AS kl
         |FROM d GROUP BY t ORDER BY t""".stripMargin
     ) { (s, dir) =>
-      val c = tbl(s, dir, "events")
+      val c = Tables(s, dir, "events")
         .groupBy(col("event_type").as("t"),
           parity.floorDiv(kProp, 10).as("b"))
         .agg(count(lit(1)).as("n"))
@@ -257,7 +252,7 @@ object AssociationStats {
         |    / (CAST(nx AS DOUBLE) * ny), 4) AS delta
         |FROM m""".stripMargin
     ) { (s, dir) =>
-      val cnt = tbl(s, dir, "events")
+      val cnt = Tables(s, dir, "events")
         .filter(col("event_type").isin("click", "view"))
         .select(col("value").cast(DecimalType(18, 2)).as("v"),
           (col("event_type") === "click").as("isx"))
@@ -309,7 +304,7 @@ object AssociationStats {
         |FROM w ORDER BY 1, 2""".stripMargin
     ) { (s, dir) =>
       val lagW = Window.partitionBy("user_id").orderBy("us", "event_id")
-      val l = tbl(s, dir, "events")
+      val l = Tables(s, dir, "events")
         .select(col("user_id"), col("event_type").as("cur"),
           expr("unix_micros(ts)").as("us"), col("event_id"))
         .withColumn("prev", lag(col("cur"), 1).over(lagW))
@@ -357,7 +352,7 @@ object AssociationStats {
         |ORDER BY n_paths DESC, path LIMIT 20""".stripMargin
     ) { (s, dir) =>
       val w = Window.partitionBy("user_id").orderBy("us", "event_id")
-      val seq3 = tbl(s, dir, "events")
+      val seq3 = Tables(s, dir, "events")
         .select(col("user_id"), col("event_type").as("t0"),
           expr("unix_micros(ts)").as("us"), col("event_id"))
         .withColumn("t1", lead(col("t0"), 1).over(w))
@@ -418,7 +413,7 @@ object AssociationStats {
         |    AS corr
         |FROM u ORDER BY pair""".stripMargin
     ) { (s, dir) =>
-      val f = tbl(s, dir, "events")
+      val f = Tables(s, dir, "events")
         .filter(get_json_object(col("props"), "$.k").isNotNull)
         .select(centsL.as("v"), kProp.as("k"),
           hour(col("ts")).cast(LongType).as("h"))
@@ -479,7 +474,7 @@ object AssociationStats {
         |FROM w GROUP BY prev ORDER BY prev""".stripMargin
     ) { (s, dir) =>
       val lagW = Window.partitionBy("user_id").orderBy("us", "event_id")
-      val l = tbl(s, dir, "events")
+      val l = Tables(s, dir, "events")
         .select(col("user_id"), col("event_type").as("cur"),
           expr("unix_micros(ts)").as("us"), col("event_id"))
         .withColumn("prev", lag(col("cur"), 1).over(lagW))
@@ -561,7 +556,7 @@ object AssociationStats {
       // the per-row JSON k-prop extraction (the query's dominant per-row
       // cost) re-ran four times (guide §1.2: don't recompute what you
       // already paid for). CacheRegistry discipline as everywhere else.
-      val f = graft.CacheRegistry.track(tbl(s, dir, "events")
+      val f = graft.CacheRegistry.track(Tables(s, dir, "events")
         .filter(get_json_object(col("props"), "$.k").isNotNull)
         .select(centsL.as("v"), kProp.as("k"),
           hour(col("ts")).cast(LongType).as("h"))
@@ -645,8 +640,8 @@ object AssociationStats {
         |    / (CAST(SUM(s) AS DOUBLE) * CAST(SUM(s) AS DOUBLE)), 6) AS hhi
         |FROM g GROUP BY 1 ORDER BY 1""".stripMargin
     ) { (s, dir) =>
-      val p = tbl(s, dir, "part").select(col("p_partkey"), col("p_brand"))
-      val l = tbl(s, dir, "lineitem")
+      val p = Tables(s, dir, "part").select(col("p_partkey"), col("p_brand"))
+      val l = Tables(s, dir, "lineitem")
         .select(col("l_partkey"), col("l_suppkey"),
           ((col("l_extendedprice").cast(DecimalType(18, 2)) * 100)
             .cast(LongType)
@@ -691,7 +686,7 @@ object AssociationStats {
         |CROSS JOIN n_ord n
         |ORDER BY 1, 2""".stripMargin
     ) { (s, dir) =>
-      val p = tbl(s, dir, "part").select(col("p_partkey"), col("p_brand"))
+      val p = Tables(s, dir, "part").select(col("p_partkey"), col("p_brand"))
       // Per-order sorted brand ARRAY instead of a grain self-join (r13,
       // verdict item 5): collect_set collapses the fact join to one row
       // per order on the SAME exchange the old distinct() needed, then the
@@ -700,13 +695,13 @@ object AssociationStats {
       // array grain feeds pair generation, both marginals and the order
       // count, so the fact join runs once (CacheRegistry discipline;
       // production callers release via Graft.releaseCaches()).
-      val l = tbl(s, dir, "lineitem").select(col("l_partkey"), col("l_orderkey"))
+      val l = Tables(s, dir, "lineitem").select(col("l_partkey"), col("l_orderkey"))
       // persist kept after the r17 reuse audit: unlike the distinct-rooted
       // caches r17 dropped, column pruning rewrites this agg differently
       // per consumer (nOrd/m need no `bs`), so the subtrees DIVERGE and
       // runtime exchange reuse cannot dedupe them — the executed plan
       // without the persist ran the lineitem⋈part collapse twice
-      // (ProbeReuse: final_scans=4). Measured flat at sf0.1 either way;
+      // (OPTIMIZATION_r17.md: final_scans=4). Measured flat at sf0.1 either way;
       // one fact pass is the right 100 TB shape.
       val arr = graft.CacheRegistry.track(
         l.join(broadcast(p), l("l_partkey") === p("p_partkey"))
@@ -772,7 +767,7 @@ object AssociationStats {
         |FROM m ORDER BY event_type""".stripMargin
     ) { (s, dir) =>
       MomentCells.corrFromCells(
-        MomentCells.cells(tbl(s, dir, "events"))).orderBy("event_type")
+        MomentCells.cells(Tables(s, dir, "events"))).orderBy("event_type")
     }
   )
 

@@ -1,9 +1,9 @@
 package graft.ops
 
-import graft.{GraftSession, OpDef}
+import graft.OpDef
 import graft.cdc.{MaterializedAgg, MultiTable, TypeNormalizer}
 import graft.sources.Changes
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -16,11 +16,6 @@ import org.apache.spark.sql.types._
   * `sinker.go`): one shuffle on the pk (or module) key, no driver-side state.
   */
 object CdcQueries {
-
-  private def ch(s: SparkSession, dir: String): DataFrame = {
-    GraftSession.tune(s)
-    Changes(s, dir)
-  }
 
   private def withCh(body: String): String =
     s"WITH ch AS (\n${Changes.changesSql}\n)\n$body"
@@ -38,7 +33,7 @@ object CdcQueries {
           |ORDER BY user_id""".stripMargin)
     ) { (s, dir) =>
       val w = Window.partitionBy("pk").orderBy(col("block").desc)
-      ch(s, dir)
+      Changes(s, dir)
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1 && col("op") =!= "DELETE")
         .select(col("pk").as("user_id"), col("amount"), col("note"))
@@ -67,7 +62,7 @@ object CdcQueries {
           |SELECT pk AS user_id, amount, kval, note FROM merged WHERE rn = 1
           |ORDER BY user_id""".stripMargin)
     ) { (s, dir) =>
-      val c = ch(s, dir)
+      val c = Changes(s, dir)
       val lastDel = c.groupBy("pk")
         .agg(max(when(col("op") === "DELETE", col("block"))).as("del_block"))
       val alive = c.join(lastDel, Seq("pk"))
@@ -96,7 +91,7 @@ object CdcQueries {
           |GROUP BY pk HAVING COUNT(*) > 1
           |ORDER BY user_id""".stripMargin)
     ) { (s, dir) =>
-      ch(s, dir)
+      Changes(s, dir)
         .filter(col("op") === "INSERT")
         .groupBy("pk")
         .agg(count(lit(1)).as("n_inserts"))
@@ -115,7 +110,7 @@ object CdcQueries {
           |FROM ch GROUP BY note
           |ORDER BY module_hash""".stripMargin)
     ) { (s, dir) =>
-      ch(s, dir)
+      Changes(s, dir)
         .groupBy(col("note").as("module_hash"))
         .agg(max("block").as("block_num"))
         .withColumn("block_id", md5(col("block_num").cast(StringType)))
@@ -133,7 +128,7 @@ object CdcQueries {
           |  COUNT(*) FILTER (WHERE op = 'DELETE') AS n_deletes
           |FROM ch GROUP BY 1 ORDER BY 1""".stripMargin)
     ) { (s, dir) =>
-      ch(s, dir)
+      Changes(s, dir)
         .groupBy(expr("block div 100").as("flush_id"))
         .agg(
           count(lit(1)).as("n_ops"),
@@ -163,7 +158,6 @@ object CdcQueries {
         |  CAST(flag_s AS BOOLEAN) AS flag
         |FROM raw ORDER BY event_id""".stripMargin
     ) { (s, dir) =>
-      GraftSession.tune(s)
       val ev = graft.sources.Tables(s, dir, "events")
       val raw = ev.select(
         col("event_id"),
@@ -221,7 +215,6 @@ object CdcQueries {
         |FROM merged WHERE rn = 1
         |ORDER BY tbl, pk""".stripMargin
     ) { (s, dir) =>
-      GraftSession.tune(s)
       val schemas = Changes.multiTableSchemas
       val collapsed = MultiTable.collapseAll(Changes.multiTable(s, dir), schemas)
       val empty = schemas.map { case (t, sch) =>
@@ -262,7 +255,7 @@ object CdcQueries {
       // state from the same cheap feed, and caching measured SLOWER than
       // the re-scans (0.77 s vs 1.28 s warm at sf0.1) — the operational
       // path (the sink) holds its batch in memory and never re-reads
-      val c = ch(s, dir)
+      val c = Changes(s, dir)
       val split = broadcast(c.agg(expr("max(block) div 2").as("b0")))
       val cs = c.crossJoin(split)
       def lastState(df: DataFrame): DataFrame = {

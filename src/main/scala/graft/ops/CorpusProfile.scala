@@ -1,8 +1,8 @@
 package graft.ops
 
-import graft.{GraftSession, OpDef}
+import graft.OpDef
 import graft.sources.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -15,11 +15,6 @@ import org.apache.spark.sql.types._
   * (Consolidated r9 from the r8 chronology files.)
   */
 object CorpusProfile {
-
-  private def tbl(s: SparkSession, dir: String, n: String): DataFrame = {
-    GraftSession.tune(s)
-    Tables(s, dir, n)
-  }
 
   private val kProp = get_json_object(col("props"), "$.k").cast(LongType)
   private val centsL =
@@ -49,7 +44,7 @@ object CorpusProfile {
         |    / COUNT(*), 4) AS hapax_ratio
         |FROM g GROUP BY 1 ORDER BY 1""".stripMargin
     ) { (s, dir) =>
-      val g = tbl(s, dir, "documents")
+      val g = Tables(s, dir, "documents")
         .filter(col("doc_id") < 200)
         .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
         .groupBy("doc_id", "tok").agg(count(lit(1)).as("c"))
@@ -87,7 +82,7 @@ object CorpusProfile {
         |    / COUNT(*), 4) AS shared_frac
         |FROM d GROUP BY 1 ORDER BY 1""".stripMargin
     ) { (s, dir) =>
-      val e = graft.dedup.Dedup.gramRows(tbl(s, dir, "documents"), 3)
+      val e = graft.dedup.Dedup.gramRows(Tables(s, dir, "documents"), 3)
       val d = e.withColumn("df", count(lit(1)).over(Window.partitionBy("h")))
       d.groupBy("doc_id").agg(
         count(lit(1)).cast(LongType).as("n_shingles"),
@@ -122,7 +117,7 @@ object CorpusProfile {
         |    AS p90_len
         |FROM w GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
     ) { (s, dir) =>
-      val g = tbl(s, dir, "documents")
+      val g = Tables(s, dir, "documents")
         .groupBy(col("lang"), col("source"), col("n_chars").as("len"))
         .agg(count(lit(1)).as("cnt"))
       val part = Window.partitionBy("lang", "source")
@@ -161,7 +156,7 @@ object CorpusProfile {
         |  round(1.0 - CAST(n_unique AS DOUBLE) / n_docs, 4) AS dup_rate
         |FROM g ORDER BY source""".stripMargin
     ) { (s, dir) =>
-      tbl(s, dir, "documents")
+      Tables(s, dir, "documents")
         .select(col("source"), md5(col("text")).as("h"))
         .groupBy("source")
         .agg(count(lit(1)).cast(LongType).as("n_docs"),
@@ -221,7 +216,7 @@ object CorpusProfile {
     ) { (s, dir) =>
       val pairs = graft.dedup.Dedup.simhashPairs(s, dir)
         .select("doc_a", "doc_b")
-      val src = tbl(s, dir, "documents").select(col("doc_id"), col("source"))
+      val src = Tables(s, dir, "documents").select(col("doc_id"), col("source"))
       val g = pairs
         .join(src.select(col("doc_id").as("doc_a"), col("source").as("sa")),
           Seq("doc_a"))
@@ -255,7 +250,7 @@ object CorpusProfile {
         |  round(CAST(n_docs AS DOUBLE) / SUM(n_docs) OVER (), 4) AS share
         |FROM g ORDER BY bucket""".stripMargin
     ) { (s, dir) =>
-      val d = tbl(s, dir, "documents")
+      val d = Tables(s, dir, "documents")
         .select(size(split(col("text"), " ")).cast(LongType).as("n_tok"))
         .filter(col("n_tok") > 0)
       val g = d.groupBy(length(bin(col("n_tok"))).cast(LongType).as("bucket"))
@@ -288,7 +283,7 @@ object CorpusProfile {
         |  round((CAST(tt AS DOUBLE) / n_src) / g.n_tokens, 6) AS weight
         |FROM g, t ORDER BY g.source""".stripMargin
     ) { (s, dir) =>
-      val g = tbl(s, dir, "documents")
+      val g = Tables(s, dir, "documents")
         .groupBy("source")
         .agg(count(lit(1)).cast(LongType).as("n_docs"),
           sum(size(split(col("text"), " ")).cast(LongType))
@@ -350,7 +345,7 @@ object CorpusProfile {
         |    / COUNT(*), 4) AS avg_score
         |FROM b GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
     ) { (s, dir) =>
-      val w = tbl(s, dir, "documents")
+      val w = Tables(s, dir, "documents")
         .select(col("doc_id"), col("lang"),
           explode(split(col("text"), " ")).as("tok"))
       val c = w.groupBy("tok").agg(count(lit(1)).as("cnt"))

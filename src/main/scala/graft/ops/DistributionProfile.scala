@@ -1,8 +1,8 @@
 package graft.ops
 
-import graft.{GraftSession, OpDef}
+import graft.OpDef
 import graft.sources.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -16,11 +16,6 @@ import org.apache.spark.sql.types._
   * DECIMAL(38,0)/HUGEINT. (Consolidated r9 from the r8 chronology files.)
   */
 object DistributionProfile {
-
-  private def tbl(s: SparkSession, dir: String, n: String): DataFrame = {
-    GraftSession.tune(s)
-    Tables(s, dir, n)
-  }
 
   private val kProp = get_json_object(col("props"), "$.k").cast(LongType)
   private val centsL =
@@ -61,7 +56,7 @@ object DistributionProfile {
         |  MIN(CASE WHEN cum >= hi_r THEN c END) AS ci_hi_c
         |FROM r GROUP BY t ORDER BY 1""".stripMargin
     ) { (s, dir) =>
-      val g = tbl(s, dir, "events")
+      val g = Tables(s, dir, "events")
         .select(col("event_type").as("t"), centsL.as("c"))
         .groupBy("t", "c").agg(count(lit(1)).as("cnt"))
       val wCum = Window.partitionBy("t").orderBy("c")
@@ -116,7 +111,7 @@ object DistributionProfile {
         |  round(sum_abs / (CAST(n_total AS DOUBLE) * sum_x), 4) AS gini
         |FROM a ORDER BY event_type""".stripMargin
     ) { (s, dir) =>
-      val g = tbl(s, dir, "events")
+      val g = Tables(s, dir, "events")
         .select(col("event_type").as("t"), centsL.as("c"))
         .filter(col("c") > 0)
         .groupBy("t", "c").agg(count(lit(1)).as("n"))
@@ -164,7 +159,7 @@ object DistributionProfile {
         |ORDER BY col_name""".stripMargin
     ) { (s, dir) =>
       val cols = Seq("event_id", "event_type", "props", "ts", "user_id", "value")
-      val a = tbl(s, dir, "events").agg(
+      val a = Tables(s, dir, "events").agg(
         count(lit(1)).as("nr"),
         cols.flatMap(c => Seq(count(col(c)).as(s"cnt_$c"),
           countDistinct(col(c)).as(s"dst_$c"))): _*)
@@ -198,7 +193,7 @@ object DistributionProfile {
         |FROM f GROUP BY 1 ORDER BY 1""".stripMargin
     ) { (s, dir) =>
       val vD = col("c").cast(DoubleType) / 100
-      tbl(s, dir, "events")
+      Tables(s, dir, "events")
         .select(col("event_type").as("t"), centsL.as("c"))
         .filter(col("c") > 0)
         .groupBy("t").agg(
@@ -238,7 +233,7 @@ object DistributionProfile {
         |    AS theil_t
         |FROM m GROUP BY t ORDER BY t""".stripMargin
     ) { (s, dir) =>
-      val g = tbl(s, dir, "events")
+      val g = Tables(s, dir, "events")
         .select(col("event_type").as("t"), centsL.as("c"))
         .filter(col("c") > 0)
         .groupBy("t", "c").agg(count(lit(1)).as("cnt"))
@@ -278,7 +273,7 @@ object DistributionProfile {
         |    / SUM(n) OVER (PARTITION BY t), 4) AS share
         |FROM g ORDER BY t, bucket""".stripMargin
     ) { (s, dir) =>
-      val g = tbl(s, dir, "events")
+      val g = Tables(s, dir, "events")
         .select(col("event_type").as("t"), centsL.as("c"))
         .filter(col("c") > 0)
         .groupBy(col("t"), length(bin(col("c"))).cast(LongType).as("bucket"))
@@ -322,7 +317,7 @@ object DistributionProfile {
         |FROM u ORDER BY 1, 2""".stripMargin
     ) { (s, dir) =>
       val probes = Seq(1000L, 2500L, 5000L, 7500L, 9000L)
-      val m = tbl(s, dir, "events")
+      val m = Tables(s, dir, "events")
         .select(col("event_type").as("t"), centsL.as("c"))
         .groupBy("t")
         .agg(count(lit(1)).as("n"),
@@ -372,7 +367,7 @@ object DistributionProfile {
         |    4) AS hill_alpha
         |FROM sel WHERE take > 0 GROUP BY t ORDER BY t""".stripMargin
     ) { (s, dir) =>
-      val g = tbl(s, dir, "events")
+      val g = Tables(s, dir, "events")
         .select(col("event_type").as("t"), centsL.as("c"))
         .filter(col("c") > 0)
         .groupBy("t", "c").agg(count(lit(1)).as("cnt"))
@@ -446,7 +441,7 @@ object DistributionProfile {
         |    AS revenue_share
         |FROM s GROUP BY pct ORDER BY pct""".stripMargin
     ) { (s, dir) =>
-      val u = tbl(s, dir, "events")
+      val u = Tables(s, dir, "events")
         .select(col("user_id"), centsL.as("c"))
         .groupBy("user_id").agg(sum("c").cast(LongType).as("c"))
       val g = u.groupBy("c").agg(count(lit(1)).as("cnt"))
@@ -500,7 +495,7 @@ object DistributionProfile {
         |  CAST(MAX(n_orders) AS BIGINT) AS max_orders
         |FROM w""".stripMargin
     ) { (s, dir) =>
-      val c = tbl(s, dir, "orders")
+      val c = Tables(s, dir, "orders")
         .groupBy("o_custkey").agg(count(lit(1)).as("n_orders"))
       val g = c.groupBy("n_orders").agg(count(lit(1)).as("cnt"))
       val cum = Window.orderBy("n_orders")
@@ -556,7 +551,7 @@ object DistributionProfile {
         |FROM w JOIN n ON w.t = n.t
         |GROUP BY 1, 2 ORDER BY 1""".stripMargin
     ) { (s, dir) =>
-      val f = tbl(s, dir, "events")
+      val f = Tables(s, dir, "events")
         .select(col("event_type").as("t"), centsL.as("c"),
           parity.md5Long(col("event_id").cast(StringType)).as("h"))
       val n = f.groupBy("t").agg(count(lit(1)).as("nt"))
@@ -615,7 +610,7 @@ object DistributionProfile {
         |FROM g JOIN b ON g.t = b.t
         |GROUP BY 1, 2, 3, 4 ORDER BY 1""".stripMargin
     ) { (s, dir) =>
-      val g = tbl(s, dir, "events")
+      val g = Tables(s, dir, "events")
         .select(col("event_type").as("t"), centsL.as("c"))
         .groupBy("t", "c").agg(count(lit(1)).as("cnt"))
       val part = Window.partitionBy("t")
@@ -681,7 +676,7 @@ object DistributionProfile {
         |    * (coalesce(hi90, lo90) - lo90)) / 100.0, 4) AS p90_w
         |FROM a ORDER BY 1""".stripMargin
     ) { (s, dir) =>
-      val g = tbl(s, dir, "events")
+      val g = Tables(s, dir, "events")
         .filter(kProp > 0)
         .select(col("event_type").as("t"), centsL.as("v"), kProp.as("wgt"))
         .groupBy("t", "v").agg(sum("wgt").cast(LongType).as("w"))
@@ -753,7 +748,7 @@ object DistributionProfile {
         |WHERE (z.n * t.d) // 10 = 0
         |ORDER BY 1""".stripMargin
     ) { (s, dir) =>
-      val u = tbl(s, dir, "events")
+      val u = Tables(s, dir, "events")
         .filter(col("event_type") === "purchase")
         .groupBy("user_id").agg(sum(centsL).cast(LongType).as("rev"))
       val g = u.groupBy("rev").agg(count(lit(1)).as("cnt"))
@@ -816,7 +811,7 @@ object DistributionProfile {
       val wt = kProp
       val u = (graft.ops.parity.md5Long(col("event_id").cast(StringType))
         + 1).cast(DoubleType) / lit(1152921504606846976.0)
-      val w = tbl(s, dir, "events")
+      val w = Tables(s, dir, "events")
         .filter(kProp > 0)
         .select(col("event_type"), col("event_id"), wt.as("wt"),
           (log(u) / wt).as("key"))

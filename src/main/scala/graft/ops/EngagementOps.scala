@@ -1,8 +1,8 @@
 package graft.ops
 
-import graft.{GraftSession, OpDef}
+import graft.OpDef
 import graft.sources.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -15,11 +15,6 @@ import org.apache.spark.sql.types._
   * (Consolidated r9 from the r8 chronology files.)
   */
 object EngagementOps {
-
-  private def tbl(s: SparkSession, dir: String, n: String): DataFrame = {
-    GraftSession.tune(s)
-    Tables(s, dir, n)
-  }
 
   private val kProp = get_json_object(col("props"), "$.k").cast(LongType)
   private val centsL =
@@ -51,7 +46,7 @@ object EngagementOps {
         |  CAST(COUNT(*) AS BIGINT) AS n_islands
         |FROM g GROUP BY 1 ORDER BY 1""".stripMargin
     ) { (s, dir) =>
-      val dd = tbl(s, dir, "events")
+      val dd = Tables(s, dir, "events")
         .select(col("user_id"), epochDay.as("d")).distinct()
       val r = dd.withColumn("isl", col("d") - row_number().over(
         Window.partitionBy("user_id").orderBy("d")))
@@ -92,7 +87,7 @@ object EngagementOps {
       // runtime exchange reuse covers only the join sides and the corpus
       // distinct re-ran for the marginals. One grain pass is the 100 TB
       // shape; the persist is it.
-      val g = graft.CacheRegistry.track(tbl(s, dir, "events")
+      val g = graft.CacheRegistry.track(Tables(s, dir, "events")
         .select(col("event_type").as("t"), col("user_id").as("u")).distinct()
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
       val c = g.groupBy("t").agg(count(lit(1)).as("n"))
@@ -139,7 +134,7 @@ object EngagementOps {
       // ONE user exchange: per-user distinct day set + first day come from
       // the same groupBy (a (user,day)-keyed distinct + user-keyed window
       // would exchange twice); the day list is calendar-bounded per user.
-      val byUser = tbl(s, dir, "events")
+      val byUser = Tables(s, dir, "events")
         .select(col("user_id"), epochDay.as("d"))
         .groupBy("user_id")
         .agg(array_distinct(collect_list("d")).as("days"))
@@ -180,7 +175,7 @@ object EngagementOps {
         |    / MAX(CASE WHEN o = 0 THEN n END) OVER (), 4) AS retention
         |FROM g ORDER BY 1""".stripMargin
     ) { (s, dir) =>
-      val byUser = tbl(s, dir, "events")
+      val byUser = Tables(s, dir, "events")
         .select(col("user_id"), epochDay.as("d"))
         .groupBy("user_id")
         .agg(array_distinct(collect_list("d")).as("days"))
@@ -234,7 +229,7 @@ object EngagementOps {
     ) { (s, dir) =>
       val horizons = Seq(60L, 300L, 1800L, 3600L, 21600L)
       val lagW = Window.partitionBy("user_id").orderBy("us", "event_id")
-      val f = tbl(s, dir, "events")
+      val f = Tables(s, dir, "events")
         .select(col("event_type").as("t"), col("user_id"),
           expr("unix_micros(ts)").as("us"), col("event_id"))
         .withColumn("gap_us", col("us") - lag(col("us"), 1).over(lagW))
@@ -272,7 +267,7 @@ object EngagementOps {
       // size(array_distinct(collect_list)) = ONE user exchange; a
       // countDistinct agg would plan the (user, d) pre-distinct as a
       // second exchange. The list is calendar-bounded per user.
-      val dd = tbl(s, dir, "events")
+      val dd = Tables(s, dir, "events")
         .select(col("user_id"), epochDay.as("d"))
         .groupBy("user_id")
         .agg(size(array_distinct(collect_list("d"))).cast(LongType).as("k"))
@@ -305,7 +300,7 @@ object EngagementOps {
         |  round(CAST(SUM(conv) AS DOUBLE) / COUNT(*), 4) AS cvr
         |FROM u GROUP BY 1 ORDER BY 1""".stripMargin
     ) { (s, dir) =>
-      val u = tbl(s, dir, "events")
+      val u = Tables(s, dir, "events")
         .select(col("user_id"), col("event_type").as("t"),
           expr("unix_micros(ts)").as("us"), col("event_id"))
         .groupBy("user_id")
@@ -341,7 +336,7 @@ object EngagementOps {
       // project the JSON field ONCE, then filter/bucket the extracted
       // column — the filter-on-raw-props spelling parsed every row's
       // props twice (r13; at sf10 the double parse is the scan's cost)
-      tbl(s, dir, "events")
+      Tables(s, dir, "events")
         .select(get_json_object(col("props"), "$.k").as("ks"),
           col("event_type").as("t"))
         .filter(col("ks").isNotNull)
@@ -375,7 +370,7 @@ object EngagementOps {
         |  round(CAST(n_users AS DOUBLE) / SUM(n_users) OVER (), 4) AS share
         |FROM g ORDER BY bucket""".stripMargin
     ) { (s, dir) =>
-      val u = tbl(s, dir, "events")
+      val u = Tables(s, dir, "events")
         .groupBy("user_id").agg(count(lit(1)).as("k"))
       val g = u.groupBy(length(bin(col("k"))).cast(LongType).as("bucket"))
         .agg(count(lit(1)).cast(LongType).as("n_users"),
@@ -414,7 +409,7 @@ object EngagementOps {
     ) { (s, dir) =>
       def did(t: String): Column =
         max(when(col("event_type") === t, 1).otherwise(0))
-      val u = tbl(s, dir, "events")
+      val u = Tables(s, dir, "events")
         .groupBy("user_id")
         .agg(did("signup").as("c1"),
           max(when(col("event_type") === "click" && col("value") > 95, 1)
@@ -493,7 +488,7 @@ object EngagementOps {
         |FROM cm CROSS JOIN qr CROSS JOIN qf CROSS JOIN qm
         |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin
     ) { (s, dir) =>
-      val ordersT = tbl(s, dir, "orders")
+      val ordersT = Tables(s, dir, "orders")
       val mx = ordersT.agg(max(col("o_orderdate").cast(DateType)).as("dmax"))
       // cm feeds five consumers (nr, three cuts, the final coding pass),
       // but its root is the custkey agg EXCHANGE — ReuseExchange already
@@ -586,7 +581,7 @@ object EngagementOps {
         |  CAST(MIN(CASE WHEN cum * 4 >= n * 3 THEN lag_s END) AS BIGINT) AS p75_s
         |FROM w""".stripMargin
     ) { (s, dir) =>
-      val ev = tbl(s, dir, "events")
+      val ev = Tables(s, dir, "events")
       val su = ev.filter(col("event_type") === "signup")
         .groupBy("user_id").agg(min(unix_micros(col("ts"))).as("s_us"))
       val pu = ev.filter(col("event_type") === "purchase")
@@ -634,7 +629,7 @@ object EngagementOps {
         |WHERE dwell_us IS NOT NULL AND dwell_us <= 1800 * 1000000
         |GROUP BY 1 ORDER BY 1""".stripMargin
     ) { (s, dir) =>
-      val e = tbl(s, dir, "events")
+      val e = Tables(s, dir, "events")
         .select(col("user_id"), col("event_type"),
           unix_micros(col("ts")).as("us"), col("event_id"))
       val d = e.withColumn("dwell_us",
@@ -679,7 +674,7 @@ object EngagementOps {
         |  round(CAST(dau AS DOUBLE) / mau, 4) AS stickiness
         |FROM j ORDER BY 1""".stripMargin
     ) { (s, dir) =>
-      val dd = tbl(s, dir, "events")
+      val dd = Tables(s, dir, "events")
         .select(col("user_id"), epochDay.as("d")).distinct()
       val dau = dd.groupBy("d").agg(count(lit(1)).cast(LongType).as("dau"))
       val offsets = broadcast(s.range(0, 30).toDF("off"))
@@ -726,7 +721,7 @@ object EngagementOps {
         |    ELSE next_c - us END // 1000000 AS BIGINT) AS nearest_click_s
         |FROM w WHERE event_type = 'error' ORDER BY event_id""".stripMargin
     ) { (s, dir) =>
-      val e = tbl(s, dir, "events")
+      val e = Tables(s, dir, "events")
         .select(col("user_id"), col("event_type"), col("event_id"),
           unix_micros(col("ts")).as("us"))
         .withColumn("cus",

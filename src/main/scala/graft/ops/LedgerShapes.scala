@@ -1,11 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.{GraftSession, OpDef}
+import graft.OpDef
 import graft.sources.Tables
 import parity._
 
@@ -27,11 +26,6 @@ import parity._
   * hour, exact in both engines.
   */
 object LedgerShapes {
-
-  private def tbl(s: SparkSession, dir: String, n: String): DataFrame = {
-    GraftSession.tune(s)
-    Tables(s, dir, n)
-  }
 
   /** Epoch-seconds of the containing hour, as BIGINT (Spark side). */
   private def barHour(c: org.apache.spark.sql.Column) =
@@ -60,7 +54,7 @@ object LedgerShapes {
          |FROM events
          |GROUP BY 1, 2 ORDER BY event_type, bar_hour""".stripMargin
     ) { (s, dir) =>
-      tbl(s, dir, "events")
+      Tables(s, dir, "events")
         .groupBy(col("event_type"), barHour(col("ts")).as("bar_hour"))
         .agg(
           min_by(col("value"), col("event_id")).as("open"),
@@ -106,7 +100,7 @@ object LedgerShapes {
          |FROM v ORDER BY event_type, bar_hour""".stripMargin
     ) { (s, dir) =>
       val k = get_json_object(col("props"), "$.k").cast(LongType)
-      tbl(s, dir, "events")
+      Tables(s, dir, "events")
         .groupBy(col("event_type"), barHour(col("ts")).as("bar_hour"))
         .agg(
           sum(col("value").cast(DecimalType(18, 2))
@@ -156,7 +150,7 @@ object LedgerShapes {
         .otherwise(-col("value").cast(DecimalType(18, 2)))
       val w = Window.partitionBy("user_id").orderBy("event_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      tbl(s, dir, "events")
+      Tables(s, dir, "events")
         .select(col("user_id"), col("event_id"), amt.as("amt"))
         .withColumn("bal", sum("amt").over(w))
         .groupBy("user_id")
@@ -206,7 +200,7 @@ object LedgerShapes {
         .otherwise(-col("value").cast(DecimalType(18, 2)))
       val w = Window.partitionBy("user_id").orderBy("event_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      tbl(s, dir, "events")
+      Tables(s, dir, "events")
         .select(col("user_id"), col("event_id"), amt.as("amt"))
         .withColumn("bal", sum("amt").over(w))
         .withColumn("peak", max("bal").over(w))
@@ -246,7 +240,7 @@ object LedgerShapes {
          |ORDER BY abs(vol - prev_vol) DESC, event_type, bar_hour
          |LIMIT 20""".stripMargin
     ) { (s, dir) =>
-      val g = tbl(s, dir, "events")
+      val g = Tables(s, dir, "events")
         .groupBy(col("event_type"), barHour(col("ts")).as("bar_hour"))
         .agg(sum(col("value").cast(DecimalType(18, 2))).as("vol"))
       val w = Window.partitionBy("event_type").orderBy("bar_hour")

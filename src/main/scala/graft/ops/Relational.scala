@@ -1,8 +1,8 @@
 package graft.ops
 
-import graft.{CapacityPins, GraftSession, OpDef}
+import graft.{CapacityPins, OpDef}
 import graft.sources.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -16,11 +16,6 @@ import parity._
   * deterministically ordered (unique tie-break) for oracle hash parity.
   */
 object Relational {
-
-  private def tbl(s: SparkSession, dir: String, n: String): DataFrame = {
-    GraftSession.tune(s)
-    Tables(s, dir, n)
-  }
 
   private val ts19980902 = lit("1998-09-02 00:00:00").cast(TimestampType)
   private val ts19980101 = lit("1998-01-01 00:00:00").cast(TimestampType)
@@ -39,7 +34,7 @@ object Relational {
         |GROUP BY l_returnflag, l_linestatus
         |ORDER BY l_returnflag, l_linestatus""".stripMargin
     ) { (s, dir) =>
-      tbl(s, dir, "lineitem")
+      Tables(s, dir, "lineitem")
         .filter(col("l_shipdate") <= ts19980902) // pushed to parquet scan
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
@@ -71,9 +66,9 @@ object Relational {
         |ORDER BY revenue DESC, o_orderkey
         |LIMIT 10""".stripMargin
     ) { (s, dir) =>
-      val cust = tbl(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
-      val ord  = tbl(s, dir, "orders").filter(col("o_orderdate") < ts19980101)
-      val li   = tbl(s, dir, "lineitem").filter(col("l_shipdate") > ts19980101)
+      val cust = Tables(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
+      val ord  = Tables(s, dir, "orders").filter(col("o_orderdate") < ts19980101)
+      val li   = Tables(s, dir, "lineitem").filter(col("l_shipdate") > ts19980101)
       li.join(ord, col("l_orderkey") === col("o_orderkey"))
         .join(cust, col("o_custkey") === col("c_custkey"))
         .groupBy("o_orderkey", "o_orderdate")
@@ -99,12 +94,12 @@ object Relational {
         |GROUP BY n_name
         |ORDER BY n_name""".stripMargin
     ) { (s, dir) =>
-      val region = tbl(s, dir, "region").filter(col("r_name") === "ASIA")
-      val nation = tbl(s, dir, "nation")
-      val cust   = tbl(s, dir, "customer")
-      val supp   = tbl(s, dir, "supplier")
-      val ord    = tbl(s, dir, "orders")
-      val li     = tbl(s, dir, "lineitem")
+      val region = Tables(s, dir, "region").filter(col("r_name") === "ASIA")
+      val nation = Tables(s, dir, "nation")
+      val cust   = Tables(s, dir, "customer")
+      val supp   = Tables(s, dir, "supplier")
+      val ord    = Tables(s, dir, "orders")
+      val li     = Tables(s, dir, "lineitem")
       li.join(ord, col("l_orderkey") === col("o_orderkey"))
         .join(cust, col("o_custkey") === col("c_custkey"))
         .join(supp,
@@ -126,7 +121,7 @@ object Relational {
         |ORDER BY event_id""".stripMargin
     ) { (s, dir) =>
       val w = Window.partitionBy("user_id").orderBy("event_id")
-      tbl(s, dir, "events")
+      Tables(s, dir, "events")
         .select(
           col("event_id"), col("user_id"),
           sum(col("value").cast(DecimalType(18, 2))).over(w).cast(DoubleType).as("running_value"))
@@ -144,7 +139,7 @@ object Relational {
         |ORDER BY o_orderpriority, rn""".stripMargin
     ) { (s, dir) =>
       val w = Window.partitionBy("o_orderpriority").orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      tbl(s, dir, "orders")
+      Tables(s, dir, "orders")
         .select(col("o_orderpriority"), col("o_orderkey"), col("o_totalprice"),
           row_number().over(w).cast(LongType).as("rn"))
         .filter(col("rn") <= 3)
@@ -163,7 +158,7 @@ object Relational {
         |GROUP BY o_orderstatus
         |ORDER BY o_orderstatus""".stripMargin
     ) { (s, dir) =>
-      tbl(s, dir, "orders")
+      Tables(s, dir, "orders")
         .groupBy("o_orderstatus")
         .agg(
           countDistinct(col("o_custkey")).as("n_cust"),
@@ -181,8 +176,8 @@ object Relational {
         |                  WHERE o_custkey = c_custkey AND o_orderstatus = 'F')
         |ORDER BY c_custkey""".stripMargin
     ) { (s, dir) =>
-      val cust = tbl(s, dir, "customer")
-      val ord  = tbl(s, dir, "orders")
+      val cust = Tables(s, dir, "customer")
+      val ord  = Tables(s, dir, "orders")
       cust
         .join(ord, cust("c_custkey") === ord("o_custkey"), "left_semi")
         .join(ord.filter(col("o_orderstatus") === "F"),
@@ -203,7 +198,7 @@ object Relational {
         |GROUP BY ROLLUP(l_returnflag, l_linestatus)
         |ORDER BY returnflag, linestatus""".stripMargin
     ) { (s, dir) =>
-      tbl(s, dir, "lineitem")
+      Tables(s, dir, "lineitem")
         .rollup("l_returnflag", "l_linestatus")
         .agg(
           count(lit(1)).as("n"),
@@ -230,7 +225,7 @@ object Relational {
         |GROUP BY user_id
         |ORDER BY user_id""".stripMargin
     ) { (s, dir) =>
-      tbl(s, dir, "events")
+      Tables(s, dir, "events")
         .groupBy("user_id")
         .pivot("event_type", Seq("click", "error", "purchase", "signup", "view"))
         .count()
@@ -262,7 +257,7 @@ object Relational {
       val byDate = Window.partitionBy("o_custkey").orderBy("dd").rangeBetween(0, 0)
       val asOf = Window.partitionBy("o_custkey").orderBy("dd")
         .rangeBetween(Window.unboundedPreceding, -1)
-      tbl(s, dir, "orders")
+      Tables(s, dir, "orders")
         .withColumn("dd", datediff(to_date(col("o_orderdate")), lit("1970-01-01")))
         .withColumn("date_okey", max("o_orderkey").over(byDate))
         .withColumn("prev_orderkey", last("date_okey").over(asOf))
@@ -280,7 +275,7 @@ object Relational {
         |GROUP BY 1, 2
         |ORDER BY 1, 2""".stripMargin
     ) { (s, dir) =>
-      tbl(s, dir, "events")
+      Tables(s, dir, "events")
         .groupBy(to_date(col("ts")).as("day"), col("event_type"))
         .agg(count(lit(1)).as("n"), sumDec2(col("value")).as("sum_value"))
         .orderBy("day", "event_type")
@@ -295,7 +290,7 @@ object Relational {
         |GROUP BY event_type
         |ORDER BY event_type""".stripMargin
     ) { (s, dir) =>
-      tbl(s, dir, "events")
+      Tables(s, dir, "events")
         .groupBy("event_type")
         .agg(
           round(expr("percentile(value, 0.5D)"), 4).as("p50"),
@@ -313,7 +308,7 @@ object Relational {
         |ORDER BY event_id""".stripMargin
     ) { (s, dir) =>
       val k = get_json_object(col("props"), "$.k").cast(LongType)
-      tbl(s, dir, "events")
+      Tables(s, dir, "events")
         .select(
           col("event_id"), k.as("k"),
           when(k % 2 === 0, "even").otherwise("odd").as("k_parity"))
@@ -331,7 +326,7 @@ object Relational {
         |GROUP BY p_brand
         |ORDER BY p_brand""".stripMargin
     ) { (s, dir) =>
-      tbl(s, dir, "part")
+      Tables(s, dir, "part")
         .groupBy("p_brand")
         .agg(
           count(lit(1)).as("n_parts"),
@@ -353,8 +348,8 @@ object Relational {
         |  SELECT c_custkey, 'has_orders' AS src FROM both_) q
         |ORDER BY src, c_custkey""".stripMargin
     ) { (s, dir) =>
-      val pos = tbl(s, dir, "customer").filter(col("c_acctbal") > 0).select("c_custkey")
-      val ord = tbl(s, dir, "orders").select(col("o_custkey").as("c_custkey")).distinct()
+      val pos = Tables(s, dir, "customer").filter(col("c_acctbal") > 0).select("c_custkey")
+      val ord = Tables(s, dir, "orders").select(col("o_custkey").as("c_custkey")).distinct()
       val onlyPos = pos.except(ord).withColumn("src", lit("no_orders"))
       val both    = pos.intersect(ord).withColumn("src", lit("has_orders"))
       onlyPos.unionAll(both).select("c_custkey", "src").orderBy("src", "c_custkey")
@@ -376,8 +371,8 @@ object Relational {
         |ORDER BY c_mktsegment""".stripMargin
     ) { (s, dir) =>
       val salts = 8
-      val ev = tbl(s, dir, "events").withColumn("salt", pmod(col("event_id"), lit(salts)))
-      val cust = tbl(s, dir, "customer")
+      val ev = Tables(s, dir, "events").withColumn("salt", pmod(col("event_id"), lit(salts)))
+      val cust = Tables(s, dir, "customer")
         .withColumn("salt", explode(sequence(lit(0), lit(salts - 1))))
       ev.join(cust, ev("user_id") === cust("c_custkey") && ev("salt") === cust("salt"))
         .groupBy("c_mktsegment")
@@ -387,7 +382,7 @@ object Relational {
 
     // ---- #28 approximate distinct (HLL) — rows-only (approx is engine-specific)
     "approx_distinct" -> OpDef.rowsOnly { (s, dir) =>
-      tbl(s, dir, "events")
+      Tables(s, dir, "events")
         .groupBy("event_type")
         .agg(
           approx_count_distinct(col("user_id")).as("approx_users"),
@@ -404,7 +399,7 @@ object Relational {
         |  COUNT(*) AS n
         |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin
     ) { (s, dir) =>
-      tbl(s, dir, "events")
+      Tables(s, dir, "events")
         .groupBy("user_id")
         .agg(
           // .getField on the struct array = GetArrayStructFields (codegen);
@@ -427,7 +422,7 @@ object Relational {
         |  FROM events) q
         |WHERE rn = 1 ORDER BY user_id""".stripMargin
     ) { (s, dir) =>
-      tbl(s, dir, "events")
+      Tables(s, dir, "events")
         .groupBy("user_id")
         .agg(
           max_by(col("event_type"), struct(col("value"), col("event_id"))).as("top_type"),
@@ -450,7 +445,7 @@ object Relational {
         |  COUNT(*) FILTER (WHERE last_purchase > first_signup) AS n_converted
         |FROM u""".stripMargin
     ) { (s, dir) =>
-      tbl(s, dir, "events")
+      Tables(s, dir, "events")
         .groupBy("user_id")
         .agg(
           min(when(col("event_type") === "signup", col("ts"))).as("first_signup"),
@@ -481,7 +476,7 @@ object Relational {
         |FROM act WHERE off BETWEEN 0 AND 7
         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
     ) { (s, dir) =>
-      val ev = tbl(s, dir, "events")
+      val ev = Tables(s, dir, "events")
       val cohort = ev.groupBy("user_id")
         .agg(to_date(min(when(col("event_type") === "signup", col("ts")))).as("d0"))
         .filter(col("d0").isNotNull)
@@ -525,7 +520,7 @@ object Relational {
     ) { (s, dir) =>
       val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      tbl(s, dir, "events")
+      Tables(s, dir, "events")
         .withColumn("t_signup",
           min(when(col("event_type") === "signup", col("ts"))).over(w))
         .withColumn("t_click",
@@ -563,8 +558,7 @@ object Relational {
         |FROM r WHERE rn <= 5
         |GROUP BY event_type ORDER BY event_type""".stripMargin
     ) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
-      tbl(s, dir, "events")
+      Tables(s, dir, "events")
         .groupBy("event_type")
         .agg(concat_ws(",", call_function("topk_approx",
           col("user_id").cast(StringType), lit(5), lit(CapacityPins.TopKCap))).as("top_users"))
@@ -592,8 +586,7 @@ object Relational {
         |FROM r WHERE rn <= 5
         |GROUP BY event_type ORDER BY event_type""".stripMargin
     ) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
-      val cells = tbl(s, dir, "events")
+      val cells = Tables(s, dir, "events")
         .groupBy(col("event_type"), to_date(col("ts")).as("day"))
         .agg(call_function("topk_state",
           col("user_id").cast(StringType), lit(CapacityPins.TopKCap)).as("st"))
@@ -620,7 +613,7 @@ object Relational {
         |FROM r GROUP BY user_id ORDER BY user_id""".stripMargin
     ) { (s, dir) =>
       val w = Window.partitionBy("user_id").orderBy("event_id")
-      tbl(s, dir, "events")
+      Tables(s, dir, "events")
         .select(col("user_id"), col("event_id"),
           sum(floor(col("value")).cast(LongType)).over(w).as("run"))
         .groupBy("user_id")
@@ -647,8 +640,7 @@ object Relational {
         |SELECT event_type, u AS heavy_user FROM r WHERE rn = 1
         |ORDER BY event_type""".stripMargin
     ) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
-      tbl(s, dir, "events")
+      Tables(s, dir, "events")
         .groupBy("event_type")
         .agg(element_at(call_function("topk_approx",
           col("user_id").cast(StringType), lit(1), lit(CapacityPins.TopKCap)), 1)
@@ -663,7 +655,7 @@ object Relational {
     // merged into the __all__ roll-up row. Rows-only: estimates are
     // algorithm-specific; the spec pins accuracy and exact merge identity.
     "uniq_hll" -> OpDef.rowsOnly { (s, dir) =>
-      val sk = tbl(s, dir, "events")
+      val sk = Tables(s, dir, "events")
         .groupBy("event_type")
         .agg(hll_sketch_agg(col("user_id"), lit(12)).as("sk"))
       val per = sk.select(col("event_type"), hll_sketch_estimate(col("sk")).as("uniq_users"))
@@ -679,7 +671,7 @@ object Relational {
     // (sketch values are engine-specific); the spec pins rank-error bounds
     // against the exact distribution.
     "quantiles_approx" -> OpDef.rowsOnly { (s, dir) =>
-      tbl(s, dir, "events")
+      Tables(s, dir, "events")
         .groupBy("event_type")
         .agg(percentile_approx(col("value"),
           array(lit(0.5), lit(0.95), lit(0.99)), lit(1000)).as("q"))
@@ -697,7 +689,7 @@ object Relational {
         |  FROM events) q
         |WHERE rn = 1 ORDER BY user_id""".stripMargin
     ) { (s, dir) =>
-      tbl(s, dir, "events")
+      Tables(s, dir, "events")
         .groupBy("user_id")
         .agg(
           min_by(col("event_type"), struct(col("value"), col("event_id"))).as("bottom_type"),
@@ -714,7 +706,7 @@ object Relational {
         |  bit_xor(user_id) AS b_xor
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
     ) { (s, dir) =>
-      tbl(s, dir, "events")
+      Tables(s, dir, "events")
         .groupBy("event_type")
         .agg(
           bit_and(col("user_id")).as("b_and"),
@@ -740,8 +732,7 @@ object Relational {
         |FROM r WHERE rn <= 5
         |GROUP BY event_type ORDER BY event_type""".stripMargin
     ) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
-      tbl(s, dir, "events")
+      Tables(s, dir, "events")
         .groupBy("event_type")
         .agg(concat_ws(",", call_function("topk_weighted",
           col("user_id").cast(StringType), floor(col("value")).cast(LongType),
@@ -767,7 +758,7 @@ object Relational {
         |  string_agg(CAST(v AS VARCHAR), ',' ORDER BY event_type) AS map_sums
         |FROM per GROUP BY user_id ORDER BY user_id""".stripMargin
     ) { (s, dir) =>
-      val per = tbl(s, dir, "events")
+      val per = Tables(s, dir, "events")
         .groupBy("user_id", "event_type")
         .agg(sum(col("value").cast(DecimalType(18, 2))).as("v"))
       per.groupBy("user_id")
@@ -811,7 +802,7 @@ object Relational {
     ) { (s, dir) =>
       val w = Window.partitionBy("user_id")
       val horizon = col("t1") + expr("INTERVAL 7 DAY")
-      tbl(s, dir, "events")
+      Tables(s, dir, "events")
         .withColumn("t1",
           min(when(col("event_type") === "signup", col("ts"))).over(w))
         .withColumn("t2",
@@ -848,7 +839,7 @@ object Relational {
     ) { (s, dir) =>
       def dayNum(c: org.apache.spark.sql.Column) =
         datediff(c.cast(DateType), to_date(lit("1970-01-01")))
-      val ev = tbl(s, dir, "events")
+      val ev = Tables(s, dir, "events")
       val days = ev.select(dayNum(col("ts")).as("p")).distinct()
       val iv = ev.groupBy("user_id")
         .agg(dayNum(min("ts")).as("lo"), dayNum(max("ts")).as("hi"))
@@ -876,7 +867,7 @@ object Relational {
     ) { (s, dir) =>
       def dayNum(c: org.apache.spark.sql.Column) =
         datediff(c.cast(DateType), to_date(lit("1970-01-01")))
-      val iv = tbl(s, dir, "events").groupBy("user_id")
+      val iv = Tables(s, dir, "events").groupBy("user_id")
         .agg(dayNum(min("ts")).as("lo"), dayNum(max("ts")).as("hi"))
       val a = iv.select(col("user_id").as("ua"),
         col("lo").as("lo_a"), col("hi").as("hi_a"))
@@ -911,7 +902,7 @@ object Relational {
     ) { (s, dir) =>
       def dayNum(c: Column) =
         datediff(c.cast(DateType), to_date(lit("1970-01-01"))).cast(LongType)
-      val iv = tbl(s, dir, "events").groupBy("user_id")
+      val iv = Tables(s, dir, "events").groupBy("user_id")
         .agg(dayNum(min("ts")).as("lo"), dayNum(max("ts")).as("hi"))
       // ends-per-day over the bounded calendar grid, prefix-summed so
       // cum_before(d) = #intervals with hi < d; the grid is a broadcast
@@ -952,7 +943,7 @@ object Relational {
     ) { (s, dir) =>
       val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
       val dec = col("value").cast(DecimalType(18, 2))
-      tbl(s, dir, "events")
+      Tables(s, dir, "events")
         .withColumn("dv", dec - lag(dec, 1).over(w))
         .groupBy("user_id")
         .agg(coalesce(sum(when(col("dv") > 0, col("dv"))), lit(0))
@@ -978,7 +969,7 @@ object Relational {
         |FROM events e JOIN b USING (event_type)
         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
     ) { (s, dir) =>
-      val ev = tbl(s, dir, "events")
+      val ev = Tables(s, dir, "events")
       val bounds = ev.groupBy("event_type")
         .agg(min("value").as("lo"), max("value").as("hi"))
       ev.join(broadcast(bounds), "event_type")
@@ -1009,7 +1000,7 @@ object Relational {
          |WHERE ${parity.md5LongSql("CAST(user_id AS VARCHAR)")} % 10 = 0
          |GROUP BY event_type ORDER BY event_type""".stripMargin
     ) { (s, dir) =>
-      tbl(s, dir, "events")
+      Tables(s, dir, "events")
         .filter(md5Long(col("user_id").cast(StringType)) % 10 === 0)
         .groupBy("event_type")
         .agg(
@@ -1036,7 +1027,7 @@ object Relational {
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
     ) { (s, dir) =>
       val big = col("value") > 5.0
-      tbl(s, dir, "events")
+      Tables(s, dir, "events")
         .groupBy("event_type")
         .agg(
           count_if(big).as("n_big"),
@@ -1071,7 +1062,7 @@ object Relational {
         |  CAST(len(regexp_extract_all(str, 's.*?c.*?p')) AS BIGINT) AS n_seq
         |FROM s ORDER BY user_id""".stripMargin
     ) { (s, dir) =>
-      tbl(s, dir, "events")
+      Tables(s, dir, "events")
         .select(col("user_id"), struct(col("ts"), col("event_id"),
           when(col("event_type") === "signup", "s")
             .when(col("event_type") === "click", "c")
@@ -1102,8 +1093,7 @@ object Relational {
         |       ELSE COUNT(DISTINCT user_id) END AS uniq_wide
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
     ) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
-      tbl(s, dir, "events")
+      Tables(s, dir, "events")
         .groupBy("event_type")
         .agg(
           call_function("uniq_upto",
@@ -1127,8 +1117,7 @@ object Relational {
         |       ELSE COUNT(DISTINCT user_id) END AS uniq_wide
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
     ) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
-      val cells = tbl(s, dir, "events")
+      val cells = Tables(s, dir, "events")
         .groupBy(col("event_type"), to_date(col("ts")).as("day"))
         .agg(
           call_function("uniq_upto_state",
@@ -1191,7 +1180,7 @@ object Relational {
       // ONE fact-sized exchange. Sub-bucket skew cannot exceed the ≤8192
       // distinct cents per bucket times the per-value tie mass — the same
       // bound the pre-agg form had after its join-back.
-      val detail = tbl(s, dir, "lineitem")
+      val detail = Tables(s, dir, "lineitem")
         .select(col("l_returnflag"), col("l_extendedprice").as("v"),
           floor(col("l_quantity")).cast(LongType).as("wt"))
         .withColumn("bk", expr("CAST(v * 100 AS BIGINT) div 8192"))
@@ -1240,7 +1229,7 @@ object Relational {
     ) { (s, dir) =>
       def dayNum(c: org.apache.spark.sql.Column) =
         datediff(c.cast(DateType), to_date(lit("1970-01-01")))
-      val iv = tbl(s, dir, "events").groupBy("user_id")
+      val iv = Tables(s, dir, "events").groupBy("user_id")
         .agg(dayNum(min("ts")).as("lo"), dayNum(max("ts")).as("hi"))
       val deltas = iv.select(col("lo").as("d"), lit(1).as("x"))
         .unionAll(iv.select((col("hi") + 1).as("d"), lit(-1).as("x")))
@@ -1286,7 +1275,7 @@ object Relational {
     ) { (s, dir) =>
       val x = col("value").cast(DecimalType(18, 2))
       val y = get_json_object(col("props"), "$.k").cast(LongType)
-      val m = tbl(s, dir, "events")
+      val m = Tables(s, dir, "events")
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),
           sum(x).cast(DoubleType).as("sx"),
@@ -1329,7 +1318,7 @@ object Relational {
     ) { (s, dir) =>
       val v = col("value").cast(DecimalType(18, 2))
       val k = get_json_object(col("props"), "$.k").cast(LongType)
-      tbl(s, dir, "events")
+      Tables(s, dir, "events")
         .groupBy("event_type")
         .agg(
           sum(v * k).cast(DoubleType).as("svw"),
@@ -1364,7 +1353,7 @@ object Relational {
         |  CAST(tot AS BIGINT) AS n_events
         |FROM m ORDER BY event_type""".stripMargin
     ) { (s, dir) =>
-      val c = tbl(s, dir, "events")
+      val c = Tables(s, dir, "events")
         .groupBy("event_type", "user_id").agg(count(lit(1)).as("n"))
       c.groupBy("event_type")
         .agg(sum("n").as("tot"),
@@ -1401,7 +1390,7 @@ object Relational {
     ) { (s, dir) =>
       def dayNum(c: org.apache.spark.sql.Column) =
         datediff(c.cast(DateType), to_date(lit("1970-01-01")))
-      val ev = tbl(s, dir, "events").filter(col("user_id") < 40)
+      val ev = Tables(s, dir, "events").filter(col("user_id") < 40)
         .select(col("user_id"), dayNum(col("ts")).as("d"))
       val cnt = ev.groupBy("user_id", "d").agg(count(lit(1)).as("n"))
       val grid = ev.groupBy("user_id")
@@ -1443,7 +1432,7 @@ object Relational {
         |ORDER BY u.user_id""".stripMargin
     ) { (s, dir) =>
       val w = Window.partitionBy("user_id")
-      tbl(s, dir, "events")
+      Tables(s, dir, "events")
         .withColumn("t1",
           min(when(col("event_type") === "signup", col("ts"))).over(w))
         .withColumn("t2",
@@ -1478,7 +1467,7 @@ object Relational {
         |  string_agg(CAST(mx AS VARCHAR), ',' ORDER BY event_type) AS map_maxs
         |FROM per GROUP BY user_id ORDER BY user_id""".stripMargin
     ) { (s, dir) =>
-      val per = tbl(s, dir, "events")
+      val per = Tables(s, dir, "events")
         .groupBy("user_id", "event_type")
         .agg(min(col("value").cast(DecimalType(18, 2))).as("mn"),
           max(col("value").cast(DecimalType(18, 2))).as("mx"))
@@ -1502,7 +1491,7 @@ object Relational {
         |  CAST(COUNT(DISTINCT event_type) AS BIGINT) AS n_uniq
         |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin
     ) { (s, dir) =>
-      tbl(s, dir, "events")
+      Tables(s, dir, "events")
         .groupBy("user_id")
         .agg(
           concat_ws(",", sort_array(collect_set(col("event_type")))).as("types"),
@@ -1531,7 +1520,7 @@ object Relational {
     ) { (s, dir) =>
       val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
       val wAll = Window.partitionBy("user_id")
-      tbl(s, dir, "events")
+      Tables(s, dir, "events")
         .select(col("user_id"), col("value").cast(DoubleType).as("x"),
           row_number().over(w).as("rn"), count(lit(1)).over(wAll).as("n"))
         .groupBy("user_id")
@@ -1577,7 +1566,7 @@ object Relational {
         |FROM v""".stripMargin
     ) { (s, dir) =>
       val d = col("value").cast(DecimalType(18, 2))
-      val m = tbl(s, dir, "events").agg(
+      val m = Tables(s, dir, "events").agg(
         count(when(col("event_type") === "click", 1)).as("nx"),
         count(when(col("event_type") === "view", 1)).as("ny"),
         sum(when(col("event_type") === "click", d)).cast(DoubleType).as("sx"),
@@ -1630,7 +1619,7 @@ object Relational {
         |    / sqrt(nx * ny / 12.0 * ((n + 1) - t3 / (n * (n - 1)))) AS z_score
         |FROM u""".stripMargin
     ) { (s, dir) =>
-      val cnt = tbl(s, dir, "events")
+      val cnt = Tables(s, dir, "events")
         .filter(col("event_type").isin("click", "view"))
         .select(col("value").cast(DecimalType(18, 2)).as("v"),
           (col("event_type") === "click").as("isx"))
@@ -1687,7 +1676,7 @@ object Relational {
         |FROM c ORDER BY event_type""".stripMargin
     ) { (s, dir) =>
       val k = get_json_object(col("props"), "$.k").cast(LongType)
-      val m = tbl(s, dir, "events")
+      val m = Tables(s, dir, "events")
         .select(col("event_type"), k.as("k"))
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),
@@ -1743,7 +1732,7 @@ object Relational {
         .orderBy(col("ts"), col("event_id"))
       val wD = Window.partitionBy("event_type", "day")
         .orderBy(col("ts").desc, col("event_id").desc)
-      tbl(s, dir, "events")
+      Tables(s, dir, "events")
         .select(col("event_type"),
           date_format(col("ts").cast(DateType), "yyyy-MM-dd").as("day"),
           col("value").cast(DecimalType(18, 2)).as("v"),
@@ -1788,7 +1777,7 @@ object Relational {
       val w = Window.partitionBy("user_id").orderBy("us", "event_id")
       val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val prev = lag(col("us"), 1).over(w)
-      tbl(s, dir, "events")
+      Tables(s, dir, "events")
         .select(col("user_id"), expr("unix_micros(ts)").as("us"), col("event_id"))
         .withColumn("ns",
           when(prev.isNull || col("us") - prev > 86400000000L, 1).otherwise(0))
@@ -1842,7 +1831,7 @@ object Relational {
       val w = Window.partitionBy("user_id").orderBy("lo", "hi", "event_id")
       val prevMax = max("hi").over(w.rowsBetween(Window.unboundedPreceding, -1))
       val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      tbl(s, dir, "events")
+      Tables(s, dir, "events")
         .select(col("user_id"), col("event_id"), day.as("lo"),
           (day + get_json_object(col("props"), "$.k").cast(LongType) % 7).as("hi"))
         .withColumn("ni",
@@ -1883,7 +1872,7 @@ object Relational {
         |FROM a WHERE n >= 2 AND dt_us > 0 ORDER BY user_id""".stripMargin
     ) { (s, dir) =>
       val ord = struct(col("us"), col("event_id"))
-      tbl(s, dir, "events")
+      Tables(s, dir, "events")
         .select(col("user_id"), expr("unix_micros(ts)").as("us"), col("event_id"),
           col("value").cast(DecimalType(18, 2)).as("v"))
         .groupBy("user_id")
@@ -1934,7 +1923,7 @@ object Relational {
         |    AS cramers_v
         |FROM x""".stripMargin
     ) { (s, dir) =>
-      val c = tbl(s, dir, "events")
+      val c = Tables(s, dir, "events")
         .groupBy(col("event_type").as("t"),
           (get_json_object(col("props"), "$.k").cast(LongType) / 10)
             .cast(LongType).as("b"))
@@ -1974,7 +1963,7 @@ object Relational {
         |SELECT event_id, CAST(v AS DOUBLE) AS v, CAST(rnk AS BIGINT) AS rnk
         |FROM r WHERE rnk % 97 = 0 OR rnk <= 10 ORDER BY rnk""".stripMargin
     ) { (s, dir) =>
-      val e = tbl(s, dir, "events")
+      val e = Tables(s, dir, "events")
         .select(col("event_id"), col("value").cast(DecimalType(18, 2)).as("v"))
       val grain = e.groupBy("v").agg(count(lit(1)).as("c"))
         .withColumn("cum", sum("c").over(Window.orderBy(col("v").desc)
@@ -2017,7 +2006,7 @@ object Relational {
         |FROM v""".stripMargin
     ) { (s, dir) =>
       val d = col("value").cast(DecimalType(18, 2))
-      val m = tbl(s, dir, "events").agg(
+      val m = Tables(s, dir, "events").agg(
         count(when(col("event_type") === "click", 1)).as("nx"),
         count(when(col("event_type") === "view", 1)).as("ny"),
         sum(when(col("event_type") === "click", d)).cast(DoubleType).as("sx"),
@@ -2068,7 +2057,7 @@ object Relational {
         |    * sqrt(CAST(nx AS DOUBLE) * ny / (nx + ny)) AS ks_z
         |FROM m""".stripMargin
     ) { (s, dir) =>
-      val cnt = tbl(s, dir, "events")
+      val cnt = Tables(s, dir, "events")
         .filter(col("event_type").isin("click", "view"))
         .select(col("value").cast(DecimalType(18, 2)).as("v"),
           (col("event_type") === "click").as("isx"))
@@ -2128,7 +2117,7 @@ object Relational {
       // feeds THREE differently-pruned consumers (v grain, k grain, the
       // rank-attach join), so without it the events scan and the per-row
       // JSON k-prop extraction (the dominant per-row cost) run three times.
-      val f = graft.CacheRegistry.track(tbl(s, dir, "events").select(
+      val f = graft.CacheRegistry.track(Tables(s, dir, "events").select(
         col("value").cast(DecimalType(18, 2)).as("v"),
         get_json_object(col("props"), "$.k").cast(LongType).as("k"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
@@ -2196,7 +2185,7 @@ object Relational {
         |  round((ht + hb - htb) / hb, 4) AS u_b_given_t
         |FROM h""".stripMargin
     ) { (s, dir) =>
-      val base = tbl(s, dir, "events").select(col("event_type").as("t"),
+      val base = Tables(s, dir, "events").select(col("event_type").as("t"),
         (get_json_object(col("props"), "$.k").cast(LongType) / 10)
           .cast(LongType).as("b"))
       val cells = base.cube("t", "b").agg(count(lit(1)).as("n"))
@@ -2240,7 +2229,7 @@ object Relational {
          |FROM r WHERE rn <= 5 GROUP BY event_type
          |ORDER BY event_type""".stripMargin
     ) { (s, dir) =>
-      val h = tbl(s, dir, "events").select(col("event_type"), col("event_id"),
+      val h = Tables(s, dir, "events").select(col("event_type"), col("event_id"),
         parity.md5Long(col("event_id").cast(StringType)).as("h"))
       h.withColumn("rn", row_number().over(
           Window.partitionBy("event_type").orderBy("h", "event_id")))
@@ -2292,7 +2281,7 @@ object Relational {
         |  CAST(mad.mad AS DOUBLE) AS mad, med.n
         |FROM med JOIN mad ON med.t = mad.t ORDER BY 1""".stripMargin
     ) { (s, dir) =>
-      val g = tbl(s, dir, "events")
+      val g = Tables(s, dir, "events")
         .groupBy(col("event_type").as("t"),
           col("value").cast(DecimalType(18, 2)).as("v"))
         .agg(count(lit(1)).as("c"))
@@ -2346,7 +2335,7 @@ object Relational {
     ) { (s, dir) =>
       val day = datediff(col("ts").cast(DateType),
         lit("1970-01-01").cast(DateType))
-      val o = tbl(s, dir, "events")
+      val o = Tables(s, dir, "events")
         .select(col("user_id"), col("value").cast(DoubleType).as("x"),
           day.as("d"))
         .withColumn("last_d",
@@ -2381,7 +2370,7 @@ object Relational {
         |FROM m""".stripMargin
     ) { (s, dir) =>
       val d = col("value").cast(DecimalType(18, 2))
-      val g = tbl(s, dir, "events").groupBy("event_type")
+      val g = Tables(s, dir, "events").groupBy("event_type")
         .agg(count(lit(1)).as("ng"), sum(d).as("sg"), sum(d * d).as("qg"))
       val m = g.agg(
         count(lit(1)).as("k"), sum("ng").as("n"),
@@ -2434,7 +2423,7 @@ object Relational {
         |    * (CAST(COALESCE(v9b, v9a) AS DOUBLE) - CAST(v9a AS DOUBLE)) AS q90
         |FROM sel ORDER BY 1""".stripMargin
     ) { (s, dir) =>
-      val g = tbl(s, dir, "events")
+      val g = Tables(s, dir, "events")
         .groupBy(col("event_type").as("t"),
           col("value").cast(DecimalType(18, 2)).as("v"))
         .agg(count(lit(1)).as("c"))
@@ -2499,7 +2488,7 @@ object Relational {
         |FROM j GROUP BY t ORDER BY 1""".stripMargin
     ) { (s, dir) =>
       val dec = col("value").cast(DecimalType(18, 2))
-      val f = tbl(s, dir, "events")
+      val f = Tables(s, dir, "events")
         .select(col("event_type").as("t"), dec.as("v"),
           (dec * 100).cast(LongType).as("xc"))
       val big = DecimalType(38, 0)
@@ -2555,7 +2544,7 @@ object Relational {
       def spread(c: Column): Column =
         step(step(step(step(c, 8, 16711935L), 4, 252645135L),
           2, 858993459L), 1, 1431655765L)
-      val f = tbl(s, dir, "events").select(
+      val f = Tables(s, dir, "events").select(
         col("user_id").bitwiseAND(lit(65535L)).as("a"),
         (col("value").cast(DecimalType(18, 2)) * 100).cast(LongType)
           .bitwiseAND(lit(65535L)).as("b"))
@@ -2609,8 +2598,8 @@ object Relational {
       // width UTF-8 through FOUR join+agg rounds; 8-byte keys cut the
       // standalone sf1 time 30.3 s → (measured below) and shrink every
       // exchange of the iteration pipeline at any scale.
-      val e0 = tbl(s, dir, "lineitem")
-        .join(tbl(s, dir, "orders"),
+      val e0 = Tables(s, dir, "lineitem")
+        .join(Tables(s, dir, "orders"),
           col("l_orderkey") === col("o_orderkey"))
         .select((col("l_suppkey") * 2).as("src"),
           (col("o_custkey") * 2 + 1).as("dst"))
@@ -2673,7 +2662,7 @@ object Relational {
         |  CAST(COUNT(*) AS BIGINT) AS n_users
         |FROM lv GROUP BY 1 ORDER BY 1""".stripMargin
     ) { (s, dir) =>
-      val str = tbl(s, dir, "events")
+      val str = Tables(s, dir, "events")
         .filter(col("event_type").isin("signup", "click", "purchase"))
         .select(col("user_id"), struct(col("ts"), col("event_id"),
           when(col("event_type") === "signup", "s")
@@ -2721,7 +2710,7 @@ object Relational {
         |  CAST(COUNT(*) AS BIGINT) AS n_users
         |FROM lv GROUP BY 1 ORDER BY 1""".stripMargin
     ) { (s, dir) =>
-      val str = tbl(s, dir, "events")
+      val str = Tables(s, dir, "events")
         .filter(col("event_type").isin("signup", "click", "purchase"))
         .select(col("user_id"), struct(col("ts"), col("event_id"),
           when(col("event_type") === "signup", "s")
@@ -2767,7 +2756,7 @@ object Relational {
         |FROM s1 JOIN s2 USING (user_id) JOIN s3 USING (user_id)
         |ORDER BY s1.user_id""".stripMargin
     ) { (s, dir) =>
-      val m = tbl(s, dir, "events")
+      val m = Tables(s, dir, "events")
         .filter(col("event_type").isin("signup", "click", "purchase"))
         .select(col("user_id"),
           struct(unix_micros(col("ts")).as("us"), col("event_id").as("eid"))
@@ -2807,7 +2796,7 @@ object Relational {
     ) { (s, dir) =>
       val cents = (col("value").cast(DecimalType(18, 2)) * 100)
         .cast(LongType)
-      tbl(s, dir, "events")
+      Tables(s, dir, "events")
         .select(col("event_type"), cents.as("c"), col("ts"), col("event_id"))
         .withColumn("rn", row_number().over(Window.partitionBy("event_type")
           .orderBy(col("ts").desc, col("event_id").desc)))
@@ -2849,7 +2838,7 @@ object Relational {
         |  MIN(CASE WHEN cum >= ((n-1) * 3 + 3) // 4 + 1 THEN c END) AS q75_high_c
         |FROM w GROUP BY 1 ORDER BY 1""".stripMargin
     ) { (s, dir) =>
-      val g = tbl(s, dir, "events")
+      val g = Tables(s, dir, "events")
         .select(col("event_type").as("t"),
           (col("value").cast(DecimalType(18, 2)) * 100)
             .cast(LongType).as("c"))
@@ -2894,7 +2883,7 @@ object Relational {
     ) { (s, dir) =>
       val cents = (col("value").cast(DecimalType(18, 2)) * 100)
         .cast(LongType)
-      tbl(s, dir, "events")
+      Tables(s, dir, "events")
         .select(col("event_type"), cents.as("c"), col("event_id"))
         .withColumn("rn", row_number().over(Window.partitionBy("event_type")
           .orderBy(col("c"), col("event_id"))))
@@ -2930,7 +2919,7 @@ object Relational {
     ) { (s, dir) =>
       val day = datediff(col("ts").cast(DateType),
         lit("1970-01-01").cast(DateType))
-      val o = tbl(s, dir, "events")
+      val o = Tables(s, dir, "events")
         .select(col("user_id"), col("value").cast(DoubleType).as("x"),
           day.as("d"))
         .withColumn("last_d",

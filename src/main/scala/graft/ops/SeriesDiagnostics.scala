@@ -1,8 +1,8 @@
 package graft.ops
 
-import graft.{GraftSession, OpDef}
+import graft.OpDef
 import graft.sources.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -16,11 +16,6 @@ import org.apache.spark.sql.types._
   * (Consolidated r9 from the r8 chronology files - no behavior change.)
   */
 object SeriesDiagnostics {
-
-  private def tbl(s: SparkSession, dir: String, n: String): DataFrame = {
-    GraftSession.tune(s)
-    Tables(s, dir, n)
-  }
 
   private val kProp = get_json_object(col("props"), "$.k").cast(LongType)
   private val centsL =
@@ -50,7 +45,7 @@ object SeriesDiagnostics {
         |FROM f ORDER BY event_id""".stripMargin
     ) { (s, dir) =>
       val w = Window.partitionBy("user_id").orderBy("ed").rangeBetween(-6, 0)
-      tbl(s, dir, "events")
+      Tables(s, dir, "events")
         .select(col("event_id"), col("user_id"), epochDay.as("ed"),
           centsL.as("c"))
         .withColumn("trail7_cents", sum("c").over(w).cast(LongType))
@@ -102,7 +97,7 @@ object SeriesDiagnostics {
         |LEFT JOIN ta ON q.t = ta.t
         |ORDER BY 1, 2""".stripMargin
     ) { (s, dir) =>
-      val g = tbl(s, dir, "events")
+      val g = Tables(s, dir, "events")
         .groupBy(col("event_type").as("t"), epochDay.as("d"))
         .agg(count(lit(1)).cast(LongType).as("n"))
       val w7 = Window.partitionBy("t").orderBy("d").rowsBetween(-3, 3)
@@ -163,7 +158,7 @@ object SeriesDiagnostics {
         |    / sqrt((sww - CAST(sw AS DOUBLE) * sw / k) / (k - 1)) END, 4) AS z
         |FROM w WHERE k = 7 ORDER BY t, d""".stripMargin
     ) { (s, dir) =>
-      val g = tbl(s, dir, "events")
+      val g = Tables(s, dir, "events")
         .select(col("event_type").as("t"), epochDay.as("d"), centsL.as("c"))
         .groupBy("t", "d").agg(sum("c").cast(LongType).as("s"))
       val tw = Window.partitionBy("t").orderBy("d").rowsBetween(-6, 0)
@@ -223,7 +218,7 @@ object SeriesDiagnostics {
         |    AS autocorr
         |FROM m ORDER BY event_type, k""".stripMargin
     ) { (s, dir) =>
-      val g = tbl(s, dir, "events")
+      val g = Tables(s, dir, "events")
         .select(col("event_type").as("t"), epochDay.as("d"), centsL.as("c"))
         .groupBy("t", "d").agg(sum("c").cast(LongType).as("s"))
       val w = Window.partitionBy("t").orderBy("d")
@@ -286,7 +281,7 @@ object SeriesDiagnostics {
         |FROM w GROUP BY 1 ORDER BY 1""".stripMargin
     ) { (s, dir) =>
       val lagW = Window.partitionBy("user_id").orderBy("us", "event_id")
-      val l = tbl(s, dir, "events")
+      val l = Tables(s, dir, "events")
         .select(col("event_type").as("t"), col("user_id"),
           expr("unix_micros(ts)").as("us"), col("event_id"))
         .withColumn("gap_us", col("us") - lag(col("us"), 1).over(lagW))
@@ -328,7 +323,7 @@ object SeriesDiagnostics {
         |    ROWS BETWEEN 6 PRECEDING AND CURRENT ROW) AS BIGINT) AS med7
         |FROM g ORDER BY t, d""".stripMargin
     ) { (s, dir) =>
-      val g = tbl(s, dir, "events")
+      val g = Tables(s, dir, "events")
         .select(col("event_type").as("t"), epochDay.as("d"), centsL.as("c"))
         .groupBy("t", "d").agg(sum("c").cast(LongType).as("s"))
       val tw = Window.partitionBy("t").orderBy("d").rowsBetween(-6, 0)
@@ -361,7 +356,7 @@ object SeriesDiagnostics {
         |  CAST(CASE WHEN rk = 1 THEN 1 ELSE 0 END AS BIGINT) AS is_peak
         |FROM w ORDER BY t, h""".stripMargin
     ) { (s, dir) =>
-      val g = tbl(s, dir, "events")
+      val g = Tables(s, dir, "events")
         .groupBy(col("event_type").as("t"),
           hour(col("ts")).cast(LongType).as("h"))
         .agg(count(lit(1)).as("n"))
@@ -407,7 +402,7 @@ object SeriesDiagnostics {
         |    AS pearson_resid
         |FROM w ORDER BY dow, h""".stripMargin
     ) { (s, dir) =>
-      val g = tbl(s, dir, "events")
+      val g = Tables(s, dir, "events")
         .groupBy(
           (dayofweek(col("ts").cast(DateType)) - 1).cast(LongType).as("dow"),
           hour(col("ts")).cast(LongType).as("h"))
@@ -449,7 +444,7 @@ object SeriesDiagnostics {
         |    / (CAST(st AS DOUBLE) / nt), 4) AS factor
         |FROM w ORDER BY t, dow""".stripMargin
     ) { (s, dir) =>
-      val g = tbl(s, dir, "events")
+      val g = Tables(s, dir, "events")
         .groupBy(col("event_type").as("t"),
           (dayofweek(col("ts").cast(DateType)) - 1).cast(LongType).as("dow"))
         .agg(count(lit(1)).as("n"), sum(centsL).cast(LongType).as("s"))
@@ -486,7 +481,7 @@ object SeriesDiagnostics {
         |  round(sqrt(q / k - (s / k) * (s / k)) / (s / k), 4) AS cv
         |FROM m ORDER BY event_type""".stripMargin
     ) { (s, dir) =>
-      val g = tbl(s, dir, "events")
+      val g = Tables(s, dir, "events")
         .select(col("event_type").as("t"), epochDay.as("d"))
         .groupBy("t", "d").agg(count(lit(1)).as("n"))
       val m = g.groupBy("t").agg(
@@ -525,7 +520,7 @@ object SeriesDiagnostics {
         |  round((CAST(s AS DOUBLE) - prev) / prev, 4) AS wow_pct
         |FROM l ORDER BY t, wk""".stripMargin
     ) { (s, dir) =>
-      val g = tbl(s, dir, "events")
+      val g = Tables(s, dir, "events")
         .select(col("event_type").as("t"),
           parity.floorDiv(
             datediff(col("ts").cast("date"), lit("1970-01-01").cast("date")), 7)
@@ -565,7 +560,7 @@ object SeriesDiagnostics {
     ) { (s, dir) =>
       val glyphs = array(Seq("▁", "▂", "▃", "▄", "▅", "▆", "▇", "█")
         .map(lit): _*)
-      val g = tbl(s, dir, "events")
+      val g = Tables(s, dir, "events")
         .select(col("event_type").as("t"), epochDay.as("d"))
         .groupBy("t", "d").agg(count(lit(1)).as("c"))
       val m = g.withColumn("mx", max("c").over(Window.partitionBy("t")))
@@ -596,8 +591,7 @@ object SeriesDiagnostics {
     // rows), the oracle as 8 unrolled argmax CTE steps in the same
     // integer arithmetic.
     "ts_downsample_lttb" -> OpDef(lttbOracleSql) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
-      val g = tbl(s, dir, "events")
+      val g = Tables(s, dir, "events")
         .select(col("event_type").as("t"), epochDay.as("d"), centsL.as("c"))
         .groupBy("t", "d").agg(sum("c").cast(LongType).as("s"))
       val arr = g.groupBy("t")
@@ -648,7 +642,7 @@ object SeriesDiagnostics {
         |  cusum AS cusum_scaled, n AS n_days
         |FROM c WHERE rk = 1 ORDER BY 1""".stripMargin
     ) { (s, dir) =>
-      val g = tbl(s, dir, "events")
+      val g = Tables(s, dir, "events")
         .select(col("event_type").as("t"), epochDay.as("d"))
         .groupBy("t", "d").agg(count(lit(1)).as("x"))
       val byT = Window.partitionBy("t")

@@ -1,10 +1,10 @@
 package graft.ops
 
-import graft.{GraftSession, OpDef}
+import graft.OpDef
 import graft.cdc.ChangeLoader
 import graft.sources.{Changes, Tables}
 import graft.streaming.StreamOps
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Oracle-checked BATCH shapes of the streaming layer (SURVEY §2.4 + §2.1
@@ -14,11 +14,6 @@ import org.apache.spark.sql.functions._
   * (watermarks, state, exactly-once sink) is covered by ScalaTest specs.
   */
 object StreamQueries {
-
-  private def ev(s: SparkSession, dir: String): DataFrame = {
-    GraftSession.tune(s)
-    Tables(s, dir, "events")
-  }
 
   private def withCh(body: String): String =
     s"WITH ch AS (\n${Changes.changesSql}\n)\n$body"
@@ -30,7 +25,7 @@ object StreamQueries {
         |  COUNT(*) AS n,
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
         |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-    ) { (s, dir) => StreamOps.windowedCounts(ev(s, dir)).orderBy("day", "event_type") },
+    ) { (s, dir) => StreamOps.windowedCounts(Tables(s, dir, "events")).orderBy("day", "event_type") },
 
     // ---- #43 gap-based sessionization ------------------------------------
     // session_window(gap=4h) ≡ gaps-and-islands: a new session starts when
@@ -53,14 +48,14 @@ object StreamQueries {
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
         |FROM s GROUP BY user_id, sid
         |ORDER BY user_id, session_start""".stripMargin
-    ) { (s, dir) => StreamOps.sessionize(ev(s, dir)).orderBy("user_id", "session_start") },
+    ) { (s, dir) => StreamOps.sessionize(Tables(s, dir, "events")).orderBy("user_id", "session_start") },
 
     // ---- #62 windowed distinct users (exact, streaming-capable) ----------
     "stream_uniq" -> OpDef(
       """SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day, event_type,
         |  COUNT(DISTINCT user_id) AS uniq_users
         |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-    ) { (s, dir) => StreamOps.windowedUniques(ev(s, dir)).orderBy("day", "event_type") },
+    ) { (s, dir) => StreamOps.windowedUniques(Tables(s, dir, "events")).orderBy("day", "event_type") },
 
     // ---- #177 windowed fixed-probe CDF counters --------------------------
     // Live SLO-threshold monitoring (share of values ≤ X per window)
@@ -78,7 +73,7 @@ object StreamQueries {
         |  CAST(COUNT(CASE WHEN c <= 7500 THEN 1 END) AS BIGINT) AS le_7500,
         |  CAST(COUNT(CASE WHEN c <= 9000 THEN 1 END) AS BIGINT) AS le_9000
         |FROM f GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-    ) { (s, dir) => StreamOps.windowedCdf(ev(s, dir)).orderBy("day", "event_type") },
+    ) { (s, dir) => StreamOps.windowedCdf(Tables(s, dir, "events")).orderBy("day", "event_type") },
 
     // ---- #221 windowed z-score anomaly vs a fixed baseline ---------------
     // The live twin of anomaly_zscore (#156), stream_psi-shaped: per
@@ -107,7 +102,7 @@ object StreamQueries {
         |    END, 4) AS z
         |FROM g JOIN b USING (t) ORDER BY 1, 2""".stripMargin
     ) { (s, dir) =>
-      val e = ev(s, dir)
+      val e = Tables(s, dir, "events")
       val cents = (col("value").cast("decimal(18,2)") * 100).cast("long")
       // per-type baseline off the bounded (type, day) grain — the
       // stream_psi bounded-metadata discipline
@@ -151,7 +146,7 @@ object StreamQueries {
         |FROM cur JOIN base USING (b) JOIN ct ON cur.d = ct.d CROSS JOIN bt
         |GROUP BY 1, 2 ORDER BY 1""".stripMargin
     ) { (s, dir) =>
-      val e = ev(s, dir)
+      val e = Tables(s, dir, "events")
       val b = graft.ops.parity.floorDiv(
         get_json_object(col("props"), "$.k").cast("long"), 10)
       // 10-row baseline histogram (bounded metadata): decile → share
@@ -187,7 +182,7 @@ object StreamQueries {
         |WHERE dwell_us IS NOT NULL AND dwell_us <= 1800 * 1000000
         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
     ) { (s, dir) =>
-      StreamOps.windowedDwell(ev(s, dir)).orderBy("day", "event_type")
+      StreamOps.windowedDwell(Tables(s, dir, "events")).orderBy("day", "event_type")
     },
 
     // ---- #66 windowed heavy hitters (streaming-capable topK) -------------
@@ -210,7 +205,7 @@ object StreamQueries {
         |FROM r WHERE rn <= 3
         |GROUP BY day, event_type ORDER BY day, event_type""".stripMargin
     ) { (s, dir) =>
-      StreamOps.windowedTopK(ev(s, dir))
+      StreamOps.windowedTopK(Tables(s, dir, "events"))
         .withColumn("top_users", concat_ws(",", col("top_users")))
         .orderBy("day", "event_type")
     },
@@ -222,7 +217,7 @@ object StreamQueries {
     // driver runs against the exact order statistics of the same parquet
     // rows (r14: the #58-style pin this row previously lacked).
     "stream_quantiles" -> OpDef.rowsOnly { (s, dir) =>
-      StreamOps.windowedQuantiles(ev(s, dir)).orderBy("day", "event_type")
+      StreamOps.windowedQuantiles(Tables(s, dir, "events")).orderBy("day", "event_type")
     },
 
     // ---- #310 windowed KMV distinct sketches (streaming uniqTheta) --------
@@ -236,7 +231,7 @@ object StreamQueries {
         |    AS BIGINT) AS n_uniq
         |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
     ) { (s, dir) =>
-      StreamOps.windowedUniqTheta(ev(s, dir)).orderBy("day", "event_type")
+      StreamOps.windowedUniqTheta(Tables(s, dir, "events")).orderBy("day", "event_type")
     },
 
     // #317 — the EXACT bitmap twin of stream_uniq_theta: per-(1-day
@@ -249,7 +244,7 @@ object StreamQueries {
         |  CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_uniq
         |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
     ) { (s, dir) =>
-      StreamOps.windowedBitmapUniq(ev(s, dir)).orderBy("day", "event_type")
+      StreamOps.windowedBitmapUniq(Tables(s, dir, "events")).orderBy("day", "event_type")
     },
 
     // ---- #106 hopping (sliding) windowed counts --------------------------
@@ -267,7 +262,7 @@ object StreamQueries {
         |  COUNT(*) AS n
         |FROM u GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
     ) { (s, dir) =>
-      StreamOps.hoppingCounts(ev(s, dir)).orderBy("window_start", "event_type")
+      StreamOps.hoppingCounts(Tables(s, dir, "events")).orderBy("window_start", "event_type")
     },
 
     // ---- #107 stream-stream interval join (batch shape) ------------------
@@ -284,7 +279,7 @@ object StreamQueries {
         |  AND p.ts > c.ts AND p.ts <= c.ts + INTERVAL 1 HOUR
         |GROUP BY 1 ORDER BY 1""".stripMargin
     ) { (s, dir) =>
-      StreamOps.clickPurchasePairs(ev(s, dir))
+      StreamOps.clickPurchasePairs(Tables(s, dir, "events"))
         .groupBy(col("c_user").as("user_id"))
         .agg(count(lit(1)).as("n_pairs"),
           min(unix_timestamp(col("p_ts")) - unix_timestamp(col("c_ts")))
@@ -296,7 +291,7 @@ object StreamQueries {
     "stream_dedup" -> OpDef(
       """SELECT user_id, event_type, MIN(event_id) AS event_id
         |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-    ) { (s, dir) => StreamOps.dedupStream(ev(s, dir)).orderBy("user_id", "event_type") },
+    ) { (s, dir) => StreamOps.dedupStream(Tables(s, dir, "events")).orderBy("user_id", "event_type") },
 
     // ---- #266 live OHLC candlestick bars (batch shape) -------------------
     // The streaming twin of #262: the same windowed aggregate that keeps
@@ -316,7 +311,7 @@ object StreamQueries {
         |FROM events
         |GROUP BY 1, 2 ORDER BY event_type, bar_hour""".stripMargin
     ) { (s, dir) =>
-      StreamOps.ohlcBars(ev(s, dir)).orderBy("event_type", "bar_hour")
+      StreamOps.ohlcBars(Tables(s, dir, "events")).orderBy("event_type", "bar_hour")
     },
 
     // ---- #276 live hourly VWAP (batch shape) -----------------------------
@@ -345,7 +340,7 @@ object StreamQueries {
         |  CAST(v6 AS DOUBLE) / 1000000 AS vwap, w_total, n_trades
         |FROM v ORDER BY event_type, bar_hour""".stripMargin
     ) { (s, dir) =>
-      StreamOps.vwapBars(ev(s, dir)).orderBy("event_type", "bar_hour")
+      StreamOps.vwapBars(Tables(s, dir, "events")).orderBy("event_type", "bar_hour")
     },
 
     // ---- #285 live windowed correlation (batch shape) ---------------------
@@ -384,7 +379,7 @@ object StreamQueries {
         |WHERE n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0
         |ORDER BY event_type, day""".stripMargin
     ) { (s, dir) =>
-      StreamOps.corrBars(ev(s, dir)).orderBy("event_type", "day")
+      StreamOps.corrBars(Tables(s, dir, "events")).orderBy("event_type", "day")
     },
 
     // ---- #278 live per-account balances (batch shape) --------------------
@@ -414,7 +409,7 @@ object StreamQueries {
         |  CAST(MAX(bal) AS DOUBLE) AS max_balance
         |FROM run GROUP BY user_id ORDER BY user_id""".stripMargin
     ) { (s, dir) =>
-      StreamOps.balanceLive(ev(s, dir)).orderBy("user_id")
+      StreamOps.balanceLive(Tables(s, dir, "events")).orderBy("user_id")
     },
 
     // ---- #327 live per-user deltaSum (batch shape) ------------------------
@@ -439,7 +434,7 @@ object StreamQueries {
         |  CAST(MAX(CASE WHEN rl = 1 THEN v END) AS DOUBLE) AS last_value
         |FROM d GROUP BY user_id ORDER BY user_id""".stripMargin
     ) { (s, dir) =>
-      StreamOps.deltaSumLive(ev(s, dir)).orderBy("user_id")
+      StreamOps.deltaSumLive(Tables(s, dir, "events")).orderBy("user_id")
     },
 
     // ---- #281 live per-account max drawdown (batch shape) ----------------
@@ -471,7 +466,7 @@ object StreamQueries {
         |  CAST(arg_max(bal, event_id) AS DOUBLE) AS final_balance
         |FROM pk GROUP BY user_id ORDER BY user_id""".stripMargin
     ) { (s, dir) =>
-      StreamOps.drawdownLive(ev(s, dir)).orderBy("user_id")
+      StreamOps.drawdownLive(Tables(s, dir, "events")).orderBy("user_id")
     },
 
     // ---- #304 live Bollinger band breach alerts (batch shape) -------------
@@ -510,7 +505,7 @@ object StreamQueries {
         |    AS breach
         |FROM s ORDER BY event_type, day""".stripMargin
     ) { (s, dir) =>
-      StreamOps.bollingerLive(ev(s, dir)).orderBy("event_type", "day")
+      StreamOps.bollingerLive(Tables(s, dir, "events")).orderBy("event_type", "day")
     },
 
     // ---- #282 live conversion funnel (batch shape) -----------------------
@@ -540,7 +535,7 @@ object StreamQueries {
         |            WHEN t1 IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS level
         |FROM u ORDER BY user_id""".stripMargin
     ) { (s, dir) =>
-      StreamOps.funnelLive(ev(s, dir)).orderBy("user_id")
+      StreamOps.funnelLive(Tables(s, dir, "events")).orderBy("user_id")
     },
 
     // ---- #260 streaming simhash near-dup screen (batch shape) ------------
@@ -584,8 +579,6 @@ object StreamQueries {
         |FROM s LEFT JOIN m ON s.doc_id = m.did
         |ORDER BY 1""".stripMargin
     ) { (s, dir) =>
-      GraftSession.tune(s)
-      graft.functions.GraftFunctions.register(s)
       val signed = Tables(s, dir, "documents")
         .select(col("doc_id"),
           call_function("simhash64", array_distinct(split(col("text"), " ")))
@@ -661,7 +654,6 @@ object StreamQueries {
         |  AND d.doc_id NOT IN (SELECT doc_id FROM cont)
         |ORDER BY d.doc_id""".stripMargin
     ) { (s, dir) =>
-      GraftSession.tune(s)
       val docsDf = Tables(s, dir, "documents")
       val bench = graft.dedup.Dedup
         .gramRows(docsDf.filter(col("doc_id") % 10 === 0), 8)
@@ -699,7 +691,6 @@ object StreamQueries {
           |SELECT pk AS user_id, amount, kval, note FROM merged WHERE rn = 1
           |ORDER BY user_id""".stripMargin)
     ) { (s, dir) =>
-      GraftSession.tune(s)
       val fields = Seq("amount", "kval", "note")
       val ch = Changes(s, dir)
       val mid = 500L // event_ids (blocks) are dense from 0; sf-independent split

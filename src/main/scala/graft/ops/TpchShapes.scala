@@ -1,8 +1,8 @@
 package graft.ops
 
-import graft.{GraftSession, OpDef}
+import graft.OpDef
 import graft.sources.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -14,11 +14,6 @@ import org.apache.spark.sql.types._
   * (Consolidated r9 from the r8 chronology files.)
   */
 object TpchShapes {
-
-  private def tbl(s: SparkSession, dir: String, n: String): DataFrame = {
-    GraftSession.tune(s)
-    Tables(s, dir, n)
-  }
 
   private val kProp = get_json_object(col("props"), "$.k").cast(LongType)
   private val centsL =
@@ -48,7 +43,7 @@ object TpchShapes {
         |GROUP BY CUBE(l_returnflag, y)
         |ORDER BY returnflag, ship_year""".stripMargin
     ) { (s, dir) =>
-      tbl(s, dir, "lineitem")
+      Tables(s, dir, "lineitem")
         .select(col("l_returnflag"),
           year(col("l_shipdate").cast(DateType)).cast(LongType).as("y"),
           col("l_quantity"))
@@ -81,8 +76,8 @@ object TpchShapes {
         |          CAST(l.l_shipdate AS DATE)) > 60)
         |GROUP BY 1 ORDER BY 1""".stripMargin
     ) { (s, dir) =>
-      val o = tbl(s, dir, "orders")
-      val l = tbl(s, dir, "lineitem")
+      val o = Tables(s, dir, "orders")
+      val l = Tables(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_shipdate"))
       o.join(l,
           o("o_orderkey") === l("l_orderkey") &&
@@ -109,10 +104,10 @@ object TpchShapes {
         |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
         |GROUP BY 1 ORDER BY 1""".stripMargin
     ) { (s, dir) =>
-      val o = tbl(s, dir, "orders")
+      val o = Tables(s, dir, "orders")
         .select(col("o_orderkey"),
           col("o_orderpriority").isin("1-URGENT", "2-HIGH").as("hi"))
-      val l = tbl(s, dir, "lineitem")
+      val l = Tables(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_linestatus"))
       l.join(o, l("l_orderkey") === o("o_orderkey"))
         .groupBy("l_linestatus")
@@ -138,9 +133,9 @@ object TpchShapes {
         |  CAST(COUNT(*) AS BIGINT) AS n_lines
         |FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey""".stripMargin
     ) { (s, dir) =>
-      val p = tbl(s, dir, "part")
+      val p = Tables(s, dir, "part")
         .select(col("p_partkey"), (col("p_type") === "ECONOMY").as("promo"))
-      val l = tbl(s, dir, "lineitem")
+      val l = Tables(s, dir, "lineitem")
         .select(col("l_partkey"),
           (col("l_extendedprice").cast(DecimalType(18, 2)) *
             (lit(1) - col("l_discount").cast(DecimalType(18, 2))))
@@ -180,10 +175,10 @@ object TpchShapes {
         |    AS p90_lag_days
         |FROM w GROUP BY 1 ORDER BY 1""".stripMargin
     ) { (s, dir) =>
-      val o = tbl(s, dir, "orders")
+      val o = Tables(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderpriority").as("pri"),
           col("o_orderdate"))
-      val l = tbl(s, dir, "lineitem")
+      val l = Tables(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_shipdate"))
       val g = l.join(o, l("l_orderkey") === o("o_orderkey"))
         .select(col("pri"),
@@ -222,8 +217,8 @@ object TpchShapes {
         |  CAST(SUM(rev) AS DOUBLE) AS revenue
         |FROM j GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
     ) { (s, dir) =>
-      val p = tbl(s, dir, "part").select(col("p_partkey"), col("p_brand"))
-      val l = tbl(s, dir, "lineitem")
+      val p = Tables(s, dir, "part").select(col("p_partkey"), col("p_brand"))
+      val l = Tables(s, dir, "lineitem")
         .select(col("l_partkey"), col("l_quantity"),
           (col("l_extendedprice").cast(DecimalType(18, 2)) *
             (lit(1) - col("l_discount").cast(DecimalType(18, 2)))).as("rev"))
@@ -256,7 +251,7 @@ object TpchShapes {
         |    AS share
         |FROM g ORDER BY 1""".stripMargin
     ) { (s, dir) =>
-      val g = tbl(s, dir, "orders")
+      val g = Tables(s, dir, "orders")
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).cast(LongType).as("n_orders"),
           sum(col("o_totalprice").cast(DecimalType(18, 2))).as("total"))
@@ -301,18 +296,18 @@ object TpchShapes {
         |  CAST(SUM(rev) AS DOUBLE) AS revenue
         |FROM j GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin
     ) { (s, dir) =>
-      val nations = broadcast(tbl(s, dir, "nation")
+      val nations = broadcast(Tables(s, dir, "nation")
         .filter(col("n_name").isin("NATION_1", "NATION_2")))
-      val sn = tbl(s, dir, "supplier")
+      val sn = Tables(s, dir, "supplier")
         .join(nations, col("s_nationkey") === col("n_nationkey"))
         .select(col("s_suppkey"), col("n_name").as("supp_nation"))
-      val cn = tbl(s, dir, "customer")
+      val cn = Tables(s, dir, "customer")
         .join(nations, col("c_nationkey") === col("n_nationkey"))
         .select(col("c_custkey"), col("n_name").as("cust_nation"))
-      val o = tbl(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
+      val o = Tables(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
         .join(cn, col("o_custkey") === col("c_custkey"))
         .select(col("o_orderkey"), col("cust_nation"))
-      val l = tbl(s, dir, "lineitem")
+      val l = Tables(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_suppkey"),
           year(col("l_shipdate").cast(DateType)).cast(LongType).as("l_year"),
           (col("l_extendedprice").cast(DecimalType(18, 2)) *
@@ -348,18 +343,18 @@ object TpchShapes {
         |JOIN nation n ON c.c_nationkey = n.n_nationkey
         |ORDER BY r.revenue DESC, c.c_custkey LIMIT 20""".stripMargin
     ) { (s, dir) =>
-      val o = tbl(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
-      val rev = tbl(s, dir, "lineitem")
+      val o = Tables(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
+      val rev = Tables(s, dir, "lineitem")
         .filter(col("l_returnflag") === "R")
         .select(col("l_orderkey"),
           (col("l_extendedprice").cast(DecimalType(18, 2)) *
             (lit(1) - col("l_discount").cast(DecimalType(18, 2)))).as("rev"))
         .join(o, col("l_orderkey") === o("o_orderkey"))
         .groupBy("o_custkey").agg(sum("rev").as("revenue"))
-      val c = tbl(s, dir, "customer")
+      val c = Tables(s, dir, "customer")
         .select(col("c_custkey"), col("c_name"), col("c_nationkey"),
           col("c_acctbal"))
-      val n = broadcast(tbl(s, dir, "nation")
+      val n = broadcast(Tables(s, dir, "nation")
         .select(col("n_nationkey"), col("n_name")))
       rev.join(c, rev("o_custkey") === c("c_custkey"))
         .join(n, c("c_nationkey") === n("n_nationkey"))
@@ -390,7 +385,7 @@ object TpchShapes {
         |WHERE r.total_rev = (SELECT MAX(total_rev) FROM r)
         |ORDER BY s.s_suppkey""".stripMargin
     ) { (s, dir) =>
-      val r = tbl(s, dir, "lineitem")
+      val r = Tables(s, dir, "lineitem")
         .filter(col("l_shipdate").cast(DateType) >= lit("1996-01-01") &&
           col("l_shipdate").cast(DateType) < lit("1996-04-01"))
         .select(col("l_suppkey"),
@@ -400,7 +395,7 @@ object TpchShapes {
       val top = r
         .withColumn("mx", max("total_rev").over(Window.partitionBy()))
         .filter(col("total_rev") === col("mx"))
-      val sup = tbl(s, dir, "supplier").select(col("s_suppkey"), col("s_name"))
+      val sup = Tables(s, dir, "supplier").select(col("s_suppkey"), col("s_name"))
       top.join(sup, top("l_suppkey") === sup("s_suppkey"))
         .select(col("s_suppkey"), col("s_name"),
           col("total_rev").cast(DoubleType).as("total_rev"))
@@ -426,11 +421,11 @@ object TpchShapes {
         |   OR (p.p_brand = 'Brand#3' AND l.l_quantity BETWEEN 20 AND 30
         |        AND p.p_size BETWEEN 1 AND 15)""".stripMargin
     ) { (s, dir) =>
-      val p = tbl(s, dir, "part")
+      val p = Tables(s, dir, "part")
         .filter(col("p_brand").isin("Brand#1", "Brand#2", "Brand#3") &&
           col("p_size").between(1, 15))
         .select(col("p_partkey"), col("p_brand"), col("p_size"))
-      val l = tbl(s, dir, "lineitem")
+      val l = Tables(s, dir, "lineitem")
         .filter(col("l_quantity").between(1, 30))
         .select(col("l_partkey"), col("l_quantity"),
           (col("l_extendedprice").cast(DecimalType(18, 2)) *
@@ -463,13 +458,13 @@ object TpchShapes {
         |  CAST(COUNT(*) AS BIGINT) AS supplier_cnt
         |FROM pl GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
     ) { (s, dir) =>
-      val p = tbl(s, dir, "part")
+      val p = Tables(s, dir, "part")
         .filter(col("p_brand") =!= "Brand#1")
         .select(col("p_partkey"), col("p_brand"),
           col("p_size").cast(LongType).as("p_size"))
-      val complaints = tbl(s, dir, "supplier")
+      val complaints = Tables(s, dir, "supplier")
         .filter(col("s_acctbal") < 0).select(col("s_suppkey"))
-      tbl(s, dir, "lineitem")
+      Tables(s, dir, "lineitem")
         .select(col("l_partkey"), col("l_suppkey"))
         .join(complaints, col("l_suppkey") === col("s_suppkey"), "left_anti")
         .join(broadcast(p), col("l_partkey") === p("p_partkey"))
@@ -498,13 +493,13 @@ object TpchShapes {
         |JOIN customer c ON o.o_custkey = c.c_custkey
         |ORDER BY o.o_totalprice DESC, o.o_orderkey LIMIT 100""".stripMargin
     ) { (s, dir) =>
-      val big = tbl(s, dir, "lineitem")
+      val big = Tables(s, dir, "lineitem")
         .groupBy("l_orderkey")
         .agg(sum(col("l_quantity").cast(DecimalType(18, 2))).as("sum_qty"))
         .filter(col("sum_qty") > 250)
-      val o = tbl(s, dir, "orders")
+      val o = Tables(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-      val c = tbl(s, dir, "customer").select(col("c_custkey"), col("c_name"))
+      val c = Tables(s, dir, "customer").select(col("c_custkey"), col("c_name"))
       big.join(o, big("l_orderkey") === o("o_orderkey"))
         .join(c, o("o_custkey") === c("c_custkey"))
         .orderBy(col("o_totalprice").desc, col("o_orderkey"))
@@ -543,10 +538,10 @@ object TpchShapes {
         |FROM q JOIN supplier s ON q.l_suppkey = s.s_suppkey
         |GROUP BY 1 ORDER BY numwait DESC, s_name LIMIT 25""".stripMargin
     ) { (s, dir) =>
-      val o = tbl(s, dir, "orders")
+      val o = Tables(s, dir, "orders")
         .filter(col("o_orderstatus") === "F")
         .select(col("o_orderkey"), col("o_orderdate"))
-      val g = tbl(s, dir, "lineitem")
+      val g = Tables(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_suppkey"), col("l_shipdate"))
         .join(o, col("l_orderkey") === o("o_orderkey"))
         .groupBy("l_orderkey", "l_suppkey")
@@ -558,7 +553,7 @@ object TpchShapes {
         .withColumn("n_late",
           sum(when(col("late"), 1L).otherwise(0L)).over(ow))
         .filter(col("late") && col("n_supp") > 1 && col("n_late") === 1)
-      val sup = tbl(s, dir, "supplier").select(col("s_suppkey"), col("s_name"))
+      val sup = Tables(s, dir, "supplier").select(col("s_suppkey"), col("s_name"))
       q.join(sup, q("l_suppkey") === sup("s_suppkey"))
         .groupBy("s_name")
         .agg(count(lit(1)).cast(LongType).as("numwait"))
@@ -593,15 +588,15 @@ object TpchShapes {
         |FROM idle JOIN nation n ON idle.c_nationkey = n.n_nationkey
         |GROUP BY 1 ORDER BY 1""".stripMargin
     ) { (s, dir) =>
-      val c = tbl(s, dir, "customer")
+      val c = Tables(s, dir, "customer")
         .select(col("c_custkey"), col("c_nationkey"), col("c_acctbal"))
       val stats = c.filter(col("c_acctbal") > 0)
         .agg((sum(col("c_acctbal").cast(DecimalType(18, 2)))
           .cast(DoubleType) / count(lit(1))).as("avg_bal"))
-      val okeys = tbl(s, dir, "orders")
+      val okeys = Tables(s, dir, "orders")
         .filter(col("o_orderdate").cast(DateType) >= lit("1999-01-01"))
         .select(col("o_custkey"))
-      val n = broadcast(tbl(s, dir, "nation")
+      val n = broadcast(Tables(s, dir, "nation")
         .select(col("n_nationkey"), col("n_name")))
       c.crossJoin(broadcast(stats))
         .filter(col("c_acctbal") > col("avg_bal"))
@@ -633,7 +628,7 @@ object TpchShapes {
         |  AND l_quantity < 24""".stripMargin
     ) { (s, dir) =>
       val disc = col("l_discount").cast(DecimalType(18, 2))
-      tbl(s, dir, "lineitem")
+      Tables(s, dir, "lineitem")
         .filter(col("l_shipdate").cast(DateType) >= lit("1996-01-01") &&
           col("l_shipdate").cast(DateType) < lit("1997-01-01") &&
           disc >= lit(BigDecimal("0.05")) && disc <= lit(BigDecimal("0.07")) &&
@@ -666,14 +661,14 @@ object TpchShapes {
         |WHERE p.p_type = 'ECONOMY'
         |  AND CAST(l.l_quantity AS DECIMAL(18,2)) * 5 * pq.cnt < pq.sq""".stripMargin
     ) { (s, dir) =>
-      val pq = tbl(s, dir, "lineitem")
+      val pq = Tables(s, dir, "lineitem")
         .groupBy("l_partkey")
         .agg(sum(col("l_quantity").cast(DecimalType(18, 2))).as("sq"),
           count(lit(1)).as("cnt"))
         .select(col("l_partkey").as("pk"), col("sq"), col("cnt"))
-      val p = tbl(s, dir, "part")
+      val p = Tables(s, dir, "part")
         .filter(col("p_type") === "ECONOMY").select(col("p_partkey"))
-      val l = tbl(s, dir, "lineitem")
+      val l = Tables(s, dir, "lineitem")
         .select(col("l_partkey"), col("l_quantity"), col("l_extendedprice"))
         .join(broadcast(p), col("l_partkey") === col("p_partkey"))
       // qty < sq/(5·cnt) cross-multiplied: qty·5·cnt < sq — exact decimal
@@ -707,9 +702,9 @@ object TpchShapes {
         |WHERE s.s_suppkey IN (SELECT l_suppkey FROM qual)
         |ORDER BY s.s_suppkey""".stripMargin
     ) { (s, dir) =>
-      val p = tbl(s, dir, "part")
+      val p = Tables(s, dir, "part")
         .filter(col("p_type") === "ECONOMY").select(col("p_partkey"))
-      val qual = tbl(s, dir, "lineitem")
+      val qual = Tables(s, dir, "lineitem")
         .filter(year(col("l_shipdate").cast(DateType)) === 1997)
         .select(col("l_suppkey"), col("l_partkey"), col("l_quantity"))
         .join(broadcast(p), col("l_partkey") === col("p_partkey"))
@@ -717,7 +712,7 @@ object TpchShapes {
         .agg(sum(col("l_quantity").cast(DecimalType(18, 2))).as("sq"))
         .filter(col("sq") > 50)
         .select(col("l_suppkey"))
-      tbl(s, dir, "supplier").select(col("s_suppkey"), col("s_name"))
+      Tables(s, dir, "supplier").select(col("s_suppkey"), col("s_name"))
         .join(qual, col("s_suppkey") === col("l_suppkey"), "left_semi")
         .orderBy("s_suppkey")
     },
@@ -740,10 +735,10 @@ object TpchShapes {
         |  CAST(COUNT(*) AS BIGINT) AS custdist
         |FROM co GROUP BY 1 ORDER BY custdist DESC, c_count DESC""".stripMargin
     ) { (s, dir) =>
-      val o = tbl(s, dir, "orders")
+      val o = Tables(s, dir, "orders")
         .filter(col("o_orderpriority") =!= "1-URGENT")
         .select(col("o_orderkey"), col("o_custkey"))
-      val c = tbl(s, dir, "customer").select(col("c_custkey"))
+      val c = Tables(s, dir, "customer").select(col("c_custkey"))
       c.join(o, c("c_custkey") === o("o_custkey"), "left_outer")
         .groupBy("c_custkey")
         .agg(count(col("o_orderkey")).cast(LongType).as("c_count"))
@@ -779,18 +774,18 @@ object TpchShapes {
         |  CAST(SUM(amount) AS DOUBLE) AS sum_profit
         |FROM profit GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
     ) { (s, dir) =>
-      val p = tbl(s, dir, "part")
+      val p = Tables(s, dir, "part")
         .filter(col("p_name").like("%blue%"))
         .select(col("p_partkey"),
           round(lit(0.6) * col("p_retailprice"), 2)
             .cast(DecimalType(18, 2)).as("cost"))
-      val sup = tbl(s, dir, "supplier").select("s_suppkey", "s_nationkey")
-      val n = broadcast(tbl(s, dir, "nation")
+      val sup = Tables(s, dir, "supplier").select("s_suppkey", "s_nationkey")
+      val n = broadcast(Tables(s, dir, "nation")
         .select(col("n_nationkey"), col("n_name")))
-      val o = tbl(s, dir, "orders")
+      val o = Tables(s, dir, "orders")
         .select(col("o_orderkey"),
           year(col("o_orderdate").cast(DateType)).cast(LongType).as("o_year"))
-      val l = tbl(s, dir, "lineitem")
+      val l = Tables(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
           col("l_quantity"), col("l_extendedprice"), col("l_discount"))
         .join(broadcast(p), col("l_partkey") === p("p_partkey"))
@@ -838,7 +833,7 @@ object TpchShapes {
         |JOIN supplier s ON m.l_suppkey = s.s_suppkey
         |WHERE m.rn = 1 ORDER BY p.p_partkey""".stripMargin
     ) { (s, dir) =>
-      val ps = tbl(s, dir, "lineitem")
+      val ps = Tables(s, dir, "lineitem")
         .groupBy("l_partkey", "l_suppkey")
         .agg((sum(col("l_extendedprice").cast(DecimalType(18, 2)))
           .cast(DoubleType) /
@@ -856,10 +851,10 @@ object TpchShapes {
         .agg(min(struct(col("unit_cost"), col("l_suppkey"))).as("w"))
         .select(col("l_partkey"), col("w.l_suppkey").as("l_suppkey"),
           col("w.unit_cost").as("unit_cost"))
-      val p = tbl(s, dir, "part")
+      val p = Tables(s, dir, "part")
         .filter(col("p_size") <= 10)
         .select(col("p_partkey"), col("p_brand"))
-      val sup = tbl(s, dir, "supplier").select(col("s_suppkey"), col("s_name"))
+      val sup = Tables(s, dir, "supplier").select(col("s_suppkey"), col("s_name"))
       m.join(p, m("l_partkey") === p("p_partkey"))
         .join(sup, m("l_suppkey") === sup("s_suppkey"))
         .select(col("p_partkey"), col("p_brand"), col("s_suppkey"),
@@ -885,7 +880,7 @@ object TpchShapes {
         |FROM pv, tot
         |ORDER BY pv.val DESC, pv.l_partkey LIMIT 50""".stripMargin
     ) { (s, dir) =>
-      val pv = tbl(s, dir, "lineitem")
+      val pv = Tables(s, dir, "lineitem")
         .groupBy("l_partkey")
         .agg(sum(col("l_extendedprice").cast(DecimalType(18, 2))).as("val"))
       val tot = pv.agg(sum("val").as("total"))
@@ -929,21 +924,21 @@ object TpchShapes {
         |    / CAST(SUM(rev) AS DOUBLE), 4) AS mkt_share
         |FROM j GROUP BY 1 ORDER BY 1""".stripMargin
     ) { (s, dir) =>
-      val n = broadcast(tbl(s, dir, "nation"))
-      val r = broadcast(tbl(s, dir, "region")
+      val n = broadcast(Tables(s, dir, "nation"))
+      val r = broadcast(Tables(s, dir, "region")
         .filter(col("r_name") === "ASIA"))
-      val custAsia = tbl(s, dir, "customer").select("c_custkey", "c_nationkey")
+      val custAsia = Tables(s, dir, "customer").select("c_custkey", "c_nationkey")
         .join(n, col("c_nationkey") === col("n_nationkey"))
         .join(r, col("n_regionkey") === col("r_regionkey"))
         .select(col("c_custkey"))
-      val suppFlag = tbl(s, dir, "supplier").select("s_suppkey", "s_nationkey")
+      val suppFlag = Tables(s, dir, "supplier").select("s_suppkey", "s_nationkey")
         .join(n, col("s_nationkey") === col("n_nationkey"))
         .select(col("s_suppkey"), (col("n_name") === "NATION_2").as("is_target"))
-      val o = tbl(s, dir, "orders")
+      val o = Tables(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"),
           year(col("o_orderdate").cast(DateType)).cast(LongType).as("o_year"))
         .join(custAsia, col("o_custkey") === col("c_custkey"))
-      val l = tbl(s, dir, "lineitem")
+      val l = Tables(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_suppkey"),
           (col("l_extendedprice").cast(DecimalType(18, 2)) *
             (lit(1) - col("l_discount").cast(DecimalType(18, 2)))).as("rev"))
@@ -984,9 +979,9 @@ object TpchShapes {
     ) { (s, dir) =>
       def dayNum(c: Column) =
         datediff(c.cast(DateType), to_date(lit("1970-01-01")))
-      val o = tbl(s, dir, "orders").select(col("o_orderkey"),
+      val o = Tables(s, dir, "orders").select(col("o_orderkey"),
         col("o_orderdate"))
-      val l = tbl(s, dir, "lineitem").select(col("l_orderkey"),
+      val l = Tables(s, dir, "lineitem").select(col("l_orderkey"),
         col("l_shipdate"))
       val iv = l.join(o, l("l_orderkey") === o("o_orderkey"))
         .groupBy(col("o_orderkey"), dayNum(col("o_orderdate")).as("lo"))
@@ -1033,9 +1028,9 @@ object TpchShapes {
         |SELECT sk AS l_suppkey, n, n_late, late_rate, wilson_lb
         |FROM w ORDER BY wilson_lb DESC, sk LIMIT 50""".stripMargin
     ) { (s, dir) =>
-      val o = tbl(s, dir, "orders").select(col("o_orderkey"),
+      val o = Tables(s, dir, "orders").select(col("o_orderkey"),
         col("o_orderdate"))
-      val l = tbl(s, dir, "lineitem").select(col("l_orderkey"),
+      val l = Tables(s, dir, "lineitem").select(col("l_orderkey"),
         col("l_suppkey"), col("l_shipdate"))
       val g = l.join(o, l("l_orderkey") === o("o_orderkey"))
         .select(col("l_suppkey").as("sk"),
@@ -1082,9 +1077,9 @@ object TpchShapes {
         |    AS yr_share
         |FROM g ORDER BY 1, 2""".stripMargin
     ) { (s, dir) =>
-      val c = tbl(s, dir, "customer").select(col("c_custkey"),
+      val c = Tables(s, dir, "customer").select(col("c_custkey"),
         col("c_mktsegment"))
-      val o = tbl(s, dir, "orders").select(col("o_custkey"),
+      val o = Tables(s, dir, "orders").select(col("o_custkey"),
         year(col("o_orderdate")).cast(LongType).as("yr"),
         col("o_totalprice").cast(DecimalType(18, 2)).as("rev"))
       val g = o.join(c, o("o_custkey") === c("c_custkey"))

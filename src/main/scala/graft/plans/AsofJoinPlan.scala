@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
   Alias, Ascending, Attribute, Expression, GenericInternalRow, JoinedRow,
@@ -210,9 +210,9 @@ final case class BroadcastAsofJoinExec(
     copy(left = newLeft, right = newRight)
 }
 
-/** Plans [[AsofJoinNode]] → broadcast or merge exec; injected per-session
-  * via `spark.experimental.extraStrategies` (see [[AsofJoinPlan.register]])
-  * or cluster-wide through `graft.functions.GraftExtensions`.
+/** Plans [[AsofJoinNode]] → broadcast or merge exec; installed in the
+  * session's `spark.experimental.extraStrategies` by
+  * [[graft.GraftSession.prepare]].
   *
   * The broadcast variant is chosen exactly like BroadcastHashJoin: right
   * side's logical size estimate under `autoBroadcastJoinThreshold`.
@@ -262,15 +262,6 @@ object PushFilterThroughAsofJoin extends Rule[LogicalPlan] with PredicateHelper 
   */
 object AsofJoinPlan {
 
-  def register(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraStrategies.contains(AsofJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsofJoinStrategy
-    if (!spark.experimental.extraOptimizations.contains(PushFilterThroughAsofJoin))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ PushFilterThroughAsofJoin
-  }
-
   def asof(
       left: DataFrame,
       right: DataFrame,
@@ -282,7 +273,6 @@ object AsofJoinPlan {
       payloadPrefix: String = "asof_"
   ): DataFrame = {
     val spark = left.sparkSession
-    register(spark)
     val lPlan = left.queryExecution.analyzed
     // fresh aliases for every right-side column we touch
     val rAliased = right.select(

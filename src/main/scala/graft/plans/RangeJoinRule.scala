@@ -22,17 +22,17 @@ import org.apache.spark.sql.types.{ByteType, DateType, IntegerType, LongType, Sh
   * everything above it.
   *
   * Off by default: set `spark.graft.rangeJoin.width` to a positive bucket
-  * width (≈ the median interval span) to arm it. Deploy session-wide via
-  * `spark.sql.extensions=graft.functions.GraftExtensions`, or per session
-  * through `spark.experimental.extraOptimizations`. Fires only on an INNER
-  * join whose condition is exactly the two range conjuncts, point from the
-  * left side, bounds from the right, over a single ordered domain: integral
-  * columns, DATE columns (bucketed on epoch days), or TIMESTAMP /
-  * TIMESTAMP_NTZ columns (bucketed on epoch microseconds) — `ts BETWEEN lo
-  * AND hi` is the form real event-interval queries take. The width conf is
-  * interpreted in the domain's underlying unit (1 for ints, days for DATE,
-  * microseconds for TIMESTAMP); mixed-domain conditions are left untouched
-  * (their buckets would not align).
+  * width (≈ the median interval span) to arm it; [[graft.GraftSession.prepare]]
+  * installs it in every graft session's `spark.experimental.extraOptimizations`.
+  * Fires only on an INNER join whose condition is exactly the two range
+  * conjuncts, point from the left side, bounds from the right, over a
+  * single ordered domain: integral columns, DATE columns (bucketed on
+  * epoch days), or TIMESTAMP / TIMESTAMP_NTZ columns (bucketed on epoch
+  * microseconds) — `ts BETWEEN lo AND hi` is the form real event-interval
+  * queries take. The width conf is interpreted in the domain's
+  * underlying unit (1 for ints, days for DATE, microseconds for
+  * TIMESTAMP); mixed-domain conditions are left untouched (their buckets
+  * would not align).
   */
 object RangeJoinRewrite extends Rule[LogicalPlan] {
 

@@ -73,9 +73,9 @@ object FlushPolicy {
 /** Size-triggered compaction for the merge-on-read write path: the base
   * re-materializes when EITHER the pending-delta count reaches `maxDeltas`
   * (the read plan's depth bound) OR the deltas' accumulated on-disk bytes
-  * reach `maxDeltaBytes`. Count alone (the fixed `compactEvery` cadence)
-  * compacts a trickle of tiny deltas as eagerly as a burst of huge ones;
-  * a byte threshold makes compaction track the actual read amplification.
+  * reach `maxDeltaBytes`. A count alone compacts a trickle of tiny deltas
+  * as eagerly as a burst of huge ones; a byte threshold makes compaction
+  * track the actual read amplification.
   * Byte totals come from filesystem metadata (a driver-side listing of the
   * delta tables' files — no Spark job, no data read).
   */
@@ -95,16 +95,13 @@ final class ChangeStreamSink(
     fieldCols: Seq[String],
     buckets: Int = 8,
     policy: Option[FlushPolicy] = None,
-    /** Merge-on-read cadence: 1 (default) materializes the full snapshot
-      * every flush (simple, read-optimal); N > 1 writes only the COLLAPSED
-      * DELTA for intermediate flushes — O(delta) disk I/O, the MergeTree-
-      * style write path — and materializes every Nth flush (compaction).
-      * Reads compose base + pending deltas, so the plan depth between
-      * compactions is bounded by N.
-      */
-    compactEvery: Int = 1,
-    /** When set, OVERRIDES `compactEvery`: merge-on-read deltas accumulate
-      * until the [[CompactionPolicy]]'s count or byte threshold trips.
+    /** Merge-on-read: None (default) materializes the full snapshot every
+      * flush (simple, read-optimal). When set, flushes write only the
+      * COLLAPSED DELTA — O(delta) disk I/O, the MergeTree-style write path —
+      * until the [[CompactionPolicy]]'s count or byte threshold trips and
+      * the base re-materializes (compaction). Reads compose base + pending
+      * deltas, so the plan depth between compactions is bounded by
+      * `maxDeltas`.
       */
     compaction: Option[CompactionPolicy] = None,
     /** When set, maintain an incremental materialized rollup alongside the
@@ -115,11 +112,10 @@ final class ChangeStreamSink(
       */
     mv: Option[graft.cdc.MaterializedAgg.MvDef] = None
 ) {
-  require(compactEvery >= 1, "compactEvery must be ≥ 1")
-
   /** Snapshot versions are catalog tables (bucketing metadata lives in the
-    * catalog); the name is namespaced by (baseDir, moduleHash) so parallel
-    * sinks never collide.
+    * catalog) whose files live under `baseDir` ([[BucketedSnapshot.resolve]]);
+    * the name is namespaced by (baseDir, moduleHash) so parallel sinks never
+    * collide.
     */
   private val tablePrefix = {
     val h = MessageDigest.getInstance("MD5")
@@ -138,15 +134,21 @@ final class ChangeStreamSink(
 
   private[graft] def mvTable(batchId: Long) = s"${tablePrefix}_m$batchId"
 
-  private def isDelta(spark: SparkSession, batchId: Long): Boolean =
-    spark.catalog.tableExists(deltaTable(batchId))
+  /** A rollup state version (not bucketed). */
+  private def mvVersion(spark: SparkSession, batchId: Long): Option[DataFrame] =
+    BucketedSnapshot.resolve(spark, baseDir, mvTable(batchId), buckets = 0)
 
-  /** On-disk bytes of a catalog table — a recursive file listing of its
-    * location (driver-side metadata only; no job, no footer reads).
+  private def committedVersion(spark: SparkSession, table: String): DataFrame =
+    BucketedSnapshot.committed(spark, baseDir, table, buckets)
+
+  private def isDelta(spark: SparkSession, batchId: Long): Boolean =
+    BucketedSnapshot.resolve(spark, baseDir, deltaTable(batchId), buckets).isDefined
+
+  /** On-disk bytes of a version table — a recursive file listing of its
+    * directory (driver-side metadata only; no job, no footer reads).
     */
   private def tableBytes(spark: SparkSession, table: String): Long = {
-    val path = new org.apache.hadoop.fs.Path(
-      org.apache.spark.sql.graftshim.GraftSqlShim.tableLocation(spark, table))
+    val path = BucketedSnapshot.path(spark, baseDir, table)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val it = fs.listFiles(path, true)
     var sum = 0L
@@ -156,8 +158,8 @@ final class ChangeStreamSink(
 
   /** The newest committed snapshot (resolved through the cursor store).
     * With merge-on-read, pending deltas since the last materialized base
-    * fold into the read plan oldest-first — at most `compactEvery − 1`
-    * applies deep.
+    * fold into the read plan oldest-first — at most `maxDeltas` applies
+    * deep.
     */
   def latestSnapshot(spark: SparkSession): Option[DataFrame] = {
     val store = new CursorStore(s"$baseDir/cursor", spark)
@@ -170,10 +172,7 @@ final class ChangeStreamSink(
     */
   def latestMv(spark: SparkSession): Option[DataFrame] = mv.flatMap { _ =>
     val store = new CursorStore(s"$baseDir/cursor", spark)
-    store.readWithBatch(moduleHash).collect {
-      case (_, bid) if spark.catalog.tableExists(mvTable(bid)) =>
-        spark.table(mvTable(bid))
-    }
+    store.readWithBatch(moduleHash).flatMap { case (_, bid) => mvVersion(spark, bid) }
   }
 
   /** The snapshot as of a committed version: the version's base table, or —
@@ -181,18 +180,18 @@ final class ChangeStreamSink(
     * in oldest-first.
     */
   private def snapshotAt(spark: SparkSession, store: CursorStore, bid: Long): DataFrame =
-    if (!isDelta(spark, bid)) spark.table(snapTable(bid))
+    if (!isDelta(spark, bid)) committedVersion(spark, snapTable(bid))
     else {
       val bids = store.allBatches(moduleHash).filter(_ <= bid).sorted.reverse
       val (deltas, rest) = bids.span(isDelta(spark, _))
-      val base = rest.headOption.map(b => spark.table(snapTable(b))).getOrElse {
-        val schema = spark.table(deltaTable(deltas.last))
+      val base = rest.headOption.map(b => committedVersion(spark, snapTable(b))).getOrElse {
+        val schema = committedVersion(spark, deltaTable(deltas.last))
           .drop("last_block", "deleted", "revived").schema
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
       }
       deltas.reverse.foldLeft(base) { (snap, b) =>
-        ChangeLoader.applyBatch(snap, spark.table(deltaTable(b)), fieldCols)
+        ChangeLoader.applyBatch(snap, committedVersion(spark, deltaTable(b)), fieldCols)
       }
     }
 
@@ -255,12 +254,10 @@ final class ChangeStreamSink(
     val t0 = System.currentTimeMillis()
     val collapsed = ChangeLoader.collapse(batch, fieldCols)
     val pendingBids = committed.takeWhile(isDelta(spark, _))
-    val materialize = compaction match {
-      case Some(cp) =>
-        pendingBids.size >= cp.maxDeltas ||
-          (cp.maxDeltaBytes != Long.MaxValue &&
-            pendingBids.map(b => tableBytes(spark, deltaTable(b))).sum >= cp.maxDeltaBytes)
-      case None => compactEvery <= 1 || pendingBids.size >= compactEvery - 1
+    val materialize = compaction.forall { cp =>
+      pendingBids.size >= cp.maxDeltas ||
+        (cp.maxDeltaBytes != Long.MaxValue &&
+          pendingBids.map(b => tableBytes(spark, deltaTable(b))).sum >= cp.maxDeltaBytes)
     }
     val tFlush = System.currentTimeMillis()
     val current = committed.headOption
@@ -273,27 +270,24 @@ final class ChangeStreamSink(
     if (materialize) {
       val next = ChangeLoader.applyBatch(prior, collapsed, fieldCols)
       lastApplyAudit = Some(PlanAudit.audit(next.queryExecution.executedPlan))
-      BucketedSnapshot.write(next, snapTable(bid), buckets)
+      BucketedSnapshot.write(next, baseDir, snapTable(bid), buckets)
     } else {
       // merge-on-read delta flush: write ONLY the collapsed batch —
       // O(delta) disk, the MergeTree-style write path; readers fold it in
-      BucketedSnapshot.write(collapsed, deltaTable(bid), buckets)
+      BucketedSnapshot.write(collapsed, baseDir, deltaTable(bid), buckets)
     }
     // incremental rollup: delta-merge from ONLY the batch's pks (prior rows
     // via a pk semi-join on the bucketed snapshot), versioned under this
     // batchId — written BEFORE the cursor commit, same durability order as
     // the snapshot itself (a crash in between replays into the overwrite)
     mv.foreach { d =>
-      val priorAgg = current match {
-        case Some(b) if spark.catalog.tableExists(mvTable(b)) =>
-          spark.table(mvTable(b))
-        case _ => graft.cdc.MaterializedAgg.empty(collapsed, d)
-      }
+      val priorAgg = current.flatMap(mvVersion(spark, _))
+        .getOrElse(graft.cdc.MaterializedAgg.empty(collapsed, d))
       val touched = collapsed.select("pk")
       val priorTouched = prior.join(touched, Seq("pk"), "left_semi")
       val newTouched = ChangeLoader.applyBatch(priorTouched, collapsed, fieldCols)
-      graft.cdc.MaterializedAgg.merge(priorAgg, priorTouched, newTouched, d)
-        .write.mode("overwrite").saveAsTable(mvTable(bid))
+      BucketedSnapshot.write(graft.cdc.MaterializedAgg.merge(priorAgg, priorTouched, newTouched, d),
+        baseDir, mvTable(bid), buckets = 0)
     }
     // the stats entry lands before the cursor: a crash in between leaves an
     // entry that the replay of this batchId overwrites, never a second one
@@ -331,13 +325,13 @@ final class ChangeStreamSink(
     // re-commit the old snapshot under the new batch id so the cursor log
     // stays append-only and resolves (by commit order) to the rolled-back
     // state (snapshotAt materializes even if toBatchId was a delta version)
-    BucketedSnapshot.write(snapshotAt(spark, store, toBatchId), snapTable(newBatchId), buckets)
+    BucketedSnapshot.write(snapshotAt(spark, store, toBatchId), baseDir, snapTable(newBatchId),
+      buckets)
     // the rollup rolls back with the snapshot: re-expose the old version's
     // agg state under the new batchId (every mv flush wrote one)
     mv.foreach { _ =>
-      if (spark.catalog.tableExists(mvTable(toBatchId)))
-        spark.table(mvTable(toBatchId)).write.mode("overwrite")
-          .saveAsTable(mvTable(newBatchId))
+      mvVersion(spark, toBatchId).foreach(
+        BucketedSnapshot.write(_, baseDir, mvTable(newBatchId), buckets = 0))
     }
     store.commit(Cursor(moduleHash, s"cursor:rollback:${rolled.blockNum}",
       rolled.blockNum, rolled.blockId), newBatchId)

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.cdc.{Cursor, CursorStore}
-import graft.functions.GraftFunctions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -184,7 +183,6 @@ object CurateStream {
   def curateBatch(batch: DataFrame, md5Seen: DataFrame, simIndex: DataFrame,
       benchGrams: DataFrame, minQuality: Double, cap: Int): BatchResult = {
     val s = batch.sparkSession
-    GraftFunctions.register(s)
     val docs = batch.select("doc_id", "lang", "source", "text")
 
     // 1. quality (stateless; the verified #37 expression)

@@ -46,6 +46,12 @@ final class MultiTableChangeSink(
 
   private def tableCursorKey(table: String) = s"$moduleHash#$table"
 
+  /** A committed table version; its files live under `baseDir`
+    * ([[BucketedSnapshot.resolve]]), so a new process finds it too.
+    */
+  private def version(spark: SparkSession, table: String, batchId: Long): DataFrame =
+    BucketedSnapshot.committed(spark, baseDir, snapTable(table, batchId), buckets)
+
   /** Each table's newest snapshot AS OF the module cursor — per-table
     * commits from a partially-flushed (crashed) batch stay invisible until
     * the module cursor lands, preserving the one-transaction reader view.
@@ -57,7 +63,7 @@ final class MultiTableChangeSink(
       case Some((_, moduleBid)) =>
         schemas.keys.flatMap { t =>
           store.readBatchBefore(tableCursorKey(t), moduleBid + 1).map { case (_, bid) =>
-            t -> spark.table(snapTable(t, bid))
+            t -> version(spark, t, bid)
           }
         }.toMap
     }
@@ -67,40 +73,42 @@ final class MultiTableChangeSink(
     val spark = batch.sparkSession
     val store = new CursorStore(s"$baseDir/cursor", spark)
     if (store.committed(moduleHash, batchId)) return // replay: durable already
-    if (batch.isEmpty) return
     val t0 = System.currentTimeMillis()
-    // One scan feeds every table's route + the stats agg.
+    // One scan feeds every table's route + the one head aggregate.
     val cached = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
+      // one action per micro-batch: each table's (max block, min block, ops,
+      // distinct pks); an empty batch has no rows and commits nothing
+      val heads = cached.groupBy("table")
+        .agg(max("block"), min("block"), count(lit(1)), countDistinct(col("pk")))
+        .collect().map(r => r.getString(0) -> r).toMap
+      if (heads.isEmpty) return
       schemas.foreach { case (t, sch) =>
-        val typed = MultiTable.forTable(cached, t, sch)
-        if (!typed.isEmpty) {
+        heads.get(t).foreach { h =>
           val fields = MultiTable.fieldCols(sch)
-          val collapsed = ChangeLoader.collapse(typed, fields)
+          val collapsed = ChangeLoader.collapse(MultiTable.forTable(cached, t, sch), fields)
           // prior = the table's newest version from a batch STRICTLY before
           // this one (a replay after a partial flush must not read its own
           // half-written version)
           val prior = store.readBatchBefore(tableCursorKey(t), batchId) match {
-            case Some((_, bid)) => spark.table(snapTable(t, bid))
+            case Some((_, bid)) => version(spark, t, bid)
             case None =>
               spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
                 collapsed.drop("last_block", "deleted", "revived").schema)
           }
           val next = ChangeLoader.applyBatch(prior, collapsed, fields)
-          BucketedSnapshot.write(next, snapTable(t, batchId), buckets)
-          val mx = typed.agg(max("block")).collect()(0).getLong(0)
+          BucketedSnapshot.write(next, baseDir, snapTable(t, batchId), buckets)
+          val mx = h.getLong(1)
           store.commit(Cursor(tableCursorKey(t), s"cursor:$mx", mx, s"block:$mx"), batchId)
         }
       }
-      val head = cached
-        .agg(max("block"), count(lit(1)), countDistinct(col("table"), col("pk")),
-          min("block")).collect()(0)
-      val maxBlock = head.getLong(0)
+      val rows = heads.values.toSeq
+      val maxBlock = rows.map(_.getLong(1)).max
       // stats first: a replay of an uncommitted batch overwrites its entry
       val wall = math.max(1, System.currentTimeMillis() - t0)
       new SinkStats(s"$baseDir/stats", spark).record(FlushStat(
-        moduleHash, batchId, maxBlock, head.getLong(3), head.getLong(1), head.getLong(2),
-        flushMillis = wall, wallMillis = wall))
+        moduleHash, batchId, maxBlock, rows.map(_.getLong(2)).min, rows.map(_.getLong(3)).sum,
+        rows.map(_.getLong(4)).sum, flushMillis = wall, wallMillis = wall))
       // the transaction commit point: everything above is invisible to
       // readers (latestSnapshots resolves through cursors) until this lands
       store.commit(Cursor(moduleHash, s"cursor:$maxBlock", maxBlock,

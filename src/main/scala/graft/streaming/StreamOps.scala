@@ -308,7 +308,6 @@ object StreamOps {
     */
   def windowedTopK(events: DataFrame, k: Int = 3,
       capacity: Int = graft.CapacityPins.StreamTopKCap): DataFrame = {
-    graft.functions.GraftFunctions.register(events.sparkSession)
     val src = if (events.isStreaming) events.withWatermark("ts", "1 hour") else events
     src
       .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
@@ -328,7 +327,6 @@ object StreamOps {
     */
   def windowedTopKState(events: DataFrame,
       capacity: Int = graft.CapacityPins.StreamTopKCap): DataFrame = {
-    graft.functions.GraftFunctions.register(events.sparkSession)
     val src = if (events.isStreaming) events.withWatermark("ts", "1 hour") else events
     src
       .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
@@ -370,7 +368,6 @@ object StreamOps {
     */
   def windowedUniqTheta(events: DataFrame,
       k: Int = graft.CapacityPins.KmvCap): DataFrame = {
-    graft.functions.GraftFunctions.register(events.sparkSession)
     val src = if (events.isStreaming) events.withWatermark("ts", "1 hour") else events
     src
       .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
@@ -392,7 +389,6 @@ object StreamOps {
     * COUNT(DISTINCT) oracle row.
     */
   def windowedBitmapUniq(events: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(events.sparkSession)
     val src = if (events.isStreaming) events.withWatermark("ts", "1 hour") else events
     src
       .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))

@@ -1,8 +1,8 @@
 package graft.text
 
-import graft.{GraftSession, OpDef}
+import graft.OpDef
 import graft.sources.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -15,11 +15,6 @@ import org.apache.spark.sql.types._
   * bound. No UDFs.
   */
 object TextOps {
-
-  private def docs(s: SparkSession, dir: String): DataFrame = {
-    GraftSession.tune(s)
-    Tables(s, dir, "documents")
-  }
 
   /** Per-language stopword lexicons (tiny, inlined as literals on both
     * engines — broadcast-free).
@@ -50,7 +45,6 @@ object TextOps {
     * ([[graft.streaming.CurateStream]]).
     */
   def qualityOf(docsDf: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docsDf.sparkSession)
     val enLex = array(lexicons(1)._2.map(lit): _*)
     docsDf
       .select(col("doc_id"), length(col("text")).as("n_chars"), words.as("ws"))
@@ -98,7 +92,7 @@ object TextOps {
         size(array_intersect(ws, array(lex.map(lit): _*)))
       val hEn = hits(lexicons(1)._2); val hDe = hits(lexicons(0)._2)
       val hFr = hits(lexicons(3)._2); val hEs = hits(lexicons(2)._2)
-      docs(s, dir).select(
+      Tables(s, dir, "documents").select(
         col("doc_id"),
         when(hEn === 0 && hDe === 0 && hFr === 0 && hEs === 0, "und")
           .when(hEn >= hDe && hEn >= hFr && hEn >= hEs, "en")
@@ -159,7 +153,7 @@ object TextOps {
       val hFr = hits(lexicons(3)._2); val hEs = hits(lexicons(2)._2)
       val hTot = hEn + hDe + hFr + hEs
       val hOther = hTot - greatest(hEn, hDe, hFr, hEs)
-      docs(s, dir).select(
+      Tables(s, dir, "documents").select(
         col("doc_id"),
         when(hEn === 0 && hDe === 0 && hFr === 0 && hEs === 0, "und")
           .when(hEn >= hDe && hEn >= hFr && hEn >= hEs, "en")
@@ -214,7 +208,7 @@ object TextOps {
         size(array_intersect(ws, array(lex.map(lit): _*)))
       val hEn = hits(lexicons(1)._2); val hDe = hits(lexicons(0)._2)
       val hFr = hits(lexicons(3)._2); val hEs = hits(lexicons(2)._2)
-      val g = docs(s, dir).select(
+      val g = Tables(s, dir, "documents").select(
           col("lang"),
           when(hEn === 0 && hDe === 0 && hFr === 0 && hEs === 0, "und")
             .when(hEn >= hDe && hEn >= hFr && hEn >= hEs, "en")
@@ -287,7 +281,7 @@ object TextOps {
         size(array_intersect(ws, array(lex.map(lit): _*)))
       val hEn = hits(lexicons(1)._2); val hDe = hits(lexicons(0)._2)
       val hFr = hits(lexicons(3)._2); val hEs = hits(lexicons(2)._2)
-      val g = docs(s, dir).select(
+      val g = Tables(s, dir, "documents").select(
           col("lang"),
           when(hEn === 0 && hDe === 0 && hFr === 0 && hEs === 0, "und")
             .when(hEn >= hDe && hEn >= hFr && hEn >= hEs, "en")
@@ -338,7 +332,7 @@ object TextOps {
         |  round(least(CAST(n_words AS DOUBLE), 100.0) / 100.0
         |        * (0.5 + 0.5 * (CAST(n_distinct AS DOUBLE) / n_words)), 4) AS quality
         |FROM m ORDER BY doc_id""".stripMargin
-    ) { (s, dir) => qualityOf(docs(s, dir)).orderBy("doc_id") },
+    ) { (s, dir) => qualityOf(Tables(s, dir, "documents")).orderBy("doc_id") },
 
     // ---- #302 per-doc word entropy -----------------------------------------
     // Shannon entropy of the within-doc word distribution — the repetition
@@ -370,7 +364,7 @@ object TextOps {
         |          / ln(CAST(n_types AS DOUBLE)), 4) END AS norm_entropy
         |FROM a ORDER BY doc_id""".stripMargin
     ) { (s, dir) =>
-      val c = docs(s, dir).filter(col("doc_id") < 100)
+      val c = Tables(s, dir, "documents").filter(col("doc_id") < 100)
         .select(col("doc_id"), explode(words).as("w"))
         .groupBy("doc_id", "w").agg(count(lit(1)).as("c"))
       val a = c.groupBy("doc_id")
@@ -434,7 +428,7 @@ object TextOps {
         |                 * (1 - CAST(n_dup AS DOUBLE) / n)), 4) END AS r_pb
         |FROM m ORDER BY lang""".stripMargin
     ) { (s, dir) =>
-      val q = docs(s, dir).select(col("doc_id"), col("lang"),
+      val q = Tables(s, dir, "documents").select(col("doc_id"), col("lang"),
         // sort_array, not array_sort: codegen on the per-row scan path
         md5(concat_ws(" ",
           sort_array(array_distinct(split(lower(col("text")), " ")))))
@@ -482,8 +476,7 @@ object TextOps {
         |  round(CAST(n_chars AS DOUBLE) / len(ws), 4) AS chars_per_token
         |FROM t ORDER BY doc_id""".stripMargin
     ) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
-      docs(s, dir)
+      Tables(s, dir, "documents")
         .select(col("doc_id"), length(col("text")).as("n_chars"), words.as("ws"),
           size(regexp_extract_all(col("text"), lit("[a-z]+|[0-9]+|[^a-z0-9 ]"), lit(0)))
             .as("re_tokens"))
@@ -510,10 +503,9 @@ object TextOps {
         |  ('0x' || substr(fp, 1, 15))::BIGINT AS fp_long
         |FROM t ORDER BY doc_id""".stripMargin
     ) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       // native md5_chain: the aggregate() fold would run interpreted,
       // re-hashing through boxed strings per word
-      docs(s, dir)
+      Tables(s, dir, "documents")
         .select(col("doc_id"), call_function("md5_chain", words).as("fp"))
         .withColumn("fp_long", conv(substring(col("fp"), 1, 15), 16, 10).cast(LongType))
         .orderBy("doc_id")
@@ -562,7 +554,7 @@ object TextOps {
         |  round(CAST(f.n_fps AS DOUBLE) / m.n_grams, 4) AS density, f.fp_chk
         |FROM m JOIN f USING (doc_id) ORDER BY doc_id""".stripMargin
     ) { (s, dir) =>
-      val d = docs(s, dir).select(col("doc_id"), words.as("ws"))
+      val d = Tables(s, dir, "documents").select(col("doc_id"), words.as("ws"))
       val g = d.filter(size(col("ws")) >= 3)
         .select(col("doc_id"), col("ws"),
           explode(sequence(lit(0), size(col("ws")) - 3)).as("i"))
@@ -610,8 +602,7 @@ object TextOps {
         |SELECT lang, string_agg(tok, ',' ORDER BY rn) AS top_tokens
         |FROM r WHERE rn <= 20 GROUP BY lang ORDER BY lang""".stripMargin
     ) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
-      docs(s, dir)
+      Tables(s, dir, "documents")
         .select(col("lang"), explode(words).as("tok"))
         .groupBy("lang")
         // rank-ordered list joined with "," — scalar-hashable output
@@ -659,7 +650,7 @@ object TextOps {
          |  round(CAST(cv.m10k AS DOUBLE) / t.n_total, 4) AS cov_top10k
          |FROM t, cv""".stripMargin
     ) { (s, dir) =>
-      val d = docs(s, dir).select(words.as("ws")).filter(size(col("ws")) >= 3)
+      val d = Tables(s, dir, "documents").select(words.as("ws")).filter(size(col("ws")) >= 3)
       // 8-hex-char h32 inline (parity.md5Long is the 15-char variant — the
       // oracle above interpolates the 8-char spelling, both sides must match)
       val g32 = d
@@ -720,7 +711,7 @@ object TextOps {
       val dg = size(array_distinct(arrays_zip(
         slice(ws, lit(1), n - 1), slice(ws, lit(2), n - 1))))
       val dw = size(array_distinct(ws))
-      docs(s, dir)
+      Tables(s, dir, "documents")
         .select(col("doc_id"),
           when(n > 1, (n - 1 - dg).cast(DoubleType) / (n - 1))
             .otherwise(0.0).as("dup_2gram_ratio"),
@@ -751,7 +742,7 @@ object TextOps {
         |  CAST((cum - 1) // 128 - (cum - tokens) // 128 + 1 AS BIGINT) AS n_chunks
         |FROM c ORDER BY doc_id""".stripMargin
     ) { (s, dir) =>
-      docs(s, dir)
+      Tables(s, dir, "documents")
         .select(col("doc_id"), col("source"), size(words).cast(LongType).as("tokens"))
         .withColumn("cum",
           sum("tokens").over(Window.partitionBy("source").orderBy("doc_id")))
@@ -784,7 +775,7 @@ object TextOps {
         .when(col("lang") === "de", 3)
         .when(col("lang") === "fr", 4)
         .otherwise(5)
-      docs(s, dir)
+      Tables(s, dir, "documents")
         .filter(
           graft.ops.parity.md5Long(
             concat(lit("strat:"), col("doc_id").cast(StringType))) % denom === 0)
@@ -826,7 +817,7 @@ object TextOps {
     ) { (s, dir) =>
       val bk = graft.ops.parity.md5Long(
         concat(lit("split:"), col("doc_id").cast(StringType))) % 100
-      docs(s, dir)
+      Tables(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
           bk.as("bk"))
         .groupBy("lang", "source")
@@ -885,7 +876,7 @@ object TextOps {
           concat(lit(" call +1-555-"),
             lpad((col("doc_id") % 10000).cast(StringType), 4, "0")))
           .otherwise(""))
-      docs(s, dir)
+      Tables(s, dir, "documents")
         .select(col("doc_id"), raw.as("raw"))
         .select(col("doc_id"),
           regexp_count(col("raw"), lit(emailRe)).cast(LongType).as("n_emails"),
@@ -915,7 +906,7 @@ object TextOps {
         |  md5(substr(text, CAST(pos AS INTEGER), 200)) AS chunk_md5
         |FROM p ORDER BY doc_id, chunk_pos""".stripMargin
     ) { (s, dir) =>
-      docs(s, dir)
+      Tables(s, dir, "documents")
         .select(col("doc_id"), col("text"),
           explode(sequence(lit(1L), col("n_chars"), lit(150L))).as("pos"))
         .select(col("doc_id"), col("pos").as("chunk_pos"),
@@ -948,7 +939,7 @@ object TextOps {
          |    AS order_md5
          |FROM d GROUP BY 1 ORDER BY 1""".stripMargin
     ) { (s, dir) =>
-      val d = docs(s, dir).select(col("doc_id"), col("n_chars"),
+      val d = Tables(s, dir, "documents").select(col("doc_id"), col("n_chars"),
         graft.ops.parity.md5Long(
           concat(lit("shard:"), col("doc_id").cast(StringType))).as("h"))
       d.groupBy((col("h") % 16).cast(LongType).as("shard"))
@@ -995,13 +986,13 @@ object TextOps {
         |FROM r WHERE rn <= 3 AND doc_id < 100
         |ORDER BY doc_id, tok""".stripMargin
     ) { (s, dir) =>
-      val toks = docs(s, dir)
+      val toks = Tables(s, dir, "documents")
         .select(col("doc_id"), explode(words).as("tok"))
         .filter(col("tok") =!= "")
       val tf = toks.groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
       val d = tf.withColumn("df",
         count(lit(1)).over(Window.partitionBy("tok")))
-      val nd = docs(s, dir).agg(count(lit(1)).as("nd"))
+      val nd = Tables(s, dir, "documents").agg(count(lit(1)).as("nd"))
       val scored = d.crossJoin(broadcast(nd))
         .withColumn("score",
           round(col("tf") * log(col("nd").cast(DoubleType) / col("df")), 4))
@@ -1053,7 +1044,7 @@ object TextOps {
         |SELECT doc_id, score FROM s
         |ORDER BY score DESC, doc_id LIMIT 10""".stripMargin
     ) { (s, dir) =>
-      val toks = docs(s, dir)
+      val toks = Tables(s, dir, "documents")
         .select(col("doc_id"), explode(words).as("tok"))
       val d = toks.groupBy("doc_id").agg(
         count(when(col("tok") =!= "", 1)).as("dl"),
@@ -1099,7 +1090,7 @@ object TextOps {
     ) { (s, dir) =>
       val ts = words
       val n1 = greatest(size(ts) - 1, lit(0))
-      val pairs = docs(s, dir)
+      val pairs = Tables(s, dir, "documents")
         .select(explode(arrays_zip(
           slice(ts, lit(1), n1).as("a"), slice(ts, lit(2), n1).as("b"))).as("p"))
         .select(concat_ws(" ",
@@ -1144,7 +1135,7 @@ object TextOps {
         |WHERE w.doc_id < 100
         |GROUP BY 1 ORDER BY 1""".stripMargin
     ) { (s, dir) =>
-      val w = docs(s, dir).select(col("doc_id"), col("lang"),
+      val w = Tables(s, dir, "documents").select(col("doc_id"), col("lang"),
         explode(words).as("tok"))
       val g = w.groupBy("tok").agg(count(lit(1)).as("na"),
         count(when(col("lang") === "en", 1)).as("nt"))
@@ -1200,9 +1191,8 @@ object TextOps {
         |    AS BIGINT) AS keep
         |FROM z ORDER BY doc_id""".stripMargin
     ) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val enLex = array(lexicons(1)._2.map(lit): _*)
-      val m = docs(s, dir)
+      val m = Tables(s, dir, "documents")
         .select(col("doc_id"), length(col("text")).as("n_chars"),
           words.as("ws"))
         .select(col("doc_id"), col("n_chars"), size(col("ws")).as("nw"),
@@ -1246,8 +1236,7 @@ object TextOps {
         |  round(CAST(SUM(re_t) AS DOUBLE) / SUM(nw), 4) AS regex_fertility
         |FROM t GROUP BY 1 ORDER BY 1""".stripMargin
     ) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
-      val t = docs(s, dir).select(col("lang"), size(words).as("nw"),
+      val t = Tables(s, dir, "documents").select(col("lang"), size(words).as("nw"),
         call_function("bpe_cost", words).as("bpe"),
         size(regexp_extract_all(col("text"),
           lit("[a-z]+|[0-9]+|[^a-z0-9 ]"), lit(0))).as("re_t"))
@@ -1314,9 +1303,8 @@ object TextOps {
         |    AND n_stop >= 2 THEN 1 ELSE 0 END AS BIGINT) AS kept
         |FROM m ORDER BY doc_id""".stripMargin
     ) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val enLex = array(lexicons(1)._2.map(lit): _*)
-      val t = docs(s, dir).select(
+      val t = Tables(s, dir, "documents").select(
         col("doc_id"),
         length(col("text")).as("nc"),
         size(words).as("nw"),

@@ -14,13 +14,4 @@ object GraftSqlShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
-
-  /** Storage location of a catalog table (`sessionState` is package-private;
-    * used for metadata-only size probes — no data read).
-    */
-  def tableLocation(spark: SparkSession, table: String): java.net.URI =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
-      .catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .location
 }

@@ -27,8 +27,9 @@ class BucketedSnapshotSpec extends SparkSpecBase {
       val flatAudit = PlanAudit.audit(flat.queryExecution.executedPlan)
 
       // Bucketed storage: the snapshot scan satisfies the join distribution.
-      BucketedSnapshot.write(snapshot, "snap_bucketed", buckets = 8)
-      val bucketed = BucketedSnapshot.applyToTable(spark, "snap_bucketed", delta, fields)
+      val dir = java.nio.file.Files.createTempDirectory("snap_bucketed").toString
+      BucketedSnapshot.write(snapshot, dir, "snap_bucketed", buckets = 8)
+      val bucketed = BucketedSnapshot.applyToTable(spark, dir, "snap_bucketed", 8, delta, fields)
       bucketed.count()
       val bucketedAudit = PlanAudit.audit(bucketed.queryExecution.executedPlan)
 

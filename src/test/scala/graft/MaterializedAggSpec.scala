@@ -2,7 +2,7 @@ package graft
 
 import graft.cdc.MaterializedAgg
 import graft.sources.Changes
-import graft.streaming.ChangeStreamSink
+import graft.streaming.{ChangeStreamSink, CompactionPolicy}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -75,10 +75,10 @@ class MaterializedAggSpec extends SparkSpecBase {
 
   test("mv over the real change feed, merge-on-read delta flushes") {
     val dir = Files.createTempDirectory("mv_feed").toString
-    // compactEvery=3: batches 0,1 are DELTA flushes — the rollup must stay
+    // maxDeltas=2: batches 0,1 are DELTA flushes — the rollup must stay
     // exact even when no materialized snapshot is written
     val sink = new ChangeStreamSink(dir, "mod_mvf", fields,
-      compactEvery = 3, mv = Some(mv))
+      compaction = Some(CompactionPolicy(maxDeltas = 2)), mv = Some(mv))
     val ch = Changes(spark, sfDir)
     sink.processBatch(ch.filter(col("block") <= 300), 0)
     assertMvMatches(sink)

@@ -113,7 +113,7 @@ class MultiTableSpec extends SparkSpecBase {
     val store = new CursorStore(s"$dir/cursor", spark)
     BucketedSnapshot.write(
       sink.latestSnapshots(spark)("accounts").limit(1), // wrong contents on purpose
-      sink.snapTable("accounts", 1), buckets = 8)
+      dir, sink.snapTable("accounts", 1), buckets = 8)
     store.commit(Cursor("mod_crash#accounts", "cursor:999", 999, "block:999"), 1)
 
     // Reader view still resolves to batch 0 (module cursor is the txn point).
@@ -124,6 +124,34 @@ class MultiTableSpec extends SparkSpecBase {
     // half-written version; final state matches the one-shot query.
     sink.processBatch(b1, 1)
     val got = sink.latestSnapshots(spark).toSeq.sortBy(_._1).map { case (t, df) =>
+      df.select(lit(t).as("tbl"), col("pk"), col("amount"), col("note"))
+    }.reduce(_ unionByName _).collect().map(_.toSeq).toSet
+    assert(got == run("cdc_multi_table").collect().map(_.toSeq).toSet)
+  }
+
+  test("a new process resumes from the module cursor: versions re-register from baseDir") {
+    val dir = Files.createTempDirectory("mt_resume").toString
+    val wire = Changes.multiTable(spark, sfDir)
+    def state(m: Map[String, org.apache.spark.sql.DataFrame]) =
+      m.map { case (t, df) => t -> df.collect().map(_.toSeq).toSet }
+    val first = new MultiTableChangeSink(dir, "mod_mt_res", schemas)
+    first.processBatch(wire.filter(col("block") <= 300), 0)
+    first.processBatch(wire.filter(col("block") > 300 && col("block") <= 700), 1)
+    val at1 = state(first.latestSnapshots(spark))
+    // batch 2 half-flushed: accounts' version + table cursor, no module cursor
+    BucketedSnapshot.write(
+      first.latestSnapshots(spark)("accounts").limit(1), // wrong contents on purpose
+      dir, first.snapTable("accounts", 2), buckets = 8)
+    new CursorStore(s"$dir/cursor", spark)
+      .commit(Cursor("mod_mt_res#accounts", "cursor:999", 999, "block:999"), 2)
+    // a new process: the session catalog has never seen this sink's tables
+    val prefix = first.snapTable("accounts", 0).stripSuffix("_accounts_v0")
+    spark.catalog.listTables().collect().map(_.name).filter(_.startsWith(prefix))
+      .foreach(t => spark.sql(s"DROP TABLE $t"))
+    val resumed = new MultiTableChangeSink(dir, "mod_mt_res", schemas)
+    assert(state(resumed.latestSnapshots(spark)) == at1)
+    resumed.processBatch(wire.filter(col("block") > 700), 2) // the replay
+    val got = resumed.latestSnapshots(spark).toSeq.sortBy(_._1).map { case (t, df) =>
       df.select(lit(t).as("tbl"), col("pk"), col("amount"), col("note"))
     }.reduce(_ unionByName _).collect().map(_.toSeq).toSet
     assert(got == run("cdc_multi_table").collect().map(_.toSeq).toSet)

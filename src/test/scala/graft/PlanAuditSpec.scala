@@ -292,7 +292,7 @@ class PlanAuditSpec extends SparkSpecBase {
     // BroadcastNestedLoopJoin is O(|left|·|right|) compute — acceptable
     // ONLY against a side that stays BOUNDED at 100 TB. Every whitelist
     // entry below is one of exactly two such classes, each verified at
-    // the source (ProbeJoinAudit is the discovery pass):
+    // the source (the discovery pass is recorded in SURVEY §7 r16):
     //  - scalar/metadata broadcast: a 1-row global-total or threshold
     //    frame (bm25 avgdl·N, dsir/unigram corpus totals, lorenz/langid/
     //    tok_coverage/tfidf/basket_lift/psi_drift totals, dau_mau's

@@ -103,7 +103,7 @@ class StreamingSpec extends SparkSpecBase {
       sink.processBatch(b0, 0)
       val at0 = state(sink.latestSnapshot(spark).get)
       graft.cdc.BucketedSnapshot.write(sink.latestSnapshot(spark).get.limit(1), // wrong on purpose
-        sink.snapTable(1), buckets = 8)
+        dir, sink.snapTable(1), buckets = 8)
       if (n >= 1) new graft.streaming.SinkStats(s"$dir/stats", spark).record(
         graft.streaming.FlushStat("mod_k", 1, 999999, 0, 1, 1, 1, 1))
       if (n >= 2) Files.write(java.nio.file.Paths.get(s"$dir/cursor",
@@ -121,6 +121,40 @@ class StreamingSpec extends SparkSpecBase {
       assert(stats.map(_.getAs[Long]("batchId")).toSeq == Seq(0L, 1L), step)
       assert(stats(1).getAs[Long]("nOps") == b1.count() &&
         stats(1).getAs[Long]("maxBlock") == head, step)
+    }
+  }
+
+  test("a new process resumes from the committed cursor: versions re-register from baseDir") {
+    val fields = Seq("amount", "kval", "note")
+    val ch = Changes(spark, sfDir)
+    val batches = Seq(ch.filter(col("block") <= 300),
+      ch.filter(col("block") > 300 && col("block") <= 700), ch.filter(col("block") > 700))
+    val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      ch.select(col("pk"), col("amount"), col("kval"), col("note")).schema)
+    def state(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    def oneShot(upTo: Long) = state(ChangeLoader.applyBatch(empty,
+      ChangeLoader.collapse(ch.filter(col("block") <= upTo), fields), fields))
+    val head = ch.agg(max("block")).collect()(0).getLong(0)
+    // full snapshots, and merge-on-read (batches 0 and 1 are delta versions)
+    for (compaction <- Seq(None, Some(CompactionPolicy(maxDeltas = 2)))) {
+      val dir = Files.createTempDirectory("sink_resume").toString
+      def sink() = new ChangeStreamSink(dir, "mod_res", fields, compaction = compaction)
+      val first = sink()
+      first.processBatch(batches(0), 0)
+      first.processBatch(batches(1), 1)
+      // batch 2's snapshot landed, its cursor did not
+      graft.cdc.BucketedSnapshot.write(first.latestSnapshot(spark).get.limit(1), // wrong on purpose
+        dir, first.snapTable(2), buckets = 8)
+      // a new process: the session catalog has never seen this sink's tables
+      val prefix = first.snapTable(0).stripSuffix("_v0")
+      spark.catalog.listTables().collect().map(_.name).filter(_.startsWith(prefix))
+        .foreach(t => spark.sql(s"DROP TABLE $t"))
+      val resumed = sink()
+      assert(state(resumed.latestSnapshot(spark).get) == oneShot(700), s"$compaction")
+      resumed.processBatch(batches(2), 2) // the replay of batch 2
+      assert(state(resumed.latestSnapshot(spark).get) == oneShot(Long.MaxValue), s"$compaction")
+      val cur = new CursorStore(s"$dir/cursor", spark).readWithBatch("mod_res").get
+      assert(cur._2 == 2 && cur._1.blockNum == head, s"$compaction: $cur")
     }
   }
 
@@ -201,7 +235,8 @@ class StreamingSpec extends SparkSpecBase {
   test("merge-on-read: delta flushes write O(delta), compaction materializes") {
     val dir = Files.createTempDirectory("sink_mor").toString
     val fields = Seq("amount", "kval", "note")
-    val sink = new ChangeStreamSink(dir, "mod_mor", fields, compactEvery = 3)
+    val sink = new ChangeStreamSink(dir, "mod_mor", fields,
+      compaction = Some(CompactionPolicy(maxDeltas = 2)))
     val ch = Changes(spark, sfDir)
     val cuts = Seq(0L, 250L, 500L, 750L, Long.MaxValue)
     for (i <- 0 until 4)
@@ -242,9 +277,8 @@ class StreamingSpec extends SparkSpecBase {
       (i * 100L + k, (k % 25).toLong, "INSERT",
         Some(k * 1.0), Some(k.toLong), Some("x" * 20))
     }.toDF("block", "pk", "op", "amount", "kval", "note")
-    def bytesOf(table: String): Long = {
-      val p = java.nio.file.Paths.get(
-        org.apache.spark.sql.graftshim.GraftSqlShim.tableLocation(spark, table))
+    def bytesOf(dir: String, table: String): Long = {
+      val p = java.nio.file.Paths.get(graft.cdc.BucketedSnapshot.path(spark, dir, table).toUri)
       java.nio.file.Files.walk(p).filter(java.nio.file.Files.isRegularFile(_))
         .mapToLong(java.nio.file.Files.size(_)).sum()
     }
@@ -256,7 +290,7 @@ class StreamingSpec extends SparkSpecBase {
       compaction = Some(CompactionPolicy(maxDeltas = 100)))
     probe.processBatch(batch(0), 0)
     assert(spark.catalog.tableExists(deltaName(probe, 0)), "probe flush must be a delta")
-    val unit = bytesOf(deltaName(probe, 0))
+    val unit = bytesOf(probeDir, deltaName(probe, 0))
     // threshold 2.5 units: flushes 0-2 stay deltas (0, 1, 2 units pending),
     // flush 3 sees ~3 units pending ≥ 2.5 → materializes
     val dir = Files.createTempDirectory("sink_sz").toString
