@@ -2,6 +2,12 @@ package graft.cdc
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
+
+import java.nio.charset.StandardCharsets
+import java.security.MessageDigest
 
 /** Bucketed snapshot storage — the 100 TB layout for the CDC apply loop.
   *
@@ -23,18 +29,61 @@ object BucketedSnapshot {
   /** Where a version table's files live, qualified: the catalog would
     * resolve a relative location against the warehouse dir instead.
     */
-  def path(spark: SparkSession, baseDir: String, table: String): Path = {
-    val p = new Path(s"$baseDir/tables/$table")
+  def path(spark: SparkSession, baseDir: String, table: String): Path =
+    qualified(spark, s"$baseDir/tables/$table")
+
+  private def qualified(spark: SparkSession, dir: String): Path = {
+    val p = new Path(dir)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p)
+  }
+
+  /** The name prefix of one sink's version tables: `graft_<kind>_` plus an
+    * MD5 of the QUALIFIED base dir and the module hash, so parallel sinks
+    * never collide and `tgt` and `/abs/path/tgt` name the same sink.
+    */
+  def tablePrefix(spark: SparkSession, kind: String, baseDir: String,
+      moduleHash: String): String = {
+    val h = MessageDigest.getInstance("MD5")
+      .digest(s"${qualified(spark, baseDir)}:$moduleHash".getBytes(StandardCharsets.UTF_8))
+      .take(5).map("%02x".format(_)).mkString
+    s"graft_${kind}_$h"
   }
 
   /** Persist a version table under `baseDir`, bucketed+sorted by pk
     * (`buckets` 0 = a plain table, for the rollup states).
+    *
+    * A bucketed write runs in [[writeTasks]] tasks, not one per bucket:
+    * `coalesce` packs whole input partitions, so when `df` arrives
+    * hash-partitioned by pk into `buckets` partitions (the apply join over
+    * a bucketed snapshot does) each bucket still lands in one task and the
+    * version keeps one file per bucket.
     */
   def write(df: DataFrame, baseDir: String, table: String, buckets: Int): Unit = {
-    val w = df.write.mode(SaveMode.Overwrite).format("parquet")
+    val packed = if (buckets > 0) df.coalesce(writeTasks(df, buckets)) else df
+    val w = packed.write.mode(SaveMode.Overwrite).format("parquet")
       .option("path", path(df.sparkSession, baseDir, table).toString)
     (if (buckets > 0) w.bucketBy(buckets, "pk").sortBy("pk") else w).saveAsTable(table)
+  }
+
+  /** Tasks for a bucketed write: the partitions Spark packs a file scan of
+    * the same size into — the input's estimated bytes as one file per
+    * bucket, packed by [[FilePartition.getFilePartitions]] at
+    * [[FilePartition.maxSplitBytes]], so never more than `buckets`. An
+    * input of unknown size (Spark's default estimate is `Long.MaxValue`)
+    * keeps one task per bucket.
+    */
+  private def writeTasks(df: DataFrame, buckets: Int): Int = {
+    val spark = df.sparkSession
+    // leaf estimates only: the cache-substituted plan, no optimizer pass
+    val inputBytes = df.queryExecution.withCachedData.collectLeaves().map(_.stats.sizeInBytes).sum
+    val total = inputBytes + BigInt(buckets) * spark.sessionState.conf.filesOpenCostInBytes
+    if (!total.isValidLong) buckets
+    else {
+      val file = PartitionedFile(InternalRow.empty, SparkPath.fromPathString("bucket"), 0,
+        (inputBytes / buckets).toLong)
+      FilePartition.getFilePartitions(spark, Seq.fill(buckets)(file),
+        FilePartition.maxSplitBytes(spark, total.toLong)).size
+    }
   }
 
   /** A version table, or None when neither the session's catalog nor

@@ -6,9 +6,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import java.nio.charset.StandardCharsets
-import java.security.MessageDigest
-
 /** SURVEY §2.1 #8 — the reference's sink loop (`sinker/sinker.go:96-190` +
   * `db/flush.go`) as a Structured Streaming `foreachBatch` sink.
   *
@@ -32,13 +29,25 @@ import java.security.MessageDigest
   * Steps 2+4 give the reference's "ops + cursor in one transaction"
   * exactly-once guarantee under micro-batch replay.
   *
-  * Scale: snapshot versions are pk-bucketed+sorted tables
-  * ([[BucketedSnapshot]]), so the apply join's snapshot side arrives
-  * pre-partitioned and ONLY the collapsed delta shuffles — per-flush network
-  * is O(batch), not O(snapshot), the lake equivalent of the reference
-  * target's ORDER BY pk MergeTree merge. (The snapshot files are still
-  * rewritten on disk each flush — bounding that needs a compacting format's
-  * merge-on-read; the shuffle, which is the cluster-wide cost, is delta-only.)
+  * Per-flush shape (a live one-block flush runs ≤ 6 Spark jobs):
+  *
+  *   - one head shuffle per micro-batch: `groupBy(_unit)` of (max block,
+  *     min block, count) gives the units and each unit's [[FlushStat]];
+  *   - one delta exchange per micro-batch: the batch is cached
+  *     hash-partitioned by pk into `buckets` partitions, and each unit's
+  *     collapse window, its delete aggregate and the apply join's delta
+  *     side read it without shuffling again. Snapshot
+  *     versions are pk-bucketed+sorted tables ([[BucketedSnapshot]]), so the
+  *     snapshot side arrives pre-partitioned and never shuffles — per-flush
+  *     network is O(batch), not O(snapshot), the lake equivalent of the
+  *     reference target's ORDER BY pk MergeTree merge;
+  *   - a one-wave rewrite: [[BucketedSnapshot.write]] packs the bucket
+  *     partitions into as many tasks as a file scan of that size would get,
+  *     one file per bucket. (The snapshot files are still rewritten each
+  *     flush; bounding that needs a compacting format's merge-on-read.)
+  *
+  * The live counters ([[LiveSinkStats]]) carry per-phase time: head,
+  * write (collapse+apply+write), stats and commit.
   */
 /** The reference's flush cadence (`sinker/sinker.go:20-21,180-194`):
   * historical blocks flush every `HISTORICAL_BLOCK_FLUSH_EACH` (1000),
@@ -114,21 +123,21 @@ final class ChangeStreamSink(
 ) {
   /** Snapshot versions are catalog tables (bucketing metadata lives in the
     * catalog) whose files live under `baseDir` ([[BucketedSnapshot.resolve]]);
-    * the name is namespaced by (baseDir, moduleHash) so parallel sinks never
-    * collide.
+    * the name is namespaced by (qualified baseDir, moduleHash) so parallel
+    * sinks never collide ([[BucketedSnapshot.tablePrefix]]).
     */
-  private val tablePrefix = {
-    val h = MessageDigest.getInstance("MD5")
-      .digest(s"$baseDir:$moduleHash".getBytes(StandardCharsets.UTF_8))
-      .take(5).map("%02x".format(_)).mkString
-    s"graft_snap_$h"
-  }
+  private lazy val tablePrefix =
+    BucketedSnapshot.tablePrefix(SparkSession.active, "snap", baseDir, moduleHash)
   private[graft] def snapTable(batchId: Long) = s"${tablePrefix}_v$batchId"
 
+  /** The last flush's apply join, kept unplanned (spec hook). */
+  @volatile private[graft] var lastApply: Option[DataFrame] = None
+
   /** Plan audit of the last flush's apply join (spec hook: proves the
-    * snapshot side contributed no shuffle).
+    * snapshot side contributed no shuffle), planned only when asked.
     */
-  @volatile private[graft] var lastApplyAudit: Option[PlanAudit.Audit] = None
+  private[graft] def lastApplyAudit: Option[PlanAudit.Audit] =
+    lastApply.map(df => PlanAudit.audit(df.queryExecution.executedPlan))
 
   private def deltaTable(batchId: Long) = s"${tablePrefix}_d$batchId"
 
@@ -219,39 +228,54 @@ final class ChangeStreamSink(
     //
     // Persist FIRST: the one aggregate below materializes the cache, and
     // every sub-flush filters the cached frame — one micro-batch source
-    // scan total, however many units a historical backfill spans.
+    // scan total, however many units a historical backfill spans. The cache
+    // is built through the micro-batch's one delta exchange: hash-partitioned
+    // by pk into `buckets` partitions, the partitioning of the bucketed
+    // snapshot, so the collapse window, its delete aggregate and the apply
+    // join's delta side all read it without shuffling again.
     val withUnit = batch.withColumn("_unit", policy.map(unitCol).getOrElse(lit(0L)))
+      .repartition(buckets, col("pk"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // one action per micro-batch: the units and each unit's head
-      // (max block, min block, ops, distinct pks). Grouped by the unit
-      // EXPRESSION, never raw blocks — driver traffic is O(units) ≤
-      // UnitStride by the require below; an empty batch has no units.
-      val heads = withUnit.groupBy("_unit")
-        .agg(max("block"), min("block"), count(lit(1)), countDistinct(col("pk")))
+      // one action, one shuffle per micro-batch: the units and each unit's
+      // head (max block, min block, ops). Grouped by the unit EXPRESSION,
+      // never raw blocks — driver traffic is O(units) ≤ UnitStride by the
+      // require below; an empty batch has no units. It reads the cache in
+      // one wave of tasks, not one task per bucket.
+      val h0 = System.nanoTime()
+      val heads = withUnit.coalesce(batch.sparkSession.sparkContext.defaultParallelism)
+        .groupBy("_unit")
+        .agg(max("block"), min("block"), count(lit(1)))
         .collect().sortBy(_.getLong(0))
+      var headNanos = System.nanoTime() - h0
       require(heads.length <= FlushPolicy.UnitStride,
         s"micro-batch spans ${heads.length} flush units (> ${FlushPolicy.UnitStride}); " +
           "raise the trigger rate or the flush interval")
       heads.zipWithIndex.foreach { case (h, idx) =>
         val bid = if (policy.isEmpty) batchId else batchId * FlushPolicy.UnitStride + idx
-        flushOne(withUnit.filter(col("_unit") === h.getLong(0)).drop("_unit"), bid,
-          FlushStat(moduleHash, bid, h.getLong(1), h.getLong(2), h.getLong(3), h.getLong(4), 0L, 0L))
+        // a lone unit is the whole frame: filtering on its id would inline
+        // a new literal, and so compile new code, every live flush
+        val unit = if (heads.length == 1) withUnit else withUnit.filter(col("_unit") === h.getLong(0))
+        if (flushOne(unit.drop("_unit"), bid,
+            FlushStat(moduleHash, bid, h.getLong(1), h.getLong(2), h.getLong(3), 0L, 0L), headNanos))
+          headNanos = 0L // the head phase counts once, with the first flush
       }
     } finally { withUnit.unpersist(blocking = false); () }
   }
 
   /** One versioned flush of `batch`; `head` carries the unit's block range
-    * and counts (its timings are filled in here).
+    * and counts (its timings are filled in here). False when `bid` is
+    * already committed (a replay).
     */
-  private def flushOne(batch: DataFrame, bid: Long, head: FlushStat): Unit = {
+  private def flushOne(batch: DataFrame, bid: Long, head: FlushStat, headNanos: Long): Boolean = {
     val spark = batch.sparkSession
     val store = new CursorStore(s"$baseDir/cursor", spark)
     // one listing resolves the replay check, the current version and the
     // pending deltas (newest first)
     val committed = store.allBatches(moduleHash).sorted.reverse
-    if (committed.contains(bid)) return // replay: durable already
+    if (committed.contains(bid)) return false // replay: durable already
     val t0 = System.currentTimeMillis()
+    val n0 = System.nanoTime()
     val collapsed = ChangeLoader.collapse(batch, fieldCols)
     val pendingBids = committed.takeWhile(isDelta(spark, _))
     val materialize = compaction.forall { cp =>
@@ -269,8 +293,10 @@ final class ChangeStreamSink(
     }
     if (materialize) {
       val next = ChangeLoader.applyBatch(prior, collapsed, fieldCols)
-      lastApplyAudit = Some(PlanAudit.audit(next.queryExecution.executedPlan))
+      // the write binds `next` to the cached batch (its withCachedData), so
+      // a later audit still sees what this flush read
       BucketedSnapshot.write(next, baseDir, snapTable(bid), buckets)
+      lastApply = Some(next)
     } else {
       // merge-on-read delta flush: write ONLY the collapsed batch —
       // O(delta) disk, the MergeTree-style write path; readers fold it in
@@ -292,13 +318,19 @@ final class ChangeStreamSink(
     // the stats entry lands before the cursor: a crash in between leaves an
     // entry that the replay of this batchId overwrites, never a second one
     val flushMillis = System.currentTimeMillis() - tFlush
+    val n1 = System.nanoTime()
     new SinkStats(s"$baseDir/stats", spark).record(head.copy(flushMillis = flushMillis,
       wallMillis = math.max(1, System.currentTimeMillis() - t0)))
+    val n2 = System.nanoTime()
     // the commit point: the snapshot above becomes visible to readers
     store.commit(Cursor(moduleHash, s"cursor:${head.maxBlock}", head.maxBlock,
       s"block:${head.maxBlock}"), bid)
-    // live counters (the reference's process-wide metrics set)
-    LiveSinkStats.of(moduleHash).recordFlush(head.nOps, head.maxBlock, flushMillis * 1000000L)
+    val n3 = System.nanoTime()
+    // live counters (the reference's process-wide metrics set); the flush
+    // duration spans every phase, so the phases never sum past it
+    LiveSinkStats.of(moduleHash).recordFlush(head.nOps, head.maxBlock, headNanos + (n3 - n0),
+      Map("head" -> headNanos, "write" -> (n1 - n0), "stats" -> (n2 - n1), "commit" -> (n3 - n2)))
+    true
   }
 
   /** Roll the sink back to an earlier committed batch (a chain-reorg /

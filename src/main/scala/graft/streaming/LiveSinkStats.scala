@@ -21,6 +21,8 @@ final class LiveSinkStats(val moduleHash: String) {
   private val flushCount = new AtomicLong(0)
   private val flushedEntries = new AtomicLong(0)
   private val flushDurationNanos = new AtomicLong(0)
+  // time per flush phase ([[LiveSinkStats.Phases]]), in nanoseconds
+  private val phaseNanos = LiveSinkStats.Phases.map(_ -> new AtomicLong(0)).toMap
   // stats.go:30 starts from an unset block ref; -1 plays that role.
   @volatile private var lastBlockNum: Long = -1L
   @volatile private var closed = false
@@ -28,12 +30,15 @@ final class LiveSinkStats(val moduleHash: String) {
 
   /** Record one completed flush — called from the sink's flush path the way
     * the reference increments FlushCount / FlushedEntriesCount /
-    * FlushDuration after each `Flush` (`sinker/sinker.go`).
+    * FlushDuration after each `Flush` (`sinker/sinker.go`). `phases` maps
+    * a [[LiveSinkStats.Phases]] name to its share of `durationNanos`.
     */
-  def recordFlush(entries: Long, headBlock: Long, durationNanos: Long): Unit = {
+  def recordFlush(entries: Long, headBlock: Long, durationNanos: Long,
+      phases: Map[String, Long] = Map.empty): Unit = {
     flushCount.incrementAndGet()
     flushedEntries.addAndGet(entries)
     flushDurationNanos.addAndGet(durationNanos)
+    phases.foreach { case (p, n) => phaseNanos(p).addAndGet(n) }
     if (headBlock > lastBlockNum) lastBlockNum = headBlock
   }
 
@@ -47,6 +52,9 @@ final class LiveSinkStats(val moduleHash: String) {
     * exports (`metrics.go:15`: "time spent flushing ... (in nanoseconds)").
     */
   def flushDurationNanosTotal: Long = flushDurationNanos.get()
+
+  /** Nanoseconds spent so far in one flush phase. */
+  def phaseNanosTotal(phase: String): Long = phaseNanos(phase).get()
 
   def snapshot(flushRatePerSec: Double = Double.NaN): LiveSinkStats.Progress =
     LiveSinkStats.Progress(
@@ -94,6 +102,12 @@ final class LiveSinkStats(val moduleHash: String) {
 }
 
 object LiveSinkStats {
+
+  /** The flush phases a sink times: the micro-batch's head aggregate, the
+    * collapse+apply+write of the version, the stats entry and the cursor
+    * commit.
+    */
+  val Phases: Seq[String] = Seq("head", "write", "stats", "commit")
 
   /** One emitted progress row — the fields of the reference's periodic log
     * line (`stats.go:65-69`: db_flush_rate, flushed_entries, last_block)
@@ -162,6 +176,18 @@ object LiveSinkStats {
       mods.foreach { m =>
         val label = escapeLabel(m.moduleHash)
         sb.append(s"""$name{module="$label"} ${value(m)}""").append('\n')
+      }
+    }
+    // graft's own family, after the reference's: per-phase flush time
+    val phase = "graft_sink_flush_phase_seconds_total"
+    sb.append(s"# HELP $phase Time spent in each flush phase " +
+      "(head aggregate, collapse+apply+write, stats entry, cursor commit)\n")
+    sb.append(s"# TYPE $phase counter\n")
+    mods.foreach { m =>
+      val label = escapeLabel(m.moduleHash)
+      Phases.foreach { p =>
+        sb.append(s"""$phase{module="$label",phase="$p"} ${m.phaseNanosTotal(p) / 1e9}""")
+          .append('\n')
       }
     }
     sb.toString

@@ -6,9 +6,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import java.nio.charset.StandardCharsets
-import java.security.MessageDigest
-
 /** The reference's FULL sink loop — multi-table dispatch + atomic flush —
   * as a `foreachBatch` sink over the wire-shaped change feed
   * (`block, table, pk, op, fields map`).
@@ -35,12 +32,8 @@ final class MultiTableChangeSink(
     buckets: Int = 8
 ) {
 
-  private val prefix = {
-    val h = MessageDigest.getInstance("MD5")
-      .digest(s"$baseDir:$moduleHash".getBytes(StandardCharsets.UTF_8))
-      .take(5).map("%02x".format(_)).mkString
-    s"graft_mt_$h"
-  }
+  private lazy val prefix =
+    BucketedSnapshot.tablePrefix(SparkSession.active, "mt", baseDir, moduleHash)
   private[graft] def snapTable(table: String, batchId: Long) =
     s"${prefix}_${table}_v$batchId"
 
@@ -74,13 +67,17 @@ final class MultiTableChangeSink(
     val store = new CursorStore(s"$baseDir/cursor", spark)
     if (store.committed(moduleHash, batchId)) return // replay: durable already
     val t0 = System.currentTimeMillis()
-    // One scan feeds every table's route + the one head aggregate.
-    val cached = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // One scan feeds every table's route + the one head aggregate. The
+    // cache is built through the one delta exchange — hash-partitioned by
+    // pk like the bucketed versions — so each table's collapse and apply
+    // join read it without shuffling again.
+    val cached = batch.repartition(buckets, col("pk"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // one action per micro-batch: each table's (max block, min block, ops,
-      // distinct pks); an empty batch has no rows and commits nothing
+      // one action, one shuffle per micro-batch: each table's (max block,
+      // min block, ops); an empty batch has no rows and commits nothing
       val heads = cached.groupBy("table")
-        .agg(max("block"), min("block"), count(lit(1)), countDistinct(col("pk")))
+        .agg(max("block"), min("block"), count(lit(1)))
         .collect().map(r => r.getString(0) -> r).toMap
       if (heads.isEmpty) return
       schemas.foreach { case (t, sch) =>
@@ -108,7 +105,7 @@ final class MultiTableChangeSink(
       val wall = math.max(1, System.currentTimeMillis() - t0)
       new SinkStats(s"$baseDir/stats", spark).record(FlushStat(
         moduleHash, batchId, maxBlock, rows.map(_.getLong(2)).min, rows.map(_.getLong(3)).sum,
-        rows.map(_.getLong(4)).sum, flushMillis = wall, wallMillis = wall))
+        flushMillis = wall, wallMillis = wall))
       // the transaction commit point: everything above is invisible to
       // readers (latestSnapshots resolves through cursors) until this lands
       store.commit(Cursor(moduleHash, s"cursor:$maxBlock", maxBlock,

@@ -14,7 +14,6 @@ final case class FlushStat(
     maxBlock: Long,
     minBlock: Long,
     nOps: Long,
-    nPks: Long,
     flushMillis: Long,
     wallMillis: Long
 )
@@ -34,7 +33,10 @@ final class SinkStats(path: String, spark: SparkSession) {
   def record(stat: FlushStat): Unit =
     entries.put(stat.moduleHash, stat.batchId, stat, overwrite = true)
 
-  /** Every recorded flush; None only when nothing was ever recorded. */
+  /** Every recorded flush; None only when nothing was ever recorded.
+    * Entries are read against the current [[FlushStat]] schema, so fields
+    * an older writer recorded (`nPks`) are ignored.
+    */
   def log(): Option[DataFrame] = entries.keys().map { _ =>
     spark.read.schema(Encoders.product[FlushStat].schema)
       .option("recursiveFileLookup", "true").option("mode", "FAILFAST").json(path)

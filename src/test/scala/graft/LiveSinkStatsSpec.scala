@@ -92,6 +92,31 @@ class LiveSinkStatsSpec extends SparkSpecBase {
     LiveSinkStats.reset("mod_live_p")
   }
 
+  test("per-phase flush timings: every phase scraped, the phases within the flush time") {
+    LiveSinkStats.reset("mod_live_ph")
+    val dir = Files.createTempDirectory("livephase").toString
+    val sink = new ChangeStreamSink(dir, "mod_live_ph", Seq("amount", "kval", "note"))
+    val ch = Changes(spark, sfDir)
+    sink.processBatch(ch.filter(col("block") <= 500), 0)
+    sink.processBatch(ch.filter(col("block") > 500), 1)
+    val m = LiveSinkStats.of("mod_live_ph")
+    val phases = LiveSinkStats.Phases.map(p => p -> m.phaseNanosTotal(p))
+    assert(phases.forall(_._2 > 0), s"a phase recorded no time: $phases")
+    assert(phases.map(_._2).sum <= m.flushDurationNanosTotal,
+      s"phases $phases exceed the flush time ${m.flushDurationNanosTotal}")
+    val text = LiveSinkStats.scrape()
+    assert(text.contains("# TYPE graft_sink_flush_phase_seconds_total counter"))
+    LiveSinkStats.Phases.foreach { p =>
+      val line = text.linesIterator.find(_.startsWith(
+        s"""graft_sink_flush_phase_seconds_total{module="mod_live_ph",phase="$p"} """))
+      assert(line.exists(_.split(' ').last.toDouble > 0), s"phase $p: $line")
+    }
+    // the reference's own families are still there, unchanged
+    assert(text.contains(
+      """substreams_sink_clickhouse_store_flush_count{module="mod_live_ph"} 2"""))
+    LiveSinkStats.reset("mod_live_ph")
+  }
+
   test("HTTP metrics endpoint serves the scrape — --metrics-listen-addr parity") {
     LiveSinkStats.reset("mod_live_h")
     val dir = Files.createTempDirectory("livehttp").toString

@@ -3,6 +3,12 @@ package graft
 import graft.cdc.{ChangeLoader, CursorStore}
 import graft.sources.Changes
 import graft.streaming.{ChangeRow, ChangeStreamSink, CompactionPolicy, FlushPolicy, StatefulMerge, StreamOps}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.datasources.BucketingUtils
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -105,7 +111,7 @@ class StreamingSpec extends SparkSpecBase {
       graft.cdc.BucketedSnapshot.write(sink.latestSnapshot(spark).get.limit(1), // wrong on purpose
         dir, sink.snapTable(1), buckets = 8)
       if (n >= 1) new graft.streaming.SinkStats(s"$dir/stats", spark).record(
-        graft.streaming.FlushStat("mod_k", 1, 999999, 0, 1, 1, 1, 1))
+        graft.streaming.FlushStat("mod_k", 1, 999999, 0, 1, 1, 1))
       if (n >= 2) Files.write(java.nio.file.Paths.get(s"$dir/cursor",
           graft.cdc.MetadataLog.escape("mod_k"), s".1.json.${java.util.UUID.randomUUID()}.tmp"),
         """{"moduleHash":"mod_k","cursor":"lost","blockNum":999999,"blockId":"lost"}""".getBytes)
@@ -175,6 +181,22 @@ class StreamingSpec extends SparkSpecBase {
     assert(r.getAs[Double]("entries_per_sec") > 0)
   }
 
+  /** Every node of a physical plan: through AQE wrappers, and into the
+    * plan a cached relation is built from (where the sink's one delta
+    * exchange lives).
+    */
+  private def planNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+    case q: QueryStageExec => q +: planNodes(q.plan)
+    case m: InMemoryTableScanExec => m +: planNodes(m.relation.cachedPlan)
+    case o => o +: o.children.flatMap(planNodes)
+  }
+
+  private def bucketedScan(p: SparkPlan): Boolean = p match {
+    case f: FileSourceScanExec => f.bucketedScan
+    case _ => false
+  }
+
   test("sink flush shuffles only the delta: bucketed snapshot side never re-shuffles") {
     val dir = Files.createTempDirectory("sink_delta").toString
     val sink = new ChangeStreamSink(dir, "mod_delta", Seq("amount", "kval", "note"))
@@ -188,18 +210,19 @@ class StreamingSpec extends SparkSpecBase {
         val b = ch.filter(col("block") > cuts(i) && col("block") <= cuts(i + 1))
         sink.processBatch(b, i.toLong)
         if (i > 0) {
-          // Audit of the sink's own apply join (snapshot = bucketed table)
-          // vs the same join against a FLAT parquet copy of that snapshot:
-          // the bucketed plan must carry strictly fewer exchanges — the
-          // missing one is the snapshot side.
+          // the apply join itself shuffles nothing: the snapshot side is a
+          // bucketed scan and the delta side reads the pk-partitioned cache
           val sinkAudit = sink.lastApplyAudit.get
-          val flatPath = s"$dir/flat_prior_$i"
-          spark.table(sink.snapTable(i - 1L)).write.parquet(flatPath)
-          val flat = ChangeLoader.applyBatch(
-            spark.read.parquet(flatPath), ChangeLoader.collapse(b, fields), fields)
-          val flatAudit = PlanAudit.audit(flat.queryExecution.executedPlan)
-          assert(sinkAudit.shuffles < flatAudit.shuffles,
-            s"batch $i: bucketed $sinkAudit vs flat $flatAudit")
+          assert(sinkAudit.shuffles == 0, s"batch $i: $sinkAudit")
+          // the whole flush, cache build included, has exactly one
+          // exchange, and it is on the delta side: no bucketed snapshot
+          // scan below it, one beside it
+          val nodes = planNodes(sink.lastApply.get.queryExecution.executedPlan)
+          val exchanges = nodes.collect { case e: ShuffleExchangeLike => e }.distinct
+          assert(exchanges.size == 1, s"batch $i: ${exchanges.size} exchanges")
+          assert(!planNodes(exchanges.head).exists(bucketedScan),
+            s"batch $i: the exchange re-shuffles the snapshot")
+          assert(nodes.exists(bucketedScan), s"batch $i: the snapshot side is not a bucketed scan")
         }
       }
       // unchanged contents: final snapshot == one-shot collapse+apply
@@ -212,6 +235,119 @@ class StreamingSpec extends SparkSpecBase {
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
     }
+  }
+
+  test("a live one-block flush onto a bucketed snapshot runs at most 6 Spark jobs") {
+    val fields = Seq("amount", "kval", "note")
+    val ch = Changes(spark, sfDir)
+    val live = ch.agg(max("block")).collect()(0).getLong(0)
+    val dir = Files.createTempDirectory("sink_jobs").toString
+    val sink = new ChangeStreamSink(dir, "mod_jobs", fields,
+      policy = Some(FlushPolicy(headBlock = live)))
+    sink.processBatch(ch.filter(col("block") < live), 0)
+    val groups = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = groups.add(
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    def marker(name: String): Unit = {
+      spark.sparkContext.setJobGroup(name, name)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.clearJobGroup()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      marker("before")
+      sink.processBatch(ch.filter(col("block") === live), 1)
+      marker("after")
+      // the bus delivers in order: every job between the markers is the flush's
+      val seen = scala.collection.mutable.ArrayBuffer.empty[String]
+      while (!seen.lastOption.contains("after")) {
+        val g = groups.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+        assert(g != null, "listener bus stalled")
+        seen += g
+      }
+      val flushJobs = seen.dropWhile(_ != "before").drop(1).dropRight(1).size
+      assert(flushJobs >= 1 && flushJobs <= 6, s"live flush ran $flushJobs jobs")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(new CursorStore(s"$dir/cursor", spark).read("mod_jobs").get.blockNum == live)
+  }
+
+  test("every version of the packed rewrite holds one file per non-empty bucket") {
+    val fields = Seq("amount", "kval", "note")
+    val ch = Changes(spark, sfDir)
+    val dir = Files.createTempDirectory("sink_files").toString
+    // two units per micro-batch, and a scan size that packs the 8 buckets
+    // into 2 write tasks
+    val sink = new ChangeStreamSink(dir, "mod_files", fields,
+      policy = Some(FlushPolicy(flushInterval = 250)))
+    val prev = spark.conf.getOption("spark.sql.files.minPartitionNum")
+    spark.conf.set("spark.sql.files.minPartitionNum", "2")
+    try {
+      val cuts = Seq(-1L, 499L, Long.MaxValue)
+      for (i <- 0 until 2)
+        sink.processBatch(ch.filter(col("block") > cuts(i) && col("block") <= cuts(i + 1)), i.toLong)
+    } finally prev match {
+      case Some(v) => spark.conf.set("spark.sql.files.minPartitionNum", v)
+      case None => spark.conf.unset("spark.sql.files.minPartitionNum")
+    }
+    val bids = new CursorStore(s"$dir/cursor", spark).allBatches("mod_files")
+    assert(bids.size >= 3, s"versions $bids")
+    bids.foreach { bid =>
+      val t = sink.snapTable(bid)
+      val files = new java.io.File(graft.cdc.BucketedSnapshot.path(spark, dir, t).toUri)
+        .listFiles().map(_.getName).filter(_.startsWith("part-")).toSeq
+      val fileBuckets = files.map(f => BucketingUtils.getBucketId(f).get)
+      val rowBuckets = spark.table(t).select(pmod(hash(col("pk")), lit(8))).distinct()
+        .collect().map(_.getInt(0)).toSet
+      assert(fileBuckets.size == fileBuckets.toSet.size && fileBuckets.toSet == rowBuckets,
+        s"$t: files $files for buckets $rowBuckets")
+    }
+    val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      ch.select(col("pk"), col("amount"), col("kval"), col("note")).schema)
+    val exp = ChangeLoader.applyBatch(empty, ChangeLoader.collapse(ch, fields), fields)
+      .collect().map(_.toSeq).toSet
+    assert(sink.latestSnapshot(spark).get.collect().map(_.toSeq).toSet == exp)
+  }
+
+  test("one sink dir spelled relative or absolute names the same versions") {
+    val fields = Seq("amount", "kval", "note")
+    val ch = Changes(spark, sfDir)
+    val abs = Files.createTempDirectory("sink_rel").toAbsolutePath
+    val rel = java.nio.file.Paths.get("").toAbsolutePath.relativize(abs).toString
+    val viaRel = new ChangeStreamSink(rel, "mod_rel", fields)
+    viaRel.processBatch(ch.filter(col("block") <= 500), 0)
+    val at0 = viaRel.latestSnapshot(spark).get.collect().map(_.toSeq).toSet
+    // a new process: the session catalog has never seen the versions
+    val prefix = viaRel.snapTable(0).stripSuffix("_v0")
+    spark.catalog.listTables().collect().map(_.name).filter(_.startsWith(prefix))
+      .foreach(t => spark.sql(s"DROP TABLE $t"))
+    val viaAbs = new ChangeStreamSink(abs.toString, "mod_rel", fields)
+    assert(viaAbs.snapTable(0) == viaRel.snapTable(0))
+    assert(viaAbs.latestSnapshot(spark).get.collect().map(_.toSeq).toSet == at0)
+    viaAbs.processBatch(ch.filter(col("block") > 500), 1)
+    val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      ch.select(col("pk"), col("amount"), col("kval"), col("note")).schema)
+    val exp = ChangeLoader.applyBatch(empty, ChangeLoader.collapse(ch, fields), fields)
+      .collect().map(_.toSeq).toSet
+    assert(viaAbs.latestSnapshot(spark).get.collect().map(_.toSeq).toSet == exp)
+  }
+
+  test("stats entries written with nPks still read through log() and rates()") {
+    val dir = Files.createTempDirectory("sink_oldstats").toString
+    val old = java.nio.file.Paths.get(s"$dir/stats", graft.cdc.MetadataLog.escape("mod_old"))
+    Files.createDirectories(old)
+    Files.write(old.resolve("0.json"), ("""{"moduleHash":"mod_old","batchId":0,"maxBlock":10,""" +
+      """"minBlock":1,"nOps":5,"nPks":3,"flushMillis":7,"wallMillis":9}""").getBytes)
+    val stats = new graft.streaming.SinkStats(s"$dir/stats", spark)
+    stats.record(graft.streaming.FlushStat("mod_old", 1, 20, 11, 4, 6, 8))
+    val log = stats.log().get
+    assert(!log.columns.contains("nPks"))
+    assert(log.orderBy("batchId").collect().map(r =>
+      (r.getAs[Long]("batchId"), r.getAs[Long]("nOps"), r.getAs[Long]("maxBlock"))).toSeq ==
+      Seq((0L, 5L, 10L), (1L, 4L, 20L)))
+    val r = stats.rates().get.collect().head
+    assert(r.getAs[Long]("entries") == 9 && r.getAs[Long]("flushes") == 2)
   }
 
   test("rollback restores an earlier snapshot version (reorg handling)") {
