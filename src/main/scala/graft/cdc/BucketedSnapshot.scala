@@ -1,13 +1,18 @@
 package graft.cdc
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
+import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation,
+  InMemoryFileIndex, InsertIntoHadoopFsRelationCommand, LogicalRelation, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.graftshim.GraftSqlShim
+import org.apache.spark.sql.types.{DataType, StructType}
 
-import java.nio.charset.StandardCharsets
-import java.security.MessageDigest
+import java.io.FileNotFoundException
+import java.nio.charset.StandardCharsets.UTF_8
 
 /** Bucketed snapshot storage — the 100 TB layout for the CDC apply loop.
   *
@@ -19,38 +24,36 @@ import java.security.MessageDigest
   * O(batch) network. This is the lake equivalent of the reference target's
   * ORDER BY pk MergeTree layout.
   *
-  * A sink's version tables keep their files under the sink's own base dir
-  * (`<baseDir>/tables/<name>`), next to its cursor, and the session catalog
-  * only indexes them: [[resolve]] re-registers a version a new process has
-  * not seen yet, so a restarted sink resumes from its committed cursor.
+  * A sink version is one directory under the sink's own base dir, next to
+  * its cursor log, and nothing else — no session-catalog table:
+  *
+  * {{{
+  *   <baseDir>/tables/<escaped key>/<kind>/<batchId>/
+  *     part-*_<bucket>.c000.snappy.parquet   one file per non-empty bucket
+  *     _schema.json                          the version's schema
+  * }}}
+  *
+  * The key is the version's cursor key, escaped as [[MetadataLog]] escapes
+  * it. The bucketing is the caller's, as it was at the write. The schema is
+  * written last, so it marks a finished version; the file index skips `_`
+  * names, so a read lists the data files and infers nothing — an empty
+  * version, which has no data file, reads back with its full schema.
   */
 object BucketedSnapshot {
 
-  /** Where a version table's files live, qualified: the catalog would
-    * resolve a relative location against the warehouse dir instead.
-    */
-  def path(spark: SparkSession, baseDir: String, table: String): Path =
-    qualified(spark, s"$baseDir/tables/$table")
+  private val SchemaFile = "_schema.json"
 
-  private def qualified(spark: SparkSession, dir: String): Path = {
-    val p = new Path(dir)
+  /** Where a version's files live, qualified. */
+  def path(spark: SparkSession, baseDir: String, key: String, kind: String, bid: Long): Path = {
+    val p = new Path(s"$baseDir/tables/${MetadataLog.escape(key)}/$kind/$bid")
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p)
   }
 
-  /** The name prefix of one sink's version tables: `graft_<kind>_` plus an
-    * MD5 of the QUALIFIED base dir and the module hash, so parallel sinks
-    * never collide and `tgt` and `/abs/path/tgt` name the same sink.
-    */
-  def tablePrefix(spark: SparkSession, kind: String, baseDir: String,
-      moduleHash: String): String = {
-    val h = MessageDigest.getInstance("MD5")
-      .digest(s"${qualified(spark, baseDir)}:$moduleHash".getBytes(StandardCharsets.UTF_8))
-      .take(5).map("%02x".format(_)).mkString
-    s"graft_${kind}_$h"
-  }
+  private def bucketSpec(buckets: Int): Option[BucketSpec] =
+    if (buckets > 0) Some(BucketSpec(buckets, Seq("pk"), Seq("pk"))) else None
 
-  /** Persist a version table under `baseDir`, bucketed+sorted by pk
-    * (`buckets` 0 = a plain table, for the rollup states).
+  /** Persist a version, bucketed+sorted by pk (`buckets` 0 = plain files,
+    * for the rollup states), replacing whatever the directory held.
     *
     * A bucketed write runs in [[writeTasks]] tasks, not one per bucket:
     * `coalesce` packs whole input partitions, so when `df` arrives
@@ -58,11 +61,17 @@ object BucketedSnapshot {
     * a bucketed snapshot does) each bucket still lands in one task and the
     * version keeps one file per bucket.
     */
-  def write(df: DataFrame, baseDir: String, table: String, buckets: Int): Unit = {
+  def write(df: DataFrame, baseDir: String, key: String, kind: String, bid: Long,
+      buckets: Int): Unit = {
+    val spark = df.sparkSession
+    val dir = path(spark, baseDir, key, kind, bid)
     val packed = if (buckets > 0) df.coalesce(writeTasks(df, buckets)) else df
-    val w = packed.write.mode(SaveMode.Overwrite).format("parquet")
-      .option("path", path(df.sparkSession, baseDir, table).toString)
-    (if (buckets > 0) w.bucketBy(buckets, "pk").sortBy("pk") else w).saveAsTable(table)
+    GraftSqlShim.ofRows(spark, InsertIntoHadoopFsRelationCommand(dir, Map.empty,
+      ifPartitionNotExists = false, Nil, bucketSpec(buckets), new ParquetFileFormat, Map.empty,
+      packed.queryExecution.analyzed, SaveMode.Overwrite, None, None, df.columns.toSeq))
+    val out = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .create(new Path(dir, SchemaFile), true)
+    try out.write(GraftSqlShim.asNullable(df.schema).json.getBytes(UTF_8)) finally out.close()
   }
 
   /** Tasks for a bucketed write: the partitions Spark packs a file scan of
@@ -86,38 +95,36 @@ object BucketedSnapshot {
     }
   }
 
-  /** A version table, or None when neither the session's catalog nor
-    * `baseDir` holds it. On a catalog miss the table is re-registered over
-    * its directory with the bucketing it was written with — the column list
-    * is spelled out because Spark rejects bucketing without one.
+  /** Whether a finished version is on disk (its schema file is). */
+  def exists(spark: SparkSession, baseDir: String, key: String, kind: String, bid: Long): Boolean = {
+    val schema = new Path(path(spark, baseDir, key, kind, bid), SchemaFile)
+    schema.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(schema)
+  }
+
+  /** A version read back with its stored schema and the given bucketing,
+    * or None when it is not on disk. Driver-side listing only: no Spark job.
     */
-  def resolve(spark: SparkSession, baseDir: String, table: String,
+  def resolve(spark: SparkSession, baseDir: String, key: String, kind: String, bid: Long,
       buckets: Int): Option[DataFrame] = {
-    if (!spark.catalog.tableExists(table)) {
-      val dir = path(spark, baseDir, table)
-      if (!dir.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(dir))
-        return None
-      val ddl = spark.read.parquet(dir.toString).schema.toDDL
-      val bucketing =
-        if (buckets > 0) s" CLUSTERED BY (pk) SORTED BY (pk) INTO $buckets BUCKETS" else ""
-      spark.sql(s"CREATE TABLE IF NOT EXISTS $table ($ddl) USING parquet$bucketing " +
-        s"LOCATION '${dir.toString.replace("'", "\\'")}'")
+    val dir = path(spark, baseDir, key, kind, bid)
+    val schema = try {
+      val in = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .open(new Path(dir, SchemaFile))
+      try Some(DataType.fromJson(new String(in.readAllBytes(), UTF_8)).asInstanceOf[StructType])
+      finally in.close()
+    } catch { case _: FileNotFoundException => None }
+    schema.map { s =>
+      val files = new InMemoryFileIndex(spark, Seq(dir), Map.empty, None)
+      GraftSqlShim.ofRows(spark, LogicalRelation(HadoopFsRelation(files, new StructType(), s,
+        bucketSpec(buckets), new ParquetFileFormat, Map.empty)(spark)))
     }
-    Some(spark.table(table))
   }
 
   /** A version a cursor points at: [[resolve]], failing loudly when its
     * files are gone.
     */
-  def committed(spark: SparkSession, baseDir: String, table: String,
+  def committed(spark: SparkSession, baseDir: String, key: String, kind: String, bid: Long,
       buckets: Int): DataFrame =
-    resolve(spark, baseDir, table, buckets).getOrElse(throw new IllegalStateException(
-      s"committed version $table is missing from ${path(spark, baseDir, table)}"))
-
-  /** Apply a collapsed batch against a bucketed snapshot; the resulting
-    * plan shuffles only the batch side.
-    */
-  def applyToTable(spark: SparkSession, baseDir: String, table: String, buckets: Int,
-      collapsed: DataFrame, fieldCols: Seq[String]): DataFrame =
-    ChangeLoader.applyBatch(committed(spark, baseDir, table, buckets), collapsed, fieldCols)
+    resolve(spark, baseDir, key, kind, bid, buckets).getOrElse(throw new IllegalStateException(
+      s"committed version $kind $bid of $key is missing from ${path(spark, baseDir, key, kind, bid)}"))
 }

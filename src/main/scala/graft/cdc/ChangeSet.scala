@@ -1,45 +1,10 @@
 package graft.cdc
 
-/** The change-stream data model, mirroring the reference's protobuf input
-  * (`/root/reference/pb/substreams/sink/database/v1/database.pb.go`):
-  * a block-scoped set of per-table, per-pk field changes.
+/** The op names of a change row, as the reference's protobuf input
+  * (`pb/substreams/sink/database/v1/database.pb.go`) spells them.
   */
 object Op {
   val Insert = "INSERT"
   val Update = "UPDATE"
   val Delete = "DELETE"
 }
-
-/** One field changed to a new (string-encoded) value. */
-final case class FieldChange(name: String, newValue: String)
-
-/** One row-level change at `block` (reference TableChange). */
-final case class TableChange(
-    block: Long,
-    table: String,
-    pk: String,
-    op: String,
-    fields: Map[String, String]
-)
-
-/** The collapsed pending operation for one (table, pk) after in-batch merge
-  * (reference `db/operations.go Operation`).
-  */
-final case class PendingOp(
-    table: String,
-    pk: String,
-    op: String,
-    fields: Map[String, String],
-    lastBlock: Long
-)
-
-/** A violation of the reference's loader rules, surfaced as data instead of
-  * aborting the whole ingest (`db/ops.go` returns errors; at 100 TB scale a
-  * side-channel of rejects is the operable equivalent).
-  */
-final case class ChangeViolation(
-    table: String,
-    pk: String,
-    block: Long,
-    rule: String
-)

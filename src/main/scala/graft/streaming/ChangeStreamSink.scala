@@ -6,49 +6,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-/** SURVEY §2.1 #8 — the reference's sink loop (`sinker/sinker.go:96-190` +
-  * `db/flush.go`) as a Structured Streaming `foreachBatch` sink.
-  *
-  * Per micro-batch (the flush unit — the reference flushes every N blocks;
-  * here the trigger interval plays that role):
-  *
-  *   0. if the cursor store already has (moduleHash, batchId) committed,
-  *      return — a replayed batch's snapshot + cursor are already durable,
-  *      so recovery is a true no-op (never recompute, never touch a path a
-  *      concurrent plan might be reading),
-  *   1. collapse the batch's changes per pk ([[ChangeLoader.collapse]] — the
-  *      reference's in-batch op merge),
-  *   2. read the prior snapshot, apply the collapsed ops
-  *      ([[ChangeLoader.applyBatch]]), write the next snapshot version
-  *      (a NEW pk-bucketed table per batchId — never overwriting a version
-  *      being read),
-  *   3. record the flush's [[SinkStats]] entry (a replay overwrites it),
-  *   4. commit the cursor keyed by batchId: one JSON file renamed into
-  *      place ([[CursorStore.commit]] is a no-op on replay).
-  *
-  * Steps 2+4 give the reference's "ops + cursor in one transaction"
-  * exactly-once guarantee under micro-batch replay.
-  *
-  * Per-flush shape (a live one-block flush runs ≤ 6 Spark jobs):
-  *
-  *   - one head shuffle per micro-batch: `groupBy(_unit)` of (max block,
-  *     min block, count) gives the units and each unit's [[FlushStat]];
-  *   - one delta exchange per micro-batch: the batch is cached
-  *     hash-partitioned by pk into `buckets` partitions, and each unit's
-  *     collapse window, its delete aggregate and the apply join's delta
-  *     side read it without shuffling again. Snapshot
-  *     versions are pk-bucketed+sorted tables ([[BucketedSnapshot]]), so the
-  *     snapshot side arrives pre-partitioned and never shuffles — per-flush
-  *     network is O(batch), not O(snapshot), the lake equivalent of the
-  *     reference target's ORDER BY pk MergeTree merge;
-  *   - a one-wave rewrite: [[BucketedSnapshot.write]] packs the bucket
-  *     partitions into as many tasks as a file scan of that size would get,
-  *     one file per bucket. (The snapshot files are still rewritten each
-  *     flush; bounding that needs a compacting format's merge-on-read.)
-  *
-  * The live counters ([[LiveSinkStats]]) carry per-phase time: head,
-  * write (collapse+apply+write), stats and commit.
-  */
 /** The reference's flush cadence (`sinker/sinker.go:20-21,180-194`):
   * historical blocks flush every `HISTORICAL_BLOCK_FLUSH_EACH` (1000),
   * blocks at the live edge (≥ `headBlock`) flush EVERY block, and a
@@ -86,7 +43,7 @@ object FlushPolicy {
   * as eagerly as a burst of huge ones; a byte threshold makes compaction
   * track the actual read amplification.
   * Byte totals come from filesystem metadata (a driver-side listing of the
-  * delta tables' files — no Spark job, no data read).
+  * delta versions' data files — no Spark job, no data read).
   */
 final case class CompactionPolicy(
     maxDeltas: Int = Int.MaxValue,
@@ -98,6 +55,49 @@ final case class CompactionPolicy(
     "unbounded CompactionPolicy would never compact")
 }
 
+/** SURVEY §2.1 #8 — the reference's sink loop (`sinker/sinker.go:96-190` +
+  * `db/flush.go`) as a Structured Streaming `foreachBatch` sink.
+  *
+  * Per micro-batch (the flush unit — the reference flushes every N blocks;
+  * here the trigger interval plays that role):
+  *
+  *   0. if the cursor store already has (moduleHash, batchId) committed,
+  *      return — a replayed batch's snapshot + cursor are already durable,
+  *      so recovery is a true no-op (never recompute, never touch a path a
+  *      concurrent plan might be reading),
+  *   1. collapse the batch's changes per pk ([[ChangeLoader.collapse]] — the
+  *      reference's in-batch op merge),
+  *   2. read the prior snapshot, apply the collapsed ops
+  *      ([[ChangeLoader.applyBatch]]), write the next snapshot version
+  *      (a NEW pk-bucketed directory per batchId — never overwriting a
+  *      version being read),
+  *   3. record the flush's [[SinkStats]] entry (a replay overwrites it),
+  *   4. commit the cursor keyed by batchId: one JSON file renamed into
+  *      place ([[CursorStore.commit]] is a no-op on replay).
+  *
+  * Steps 2+4 give the reference's "ops + cursor in one transaction"
+  * exactly-once guarantee under micro-batch replay.
+  *
+  * Per-flush shape (a live one-block flush runs ≤ 6 Spark jobs):
+  *
+  *   - one head shuffle per micro-batch: `groupBy(_unit)` of (max block,
+  *     min block, count) gives the units and each unit's [[FlushStat]];
+  *   - one delta exchange per micro-batch: the batch is cached
+  *     hash-partitioned by pk into `buckets` partitions, and each unit's
+  *     collapse window, its delete aggregate and the apply join's delta
+  *     side read it without shuffling again. Snapshot versions are
+  *     pk-bucketed+sorted directories ([[BucketedSnapshot]]), so the
+  *     snapshot side arrives pre-partitioned and never shuffles — per-flush
+  *     network is O(batch), not O(snapshot), the lake equivalent of the
+  *     reference target's ORDER BY pk MergeTree merge;
+  *   - a one-wave rewrite: [[BucketedSnapshot.write]] packs the bucket
+  *     partitions into as many tasks as a file scan of that size would get,
+  *     one file per bucket. (The snapshot files are still rewritten each
+  *     flush; bounding that needs a compacting format's merge-on-read.)
+  *
+  * The live counters ([[LiveSinkStats]]) carry per-phase time: head,
+  * write (collapse+apply+write), stats and commit.
+  */
 final class ChangeStreamSink(
     baseDir: String,
     moduleHash: String,
@@ -121,14 +121,26 @@ final class ChangeStreamSink(
       */
     mv: Option[graft.cdc.MaterializedAgg.MvDef] = None
 ) {
-  /** Snapshot versions are catalog tables (bucketing metadata lives in the
-    * catalog) whose files live under `baseDir` ([[BucketedSnapshot.resolve]]);
-    * the name is namespaced by (qualified baseDir, moduleHash) so parallel
-    * sinks never collide ([[BucketedSnapshot.tablePrefix]]).
+  /** Each version is a directory under `baseDir`, keyed by this sink's
+    * cursor key (`moduleHash`) and a kind: `snap` (a full snapshot),
+    * `delta` (a merge-on-read collapsed batch) or `mv` (a rollup state, not
+    * bucketed) — see [[BucketedSnapshot]]. Paths are qualified, so `tgt`
+    * and `/abs/path/tgt` are one sink.
     */
-  private lazy val tablePrefix =
-    BucketedSnapshot.tablePrefix(SparkSession.active, "snap", baseDir, moduleHash)
-  private[graft] def snapTable(batchId: Long) = s"${tablePrefix}_v$batchId"
+  private def bucketsOf(kind: String) = if (kind == "mv") 0 else buckets
+
+  private def write(df: DataFrame, kind: String, bid: Long): Unit =
+    BucketedSnapshot.write(df, baseDir, moduleHash, kind, bid, bucketsOf(kind))
+
+  private def version(spark: SparkSession, kind: String, bid: Long): DataFrame =
+    BucketedSnapshot.committed(spark, baseDir, moduleHash, kind, bid, bucketsOf(kind))
+
+  /** A rollup state version, when that batch wrote one. */
+  private def mvVersion(spark: SparkSession, batchId: Long): Option[DataFrame] =
+    BucketedSnapshot.resolve(spark, baseDir, moduleHash, "mv", batchId, buckets = 0)
+
+  private def isDelta(spark: SparkSession, batchId: Long): Boolean =
+    BucketedSnapshot.exists(spark, baseDir, moduleHash, "delta", batchId)
 
   /** The last flush's apply join, kept unplanned (spec hook). */
   @volatile private[graft] var lastApply: Option[DataFrame] = None
@@ -138,32 +150,6 @@ final class ChangeStreamSink(
     */
   private[graft] def lastApplyAudit: Option[PlanAudit.Audit] =
     lastApply.map(df => PlanAudit.audit(df.queryExecution.executedPlan))
-
-  private def deltaTable(batchId: Long) = s"${tablePrefix}_d$batchId"
-
-  private[graft] def mvTable(batchId: Long) = s"${tablePrefix}_m$batchId"
-
-  /** A rollup state version (not bucketed). */
-  private def mvVersion(spark: SparkSession, batchId: Long): Option[DataFrame] =
-    BucketedSnapshot.resolve(spark, baseDir, mvTable(batchId), buckets = 0)
-
-  private def committedVersion(spark: SparkSession, table: String): DataFrame =
-    BucketedSnapshot.committed(spark, baseDir, table, buckets)
-
-  private def isDelta(spark: SparkSession, batchId: Long): Boolean =
-    BucketedSnapshot.resolve(spark, baseDir, deltaTable(batchId), buckets).isDefined
-
-  /** On-disk bytes of a version table — a recursive file listing of its
-    * directory (driver-side metadata only; no job, no footer reads).
-    */
-  private def tableBytes(spark: SparkSession, table: String): Long = {
-    val path = BucketedSnapshot.path(spark, baseDir, table)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(path, true)
-    var sum = 0L
-    while (it.hasNext) sum += it.next().getLen
-    sum
-  }
 
   /** The newest committed snapshot (resolved through the cursor store).
     * With merge-on-read, pending deltas since the last materialized base
@@ -189,18 +175,18 @@ final class ChangeStreamSink(
     * in oldest-first.
     */
   private def snapshotAt(spark: SparkSession, store: CursorStore, bid: Long): DataFrame =
-    if (!isDelta(spark, bid)) committedVersion(spark, snapTable(bid))
+    if (!isDelta(spark, bid)) version(spark, "snap", bid)
     else {
       val bids = store.allBatches(moduleHash).filter(_ <= bid).sorted.reverse
       val (deltas, rest) = bids.span(isDelta(spark, _))
-      val base = rest.headOption.map(b => committedVersion(spark, snapTable(b))).getOrElse {
-        val schema = committedVersion(spark, deltaTable(deltas.last))
+      val base = rest.headOption.map(version(spark, "snap", _)).getOrElse {
+        val schema = version(spark, "delta", deltas.last)
           .drop("last_block", "deleted", "revived").schema
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
       }
       deltas.reverse.foldLeft(base) { (snap, b) =>
-        ChangeLoader.applyBatch(snap, committedVersion(spark, deltaTable(b)), fieldCols)
+        ChangeLoader.applyBatch(snap, version(spark, "delta", b), fieldCols)
       }
     }
 
@@ -281,7 +267,8 @@ final class ChangeStreamSink(
     val materialize = compaction.forall { cp =>
       pendingBids.size >= cp.maxDeltas ||
         (cp.maxDeltaBytes != Long.MaxValue &&
-          pendingBids.map(b => tableBytes(spark, deltaTable(b))).sum >= cp.maxDeltaBytes)
+          pendingBids.map(version(spark, "delta", _).queryExecution.analyzed.stats.sizeInBytes)
+            .sum >= cp.maxDeltaBytes)
     }
     val tFlush = System.currentTimeMillis()
     val current = committed.headOption
@@ -295,12 +282,12 @@ final class ChangeStreamSink(
       val next = ChangeLoader.applyBatch(prior, collapsed, fieldCols)
       // the write binds `next` to the cached batch (its withCachedData), so
       // a later audit still sees what this flush read
-      BucketedSnapshot.write(next, baseDir, snapTable(bid), buckets)
+      write(next, "snap", bid)
       lastApply = Some(next)
     } else {
       // merge-on-read delta flush: write ONLY the collapsed batch —
       // O(delta) disk, the MergeTree-style write path; readers fold it in
-      BucketedSnapshot.write(collapsed, baseDir, deltaTable(bid), buckets)
+      write(collapsed, "delta", bid)
     }
     // incremental rollup: delta-merge from ONLY the batch's pks (prior rows
     // via a pk semi-join on the bucketed snapshot), versioned under this
@@ -312,8 +299,7 @@ final class ChangeStreamSink(
       val touched = collapsed.select("pk")
       val priorTouched = prior.join(touched, Seq("pk"), "left_semi")
       val newTouched = ChangeLoader.applyBatch(priorTouched, collapsed, fieldCols)
-      BucketedSnapshot.write(graft.cdc.MaterializedAgg.merge(priorAgg, priorTouched, newTouched, d),
-        baseDir, mvTable(bid), buckets = 0)
+      write(graft.cdc.MaterializedAgg.merge(priorAgg, priorTouched, newTouched, d), "mv", bid)
     }
     // the stats entry lands before the cursor: a crash in between leaves an
     // entry that the replay of this batchId overwrites, never a second one
@@ -357,13 +343,11 @@ final class ChangeStreamSink(
     // re-commit the old snapshot under the new batch id so the cursor log
     // stays append-only and resolves (by commit order) to the rolled-back
     // state (snapshotAt materializes even if toBatchId was a delta version)
-    BucketedSnapshot.write(snapshotAt(spark, store, toBatchId), baseDir, snapTable(newBatchId),
-      buckets)
+    write(snapshotAt(spark, store, toBatchId), "snap", newBatchId)
     // the rollup rolls back with the snapshot: re-expose the old version's
     // agg state under the new batchId (every mv flush wrote one)
     mv.foreach { _ =>
-      mvVersion(spark, toBatchId).foreach(
-        BucketedSnapshot.write(_, baseDir, mvTable(newBatchId), buckets = 0))
+      mvVersion(spark, toBatchId).foreach(write(_, "mv", newBatchId))
     }
     store.commit(Cursor(moduleHash, s"cursor:rollback:${rolled.blockNum}",
       rolled.blockNum, rolled.blockId), newBatchId)

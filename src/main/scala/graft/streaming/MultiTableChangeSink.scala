@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.StructType
   *
   *   - the batch routes per table ([[MultiTable.forTable]]), collapses and
   *     applies per table, writing each table's next snapshot as a NEW
-  *     pk-bucketed version keyed by batchId;
+  *     pk-bucketed version directory keyed by batchId;
   *   - per-table cursors (`moduleHash#table`) track each table's newest
   *     version, so tables untouched by a batch are skipped (no rewrite);
   *   - the MODULE cursor commits LAST — it is the transaction's commit
@@ -32,18 +32,14 @@ final class MultiTableChangeSink(
     buckets: Int = 8
 ) {
 
-  private lazy val prefix =
-    BucketedSnapshot.tablePrefix(SparkSession.active, "mt", baseDir, moduleHash)
-  private[graft] def snapTable(table: String, batchId: Long) =
-    s"${prefix}_${table}_v$batchId"
-
   private def tableCursorKey(table: String) = s"$moduleHash#$table"
 
-  /** A committed table version; its files live under `baseDir`
-    * ([[BucketedSnapshot.resolve]]), so a new process finds it too.
+  /** A committed table version: the `snap` directory under `baseDir` keyed
+    * by the table's cursor key ([[BucketedSnapshot]]), so a new process
+    * finds it too.
     */
   private def version(spark: SparkSession, table: String, batchId: Long): DataFrame =
-    BucketedSnapshot.committed(spark, baseDir, snapTable(table, batchId), buckets)
+    BucketedSnapshot.committed(spark, baseDir, tableCursorKey(table), "snap", batchId, buckets)
 
   /** Each table's newest snapshot AS OF the module cursor — per-table
     * commits from a partially-flushed (crashed) batch stay invisible until
@@ -94,7 +90,7 @@ final class MultiTableChangeSink(
                 collapsed.drop("last_block", "deleted", "revived").schema)
           }
           val next = ChangeLoader.applyBatch(prior, collapsed, fields)
-          BucketedSnapshot.write(next, baseDir, snapTable(t, batchId), buckets)
+          BucketedSnapshot.write(next, baseDir, tableCursorKey(t), "snap", batchId, buckets)
           val mx = h.getLong(1)
           store.commit(Cursor(tableCursorKey(t), s"cursor:$mx", mx, s"block:$mx"), batchId)
         }

@@ -28,8 +28,9 @@ class BucketedSnapshotSpec extends SparkSpecBase {
 
       // Bucketed storage: the snapshot scan satisfies the join distribution.
       val dir = java.nio.file.Files.createTempDirectory("snap_bucketed").toString
-      BucketedSnapshot.write(snapshot, dir, "snap_bucketed", buckets = 8)
-      val bucketed = BucketedSnapshot.applyToTable(spark, dir, "snap_bucketed", 8, delta, fields)
+      BucketedSnapshot.write(snapshot, dir, "snap_bucketed", "snap", 0, buckets = 8)
+      val bucketed = ChangeLoader.applyBatch(
+        BucketedSnapshot.committed(spark, dir, "snap_bucketed", "snap", 0, 8), delta, fields)
       bucketed.count()
       val bucketedAudit = PlanAudit.audit(bucketed.queryExecution.executedPlan)
 
@@ -39,7 +40,6 @@ class BucketedSnapshotSpec extends SparkSpecBase {
       assert(bucketed.collect().map(_.toSeq).toSet == flat.collect().map(_.toSeq).toSet)
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      spark.sql("DROP TABLE IF EXISTS snap_bucketed")
     }
   }
 }

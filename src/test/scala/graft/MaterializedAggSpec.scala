@@ -129,10 +129,11 @@ class MaterializedAggSpec extends SparkSpecBase {
     val dir = Files.createTempDirectory("mv_crash").toString
     val sink = new ChangeStreamSink(dir, "mod_mvc", fields, mv = Some(mv))
     sink.processBatch(batch((1L, 1L, "INSERT", Some(1.00), None, Some("A"))), 0)
-    // simulate a crash AFTER batch 1's mv table landed but BEFORE its cursor
-    // committed: an orphan version with garbage content
-    Seq(("GARBAGE", 99L, 99L, BigDecimal(9.99))).toDF("grp", "n_rows", "n_vals", "total")
-      .write.mode("overwrite").saveAsTable(sink.mvTable(1))
+    // simulate a crash AFTER batch 1's mv version landed but BEFORE its
+    // cursor committed: an orphan version with garbage content
+    graft.cdc.BucketedSnapshot.write(
+      Seq(("GARBAGE", 99L, 99L, BigDecimal(9.99))).toDF("grp", "n_rows", "n_vals", "total"),
+      dir, "mod_mvc", "mv", 1, buckets = 0)
     // the re-delivered micro-batch must overwrite the orphan, not skip it
     sink.processBatch(batch((2L, 2L, "INSERT", Some(2.00), None, Some("A"))), 1)
     assertMvMatches(sink)

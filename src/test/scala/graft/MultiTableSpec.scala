@@ -113,7 +113,7 @@ class MultiTableSpec extends SparkSpecBase {
     val store = new CursorStore(s"$dir/cursor", spark)
     BucketedSnapshot.write(
       sink.latestSnapshots(spark)("accounts").limit(1), // wrong contents on purpose
-      dir, sink.snapTable("accounts", 1), buckets = 8)
+      dir, "mod_crash#accounts", "snap", 1, buckets = 8)
     store.commit(Cursor("mod_crash#accounts", "cursor:999", 999, "block:999"), 1)
 
     // Reader view still resolves to batch 0 (module cursor is the txn point).
@@ -141,13 +141,10 @@ class MultiTableSpec extends SparkSpecBase {
     // batch 2 half-flushed: accounts' version + table cursor, no module cursor
     BucketedSnapshot.write(
       first.latestSnapshots(spark)("accounts").limit(1), // wrong contents on purpose
-      dir, first.snapTable("accounts", 2), buckets = 8)
+      dir, "mod_mt_res#accounts", "snap", 2, buckets = 8)
     new CursorStore(s"$dir/cursor", spark)
       .commit(Cursor("mod_mt_res#accounts", "cursor:999", 999, "block:999"), 2)
-    // a new process: the session catalog has never seen this sink's tables
-    val prefix = first.snapTable("accounts", 0).stripSuffix("_accounts_v0")
-    spark.catalog.listTables().collect().map(_.name).filter(_.startsWith(prefix))
-      .foreach(t => spark.sql(s"DROP TABLE $t"))
+    // a new process: only baseDir carries the versions
     val resumed = new MultiTableChangeSink(dir, "mod_mt_res", schemas)
     assert(state(resumed.latestSnapshots(spark)) == at1)
     resumed.processBatch(wire.filter(col("block") > 700), 2) // the replay

@@ -1,6 +1,6 @@
 package graft
 
-import graft.cdc.{ChangeLoader, CursorStore}
+import graft.cdc.{BucketedSnapshot, ChangeLoader, CursorStore}
 import graft.sources.Changes
 import graft.streaming.{ChangeRow, ChangeStreamSink, CompactionPolicy, FlushPolicy, StatefulMerge, StreamOps}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -108,8 +108,8 @@ class StreamingSpec extends SparkSpecBase {
       val sink = new ChangeStreamSink(dir, "mod_k", fields)
       sink.processBatch(b0, 0)
       val at0 = state(sink.latestSnapshot(spark).get)
-      graft.cdc.BucketedSnapshot.write(sink.latestSnapshot(spark).get.limit(1), // wrong on purpose
-        dir, sink.snapTable(1), buckets = 8)
+      BucketedSnapshot.write(sink.latestSnapshot(spark).get.limit(1), // wrong on purpose
+        dir, "mod_k", "snap", 1, buckets = 8)
       if (n >= 1) new graft.streaming.SinkStats(s"$dir/stats", spark).record(
         graft.streaming.FlushStat("mod_k", 1, 999999, 0, 1, 1, 1))
       if (n >= 2) Files.write(java.nio.file.Paths.get(s"$dir/cursor",
@@ -149,12 +149,9 @@ class StreamingSpec extends SparkSpecBase {
       first.processBatch(batches(0), 0)
       first.processBatch(batches(1), 1)
       // batch 2's snapshot landed, its cursor did not
-      graft.cdc.BucketedSnapshot.write(first.latestSnapshot(spark).get.limit(1), // wrong on purpose
-        dir, first.snapTable(2), buckets = 8)
-      // a new process: the session catalog has never seen this sink's tables
-      val prefix = first.snapTable(0).stripSuffix("_v0")
-      spark.catalog.listTables().collect().map(_.name).filter(_.startsWith(prefix))
-        .foreach(t => spark.sql(s"DROP TABLE $t"))
+      BucketedSnapshot.write(first.latestSnapshot(spark).get.limit(1), // wrong on purpose
+        dir, "mod_res", "snap", 2, buckets = 8)
+      // a new process: only baseDir carries the versions
       val resumed = sink()
       assert(state(resumed.latestSnapshot(spark).get) == oneShot(700), s"$compaction")
       resumed.processBatch(batches(2), 2) // the replay of batch 2
@@ -294,11 +291,12 @@ class StreamingSpec extends SparkSpecBase {
     val bids = new CursorStore(s"$dir/cursor", spark).allBatches("mod_files")
     assert(bids.size >= 3, s"versions $bids")
     bids.foreach { bid =>
-      val t = sink.snapTable(bid)
-      val files = new java.io.File(graft.cdc.BucketedSnapshot.path(spark, dir, t).toUri)
+      val t = BucketedSnapshot.path(spark, dir, "mod_files", "snap", bid)
+      val files = new java.io.File(t.toUri)
         .listFiles().map(_.getName).filter(_.startsWith("part-")).toSeq
       val fileBuckets = files.map(f => BucketingUtils.getBucketId(f).get)
-      val rowBuckets = spark.table(t).select(pmod(hash(col("pk")), lit(8))).distinct()
+      val rowBuckets = BucketedSnapshot.committed(spark, dir, "mod_files", "snap", bid, 8)
+        .select(pmod(hash(col("pk")), lit(8))).distinct()
         .collect().map(_.getInt(0)).toSet
       assert(fileBuckets.size == fileBuckets.toSet.size && fileBuckets.toSet == rowBuckets,
         s"$t: files $files for buckets $rowBuckets")
@@ -318,12 +316,10 @@ class StreamingSpec extends SparkSpecBase {
     val viaRel = new ChangeStreamSink(rel, "mod_rel", fields)
     viaRel.processBatch(ch.filter(col("block") <= 500), 0)
     val at0 = viaRel.latestSnapshot(spark).get.collect().map(_.toSeq).toSet
-    // a new process: the session catalog has never seen the versions
-    val prefix = viaRel.snapTable(0).stripSuffix("_v0")
-    spark.catalog.listTables().collect().map(_.name).filter(_.startsWith(prefix))
-      .foreach(t => spark.sql(s"DROP TABLE $t"))
+    // a new process: only the sink dir carries the versions
     val viaAbs = new ChangeStreamSink(abs.toString, "mod_rel", fields)
-    assert(viaAbs.snapTable(0) == viaRel.snapTable(0))
+    assert(BucketedSnapshot.path(spark, abs.toString, "mod_rel", "snap", 0) ==
+      BucketedSnapshot.path(spark, rel, "mod_rel", "snap", 0))
     assert(viaAbs.latestSnapshot(spark).get.collect().map(_.toSeq).toSet == at0)
     viaAbs.processBatch(ch.filter(col("block") > 500), 1)
     val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -378,16 +374,16 @@ class StreamingSpec extends SparkSpecBase {
     for (i <- 0 until 4)
       sink.processBatch(ch.filter(col("block") > cuts(i) && col("block") <= cuts(i + 1)), i.toLong)
     // batches 0,1 are deltas; batch 2 compacts; batch 3 is a delta again
-    def exists(t: String) = spark.catalog.tableExists(t)
-    val deltaNames = (0 to 3).map(i => sink.snapTable(i.toLong).replace(s"_v$i", s"_d$i"))
-    val baseNames = (0 to 3).map(i => sink.snapTable(i.toLong))
+    def exists(v: (String, Long)) = BucketedSnapshot.exists(spark, dir, "mod_mor", v._1, v._2)
+    val deltaNames = (0 to 3).map(i => ("delta", i.toLong))
+    val baseNames = (0 to 3).map(i => ("snap", i.toLong))
     assert(exists(deltaNames(0)) && exists(deltaNames(1)) && exists(deltaNames(3)),
       "batches 0,1,3 must be delta flushes")
     assert(exists(baseNames(2)) && !exists(deltaNames(2)), "batch 2 must compact")
     assert(!exists(baseNames(0)) && !exists(baseNames(1)) && !exists(baseNames(3)))
     // a delta table is O(batch): exactly one row per pk touched by the
     // batch, regardless of snapshot size
-    val deltaRows = spark.table(deltaNames(3)).count()
+    val deltaRows = BucketedSnapshot.committed(spark, dir, "mod_mor", "delta", 3, 8).count()
     val batchPks = ch.filter(col("block") > 750)
       .select("pk").distinct().count()
     assert(deltaRows == batchPks, s"delta $deltaRows != batch pks $batchPks")
@@ -413,20 +409,23 @@ class StreamingSpec extends SparkSpecBase {
       (i * 100L + k, (k % 25).toLong, "INSERT",
         Some(k * 1.0), Some(k.toLong), Some("x" * 20))
     }.toDF("block", "pk", "op", "amount", "kval", "note")
-    def bytesOf(dir: String, table: String): Long = {
-      val p = java.nio.file.Paths.get(graft.cdc.BucketedSnapshot.path(spark, dir, table).toUri)
+    // a version named by (sink dir, module hash, kind, batchId)
+    type Version = (String, String, String, Long)
+    def bytesOf(v: Version): Long = {
+      val p = java.nio.file.Paths.get(BucketedSnapshot.path(spark, v._1, v._2, v._3, v._4).toUri)
       java.nio.file.Files.walk(p).filter(java.nio.file.Files.isRegularFile(_))
         .mapToLong(java.nio.file.Files.size(_)).sum()
     }
-    def deltaName(s: ChangeStreamSink, i: Int) =
-      s.snapTable(i.toLong).replace(s"_v$i", s"_d$i")
+    def deltaName(dir: String, mod: String, i: Int): Version = (dir, mod, "delta", i.toLong)
+    def snapName(dir: String, mod: String, i: Int): Version = (dir, mod, "snap", i.toLong)
     // probe one delta's size with a count-only policy that never trips
     val probeDir = Files.createTempDirectory("sink_szp").toString
     val probe = new ChangeStreamSink(probeDir, "mod_szp", fields,
       compaction = Some(CompactionPolicy(maxDeltas = 100)))
     probe.processBatch(batch(0), 0)
-    assert(spark.catalog.tableExists(deltaName(probe, 0)), "probe flush must be a delta")
-    val unit = bytesOf(probeDir, deltaName(probe, 0))
+    def exists(v: Version) = BucketedSnapshot.exists(spark, v._1, v._2, v._3, v._4)
+    assert(exists(deltaName(probeDir, "mod_szp", 0)), "probe flush must be a delta")
+    val unit = bytesOf(deltaName(probeDir, "mod_szp", 0))
     // threshold 2.5 units: flushes 0-2 stay deltas (0, 1, 2 units pending),
     // flush 3 sees ~3 units pending ≥ 2.5 → materializes
     val dir = Files.createTempDirectory("sink_sz").toString
@@ -434,18 +433,17 @@ class StreamingSpec extends SparkSpecBase {
       compaction = Some(CompactionPolicy(maxDeltas = 100,
         maxDeltaBytes = (2.5 * unit).toLong)))
     for (i <- 0 to 3) sink.processBatch(batch(i), i.toLong)
-    def exists(t: String) = spark.catalog.tableExists(t)
-    assert((0 to 2).forall(i => exists(deltaName(sink, i))),
+    assert((0 to 2).forall(i => exists(deltaName(dir, "mod_sz", i))),
       "flushes below the byte threshold must stay deltas")
-    assert(exists(sink.snapTable(3)) && !exists(deltaName(sink, 3)),
+    assert(exists(snapName(dir, "mod_sz", 3)) && !exists(deltaName(dir, "mod_sz", 3)),
       "crossing the byte threshold must materialize the base")
     // count bound still holds independently: maxDeltas=2 compacts 3rd flush
     val dir2 = Files.createTempDirectory("sink_szc").toString
     val sink2 = new ChangeStreamSink(dir2, "mod_szc", fields,
       compaction = Some(CompactionPolicy(maxDeltas = 2)))
     for (i <- 0 to 2) sink2.processBatch(batch(i), i.toLong)
-    assert(exists(deltaName(sink2, 0)) && exists(deltaName(sink2, 1)))
-    assert(exists(sink2.snapTable(2)), "maxDeltas bound must force compaction")
+    assert(exists(deltaName(dir2, "mod_szc", 0)) && exists(deltaName(dir2, "mod_szc", 1)))
+    assert(exists(snapName(dir2, "mod_szc", 2)), "maxDeltas bound must force compaction")
     // composed read stays correct across the policy-driven layout
     val all = (0 to 3).map(batch).reduce(_.unionAll(_))
     val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
